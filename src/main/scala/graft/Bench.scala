@@ -72,7 +72,10 @@ object Bench {
     // repeats the whole suite with suffixed keys (name#rep) so the JSON
     // never carries duplicate keys.
     val measurePasses = 2
+    // Why each failed query failed (its last failing pass), by result key.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = (1 to reps).flatMap { rep =>
+      def key(name: String) = if (reps == 1) name else s"$name#$rep"
       // Pass 1 runs the whole suite in name order, pass 2 in REVERSE
       // order: a time-correlated host-noise episode then lands on
       // different queries in each pass, so min-of-2 keeps at least one
@@ -88,7 +91,10 @@ object Bench {
           // -1 so failures are visible in the JSON.
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
+            catch { case e: Throwable =>
+              errors(key(name)) = s"${e.getClass.getName}: ${e.getMessage}"
+              false
+            }
           val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
           times(name) = times.getOrElse(name, Vector()) :+ t
         }
@@ -96,8 +102,7 @@ object Bench {
       selected.map { case (name, _) =>
         val passTimes = times(name)
         val good = passTimes.filter(_ >= 0)
-        val key = if (reps == 1) name else s"$name#$rep"
-        (key, if (good.isEmpty) -1.0 else good.min, passTimes)
+        (key(name), if (good.isEmpty) -1.0 else good.min, passTimes)
       }
     }
     // 0.1 ms resolution keeps the full line as small as possible (raw
@@ -131,10 +136,18 @@ object Bench {
     println(json)
     println(headline)
     // Also drop the bare JSON next to the repo root: sbt prefixes stdout
-    // with [info], which downstream line parsers can trip over.
+    // with [info], which downstream line parsers can trip over. The file
+    // alone carries `errors` (query -> "ExceptionClass: message"), so a
+    // -1 in `queries` comes with its reason.
+    def quote(v: String): String = "\"" + new String(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
+        .quoteAsString(v)) + "\""
+    val errorsJson = errors.map { case (k, e) => quote(k) + ":" + quote(e) }
+      .mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      json.getBytes("UTF-8"))
+      (json.stripSuffix("}") + ",\"errors\":" + errorsJson + "}")
+        .getBytes("UTF-8"))
     catch { case _: Throwable => }
     spark.stop()
   }

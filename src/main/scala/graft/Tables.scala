@@ -56,6 +56,15 @@ object Tables {
   def streamGlob(dir: String, table: String): String =
     s"$dir/$table.parque[t]"
 
+  /** The table as a file stream over [[streamGlob]]. FileStreamSource
+    * needs a user schema; it is taken from the memoized batch frame
+    * ([[load]]), so no drain pays its own footer read. Events go through
+    * [[graft.streaming.MicroBatchPipeline.eventsStream]], which also
+    * normalizes `ts`. */
+  def stream(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.readStream.schema(load(spark, dir, table).schema)
+      .parquet(streamGlob(dir, table))
+
   def region(s: SparkSession, dir: String): DataFrame     = load(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame     = load(s, dir, "nation")
   def customer(s: SparkSession, dir: String): DataFrame   = load(s, dir, "customer")

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale utilities: skew mitigation and session-extension installation.
+/** Scale utilities: skew mitigation.
   *
   * AQE's skew-join handling covers sort-merge joins, but a single hot
   * GROUP BY key still funnels into one reducer. `saltedSum` is the classic
@@ -31,55 +29,5 @@ object Scale {
       .groupBy(keyCols: _*)
       .agg(sum(col("__psum")).as(s"sum_$valueAlias"),
         sum(col("__pcnt")).as("n_rows"))
-  }
-}
-
-/** SparkSessionExtensions installer: makes the custom expressions
-  * available in every session built with
-  * `.withExtensions(new GraftSparkExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftSparkExtensions` — the
-  * deployment path for SQL-only users of the engine. */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(session =>
-      graft.plans.ApproxDistinctRewrite.forSession(session))
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[GraftExpressions.CosineSimilarity].getName,
-        "cosine_similarity"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[GraftExpressions.SimHash64].getName, "simhash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.SimHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("token_hashes64"),
-      new ExpressionInfo(classOf[GraftExpressions.TokenHashes64].getName,
-        "token_hashes64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.TokenHashes64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_token_hashes64"),
-      new ExpressionInfo(classOf[GraftExpressions.Md5TokenHashes64].getName,
-        "md5_token_hashes64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.Md5TokenHashes64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes64"),
-      new ExpressionInfo(classOf[GraftExpressions.ShingleHashes64].getName,
-        "shingle_hashes64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.ShingleHashes64(exprs.head,
-          exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_strings"),
-      new ExpressionInfo(classOf[GraftExpressions.ShingleStrings].getName,
-        "shingle_strings"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExpressions.ShingleStrings(exprs.head,
-          exprs(1).eval().asInstanceOf[Int])))
   }
 }

@@ -306,30 +306,13 @@ object Bpe {
     * is trained offline, the budget accounting keeps up with arrival
     * (pinned, including a forced two-batch split, in BpeSpec). */
   def streamBpeTokenStatsQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sbpe_out")
-    val ckpt = graft.TempDirs.scoped("graft_sbpe_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
     val merges = trainedMerges(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          tokenStatsOver(batch.toDF(), merges)
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sbpe") { batch =>
+      tokenStatsOver(batch, merges)
+    }.orderBy(col("doc_id"))
   }
 
   import QuerySpec.{rowsOnly, withOracle}

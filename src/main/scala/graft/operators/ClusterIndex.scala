@@ -782,12 +782,9 @@ object ClusterIndex {
     * overwrite-slice replay pattern of StreamingDedup.appendBatch does
     * not compose with delta slices that later ops build on). */
   def streamClusterAppendQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val state = graft.StateCache.stateDir(dir, "clusters/stream2",
         "graft_sclappend_state") { state =>
       val landing = graft.TempDirs.scoped("graft_sclappend_landing")
-      val ckpt = graft.TempDirs.scoped("graft_sclappend_ckpt")
       val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
@@ -799,17 +796,10 @@ object ClusterIndex {
         .coalesce(1).write.mode("append").parquet(landing)
       emb.filter(col("vec_id") > cut)
         .coalesce(1).write.mode("append").parquet(landing)
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        spark.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(landing)
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: Dataset[Row], _: Long) =>
-            appendBatch(b.toDF(), state, geo); ()
-          }
-          .start().awaitTermination()
+      val files = spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(landing)
+      MicroBatchPipeline.drain(files, "sclappend") { (b, _) =>
+        appendBatch(b, state, geo)
       }
       // the claim is streaming MAINTENANCE: if the source ever coalesced
       // the files into one batch, this would silently degrade to a single

@@ -677,10 +677,6 @@ object Curation {
     * boundaries cannot change the result — the single-drain output equals
     * the batch [[bloomDecontaminate]], which is what the oracle replays. */
   def streamDecontaminateQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sdecon_out")
-    val ckpt = graft.TempDirs.scoped("graft_sdecon_ckpt")
     val staticDocs = Tables.documents(spark, dir)
     // The frozen eval fingerprint set builds once per corpus per JVM
     // (StateCache — the scorer-counts convention); the bloom sketch is
@@ -694,30 +690,18 @@ object Curation {
     }
     val evalFps = spark.read.parquet(s"$evalDir/fps")
     val sketch = buildSketch(evalFps)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val b = fingerprints(batch.toDF())
-          val confirmed = candidatesFrom(b, sketch)
-            .join(evalFps, Seq("fp"), "left_semi")
-            .select(col("doc_id"))
-          b.filter(!col("is_eval"))
-            .join(broadcast(confirmed), Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("fp"))
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sdecon") { batch =>
+      val b = fingerprints(batch)
+      val confirmed = candidatesFrom(b, sketch)
+        .join(evalFps, Seq("fp"), "left_semi")
+        .select(col("doc_id"))
+      b.filter(!col("is_eval"))
+        .join(broadcast(confirmed), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("fp"))
+    }.orderBy(col("doc_id"))
   }
 
   /** The composed trainer-input flagship: decontaminate (bloom-prefilter

@@ -818,10 +818,6 @@ object Dedup {
     * batch-boundary invariant, so the twin carries
     * text_winnow_decontaminate's oracle text VERBATIM. */
   def streamWinnowDeconQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_swdecon_out")
-    val ckpt = graft.TempDirs.scoped("graft_swdecon_ckpt")
     val staticDocs = Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     // The two frozen artifacts — the boilerplate droplist (df over cap)
@@ -852,29 +848,17 @@ object Dedup {
     // inside foreachBatch the batch is a materialized RDD, so neither a
     // select nor a filter in the body can reach the parquet scan
     // (guide §2.3); on the stream they land in the source plan.
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .filter(!isEval)
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          winnowFp0(batch.toDF())
-            .join(boiler, Seq("fp"), "left_anti")
-            .join(evalFps, "fp")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_shared_fp"))
-            .filter(col("n_shared_fp") >= WinnowMinShared)
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "swdecon") { batch =>
+      winnowFp0(batch)
+        .join(boiler, Seq("fp"), "left_anti")
+        .join(evalFps, "fp")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_shared_fp"))
+        .filter(col("n_shared_fp") >= WinnowMinShared)
+    }.orderBy(col("doc_id"))
   }
 
   /** Winnowing-based DECONTAMINATION — the bounded-memory variant of

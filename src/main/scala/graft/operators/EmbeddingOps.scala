@@ -330,38 +330,21 @@ object EmbeddingOps {
     * drained output equals [[topKBinary]] row-for-row and the twin
     * carries sim_topk_binary's oracle text VERBATIM. */
   def streamBinaryServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val codesDir = graft.TempDirs.scoped("graft_binserve_codes")
-    val out = graft.TempDirs.scoped("graft_binserve_out")
-    val ckpt = graft.TempDirs.scoped("graft_binserve_ckpt")
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     packedSignBits(emb).write.mode("overwrite").parquet(codesDir)
     val frozen = spark.read.parquet(codesDir)
-    val stream = spark.readStream.schema(emb.schema)
-      .parquet(graft.Tables.streamGlob(dir, "embeddings"))
+    val stream = Tables.stream(spark, dir, "embeddings")
       .filter(col("vec_id") < Similarity.NumQueryVectors)
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("vec_id"), col("embedding"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          binaryServe(frozen, emb,
-            packedSignBits(batch.toDF()
-                .select(col("vec_id"), col("embedding")))
-              .select(col("vec_id").as("query_id"),
-                col("code_lo").as("qlo"), col("code_hi").as("qhi")))
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$out/b*").orderBy(col("query_id"), col("rank"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "binserve") { batch =>
+      binaryServe(frozen, emb,
+        packedSignBits(batch.select(col("vec_id"), col("embedding")))
+          .select(col("vec_id").as("query_id"),
+            col("code_lo").as("qlo"), col("code_hi").as("qhi")))
+    }.orderBy(col("query_id"), col("rank"))
   }
 
   /** The binary tier's recall-vs-exact audit — the number that decides

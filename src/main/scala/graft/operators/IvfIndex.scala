@@ -610,27 +610,13 @@ object IvfIndex {
     * cannot change the result — the drain equals [[topKIvfPersisted]]
     * (pinned in IvfIndexSpec, including a two-batch split). */
   def streamAnnServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val idx = builtIndex(spark, dir)
     val out = TempDirs.scoped("graft_annserve_out")
-    val ckpt = TempDirs.scoped("graft_annserve_ckpt")
-    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val stream = spark.readStream.schema(emb.schema)
-      .parquet(graft.Tables.streamGlob(dir, "embeddings"))
+    val stream = Tables.stream(spark, dir, "embeddings")
       .filter(col("vec_id") < Similarity.NumQueryVectors)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          serveBatch(spark, idx, batch.toDF(), out, batchId)
-          ()
-        }
-        .start()
-        .awaitTermination()
+    graft.streaming.MicroBatchPipeline.drain(stream, "annserve") {
+      (batch, batchId) => serveBatch(spark, idx, batch, out, batchId)
     }
     spark.read.parquet(s"$out/b*").orderBy(col("query_id"), col("rank"))
   }
@@ -656,28 +642,14 @@ object IvfIndex {
     * IvfIndexSpec, including a manual two-batch split). Fully
     * oracle-checked via the recorded-centroid replay. */
   def streamIvfAppendQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val idx = graft.StateCache.stateDir(dir, "ivf/stream_append",
         "graft_sivfappend_idx") { idx =>
-      val ckpt = TempDirs.scoped("graft_sivfappend_ckpt")
-      val emb = Tables.embeddings(spark, dir)
+      init(Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding")), idx)
+      val stream = Tables.stream(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      init(emb, idx)
-      val stream = spark.readStream.schema(emb.schema)
-        .parquet(graft.Tables.streamGlob(dir, "embeddings"))
-        .select(col("vec_id"), col("embedding"))
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        stream.writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            append(batch.toDF(), idx, sliceId = batchId)
-            ()
-          }
-          .start()
-          .awaitTermination()
+      graft.streaming.MicroBatchPipeline.drain(stream, "sivfappend") {
+        (batch, batchId) => append(batch, idx, sliceId = batchId)
       }
     }
     topK(spark, idx, standardQueries(spark, dir))

@@ -726,9 +726,6 @@ object Multimodal {
     * is exactly the cross-split hamming pairs — replayed in SQL from the
     * pixel-rule hash. */
   def streamMmServeQuery(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val docs = Tables.documents(s, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     // index built once per corpus (graft.StateCache); the QUERY STREAM —
     // the measured read path — drains per invocation. The build reads the
@@ -749,24 +746,13 @@ object Multimodal {
       }
     }
     val out = graft.TempDirs.scoped("graft_mmserve_out")
-    val ckpt = graft.TempDirs.scoped("graft_mmserve_ckpt")
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-      val queries = s.readStream.schema(docs.schema)
-        .parquet(graft.Tables.streamGlob(dir, "documents"))
-        .filter(isEval)
-        // stream-side projection — the foreachBatch scan-pruning rule
-        .select(col("doc_id"), col("text"))
-      queries.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[Row], id: Long) =>
-          graft.streaming.StreamingDedup
-            .serveMediaBatch(phashTableOf(b.toDF()), state, out, id)
-          ()
-        }
-        .start()
-        .awaitTermination()
+    val queries = Tables.stream(s, dir, "documents")
+      .filter(isEval)
+      // stream-side projection — the foreachBatch scan-pruning rule
+      .select(col("doc_id"), col("text"))
+    graft.streaming.MicroBatchPipeline.drain(queries, "mmserve") { (b, id) =>
+      graft.streaming.StreamingDedup
+        .serveMediaBatch(phashTableOf(b), state, out, id)
     }
     s.read.parquet(s"$out/b*")
       .orderBy(col("query_media"), col("match_media"))

@@ -666,32 +666,13 @@ object Pca {
     * the drained output equals [[projectQuery]] row-for-row (pinned in
     * PcaSpec with a forced split). */
   def streamProjectQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val out = graft.TempDirs.scoped("graft_spca_out")
-    val ckpt = graft.TempDirs.scoped("graft_spca_ckpt")
     val (_, mean, _, basis) = trainBasis(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val stream = spark.readStream.schema(emb.schema)
-      .parquet(graft.Tables.streamGlob(dir, "embeddings"))
+    val stream = Tables.stream(spark, dir, "embeddings")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("vec_id"), col("embedding"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          projectOver(batch.toDF()
-              .select(col("vec_id"), col("embedding")), mean, basis)
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$out/b*").orderBy(col("vec_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "spca") { batch =>
+      projectOver(batch.select(col("vec_id"), col("embedding")), mean, basis)
+    }.orderBy(col("vec_id"))
   }
 
   import QuerySpec.{rowsOnly, withOracle}

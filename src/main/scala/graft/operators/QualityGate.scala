@@ -178,8 +178,9 @@ object QualityGate {
     *
     * Shape at scale: one shuffle on source, then a per-source sort. The
     * window never sees the corpus in one partition UNLESS one source
-    * dominates — for that shape swap in the [[graft.plans.TopKPerKey]]
-    * physical operator (heap per key, no full sort), which serves the
+    * dominates — for that shape swap in the bounded
+    * [[graft.functions.TopKAggregate.topkByScore]] aggregate (heap per
+    * key, no full sort, as `rel_topk_grouped` runs it), which serves the
     * same order statistic without the skew exposure; at the declared
     * cap the window's determinism (explicit tie-break) is worth more. */
   def balancedSample(s: SparkSession, dir: String): DataFrame = {
@@ -203,32 +204,15 @@ object QualityGate {
     * This is how a 100 TB ingest actually runs the gate — documents are
     * scored as they arrive, not in a nightly rescan. */
   def streamQualityGateQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sqgate_out")
-    val ckpt = graft.TempDirs.scoped("graft_sqgate_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          gopherFlags(batch.toDF())
-            .filter(col("keep"))
-            .select(col("doc_id"), col("n_tokens"), col("mean_tok_len"),
-              col("ttr"), col("n_stop"))
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sqgate") { batch =>
+      gopherFlags(batch)
+        .filter(col("keep"))
+        .select(col("doc_id"), col("n_tokens"), col("mean_tok_len"),
+          col("ttr"), col("n_stop"))
+    }.orderBy(col("doc_id"))
   }
 
   import graft.QuerySpec.withOracle

@@ -343,11 +343,6 @@ object RelationalExt {
     * float-accumulating built-ins cannot promise — so the twin carries
     * rel_agg_corr's oracle text VERBATIM. */
   def streamAggCorrQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val out = graft.TempDirs.scoped("graft_scorr_out")
-    val ckpt = graft.TempDirs.scoped("graft_scorr_ckpt")
-    val li = Tables.lineitem(spark, dir)
     // Project on the STREAM side (guide §2.3): foreachBatch hands the body
     // a materialized RDD of the source's output, so a select inside the
     // body can never prune the parquet scan — un-projected, every batch
@@ -355,23 +350,10 @@ object RelationalExt {
     // the body sees `Scan ExistingRDD`, full width). The stream-side
     // select puts the projection in the source plan where it reaches the
     // scan's ReadSchema.
-    val stream = spark.readStream.schema(li.schema)
-      .parquet(graft.Tables.streamGlob(dir, "lineitem"))
+    val stream = Tables.stream(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          corrMoments(batch.toDF())
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    corrFinalize(spark.read.parquet(s"$out/b*"))
+    corrFinalize(graft.streaming.MicroBatchPipeline
+      .drainToSlices(stream, "scorr")(corrMoments))
   }
 
   // ---------------------------------------------------------------------------

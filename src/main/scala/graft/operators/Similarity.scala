@@ -2515,28 +2515,14 @@ object Similarity {
     * drain equals [[lateInteractionTopK]] and the oracle text is carried
     * VERBATIM (manual two-batch split pinned in SimilaritySpec). */
   def streamLiServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val featsDir = liFeatureState(spark, dir)
     val out = graft.TempDirs.scoped("graft_liserve_out")
-    val ckpt = graft.TempDirs.scoped("graft_liserve_ckpt")
-    val docsSchema = Tables.documents(spark, dir).schema
-    val stream = spark.readStream.schema(docsSchema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       .filter(col("doc_id") < NumQueryVectors)
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          serveLiBatch(spark, featsDir, batch.toDF(), out, batchId)
-          ()
-        }
-        .start()
-        .awaitTermination()
+    graft.streaming.MicroBatchPipeline.drain(stream, "liserve") {
+      (batch, batchId) => serveLiBatch(spark, featsDir, batch, out, batchId)
     }
     spark.read.parquet(s"$out/b*").orderBy(col("query_id"), col("rank"))
   }
@@ -2689,27 +2675,13 @@ object Similarity {
     * query set equals [[lateInteractionTopK]] row for row (pinned in
     * SimilaritySpec) — the batch oracle text carries VERBATIM. */
   def streamLiAppendQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val st = graft.StateCache.stateDir(dir, "li/stream_append",
         "graft_sliappend") { st =>
-      val ckpt = graft.TempDirs.scoped("graft_sliappend_ckpt")
-      val docsSchema = Tables.documents(spark, dir).schema
-      val stream = spark.readStream.schema(docsSchema)
-        .parquet(graft.Tables.streamGlob(dir, "documents"))
+      val stream = Tables.stream(spark, dir, "documents")
         // stream-side projection — the foreachBatch scan-pruning rule
         .select(col("doc_id"), col("text"))
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        stream.writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            appendLiSlice(batch.toDF(), st, batchId)
-            ()
-          }
-          .start()
-          .awaitTermination()
+      graft.streaming.MicroBatchPipeline.drain(stream, "sliappend") {
+        (batch, batchId) => appendLiSlice(batch, st, batchId)
       }
     }
     liServeOver(liQueryFeatures(spark, dir),
@@ -3084,31 +3056,15 @@ object Similarity {
     * sim_hybrid_retrieve's oracle text VERBATIM — the stream_lm_score
     * convention). */
   def streamHybridServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val out = graft.TempDirs.scoped("graft_hybserve_out")
-    val ckpt = graft.TempDirs.scoped("graft_hybserve_ckpt")
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val stream = spark.readStream.schema(docs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       .filter(col("doc_id") < NumQueryVectors)
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          hybridOver(docs, emb, batch.toDF())
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$out/b*").orderBy(col("query_id"), col("rank"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "hybserve") { batch =>
+      hybridOver(docs, emb, batch)
+    }.orderBy(col("query_id"), col("rank"))
   }
 
   /** MMR trade-off weight λ: score = λ·relevance − (1−λ)·redundancy. The

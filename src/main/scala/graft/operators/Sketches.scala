@@ -116,32 +116,14 @@ object Sketches {
     * folds to the identical grid and the twin carries the batch
     * oracle text VERBATIM — the corr-moments argument on counters. */
   def streamCmsQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val out = graft.TempDirs.scoped("graft_cms_out")
-    val ckpt = graft.TempDirs.scoped("graft_cms_ckpt")
-    val docs = Tables.documents(spark, dir)
-    val stream = spark.readStream.schema(docs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          cmsGrid(tokenStream(batch.toDF()))
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    val folded = spark.read.parquet(s"$out/b*")
+    val folded = graft.streaming.MicroBatchPipeline
+      .drainToSlices(stream, "cms") { batch => cmsGrid(tokenStream(batch)) }
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("c")).as("c"))
-    heavyHittersOver(tokenStream(docs), folded)
+    heavyHittersOver(tokenStream(Tables.documents(spark, dir)), folded)
   }
 
   /** ONE oracle text behind the batch sketch and its streaming twin. */

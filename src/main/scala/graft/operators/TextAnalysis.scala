@@ -893,31 +893,14 @@ object TextAnalysis {
     * [[lmScore]] row-for-row and shares its oracle text verbatim
     * (two-micro-batch split pinned in StreamingSpec). */
   def streamLmScoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_slm_out")
-    val ckpt = graft.TempDirs.scoped("graft_slm_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
     val frozen = scorerCounts(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // project on the STREAM side: foreachBatch bodies see a materialized
       // RDD, so only a source-plan projection reaches the scan (guide §2.3)
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          lmScoreOver(batch.toDF(), frozen("c1"), frozen("c2"), frozen("c3"))
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "slm") { batch =>
+      lmScoreOver(batch, frozen("c1"), frozen("c2"), frozen("c3"))
+    }.orderBy(col("doc_id"))
   }
 
   /** The FROZEN scorer count tables behind the four streaming scoring
@@ -1014,31 +997,14 @@ object TextAnalysis {
     * row-for-row and shares its oracle text verbatim (two-micro-batch
     * split pinned in StreamingSpec). */
   def streamClassifierScoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sclf_out")
-    val ckpt = graft.TempDirs.scoped("graft_sclf_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
     val frozen = scorerCounts(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // project on the STREAM side: foreachBatch bodies see a materialized
       // RDD, so only a source-plan projection reaches the scan (guide §2.3)
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          classifierScoreOver(batch.toDF(), frozen("cpos"), frozen("cneg"))
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sclf") { batch =>
+      classifierScoreOver(batch, frozen("cpos"), frozen("cneg"))
+    }.orderBy(col("doc_id"))
   }
 
   /** Feature-hashing dimensionality (the hashing-trick bound: collisions
@@ -1081,29 +1047,12 @@ object TextAnalysis {
     * drains to the batch query's exact rows and the twin carries
     * text_feature_embedding's oracle text VERBATIM. */
   def streamFeatureEmbedQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sfeat_out")
-    val ckpt = graft.TempDirs.scoped("graft_sfeat_ckpt")
-    val schema = Tables.documents(spark, dir).schema
-    val stream = spark.readStream.schema(schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // stream-side projection — the foreachBatch scan-pruning rule
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          featureEmbeddingOf(batch.toDF())
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"), col("dim"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sfeat") { batch =>
+      featureEmbeddingOf(batch)
+    }.orderBy(col("doc_id"), col("dim"))
   }
 
   /** The sparse signed-count table (doc_id, dim, signed_count ≠ 0) —
@@ -1218,41 +1167,23 @@ object TextAnalysis {
     * batch-boundary invariant ⇒ the twin carries text_quality_signals'
     * oracle text VERBATIM. */
   def streamQualitySignalsQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sqsig_out")
-    val ckpt = graft.TempDirs.scoped("graft_sqsig_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
     val frozen = scorerCounts(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // project on the STREAM side: foreachBatch bodies see a materialized
       // RDD, so only a source-plan projection reaches the scan (guide §2.3)
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val b = batch.toDF()
-          b.select(col("doc_id"))
-            .join(QualityGate.gopherFlags(b)
-              .select(col("doc_id"), col("keep")), "doc_id")
-            .join(lmScoreOver(b, frozen("c1"), frozen("c2"), frozen("c3"))
-              .select(col("doc_id"), col("hit_rate"), col("lm_score")),
-              "doc_id")
-            .join(classifierScoreOver(b, frozen("cpos"), frozen("cneg"))
-              .select(col("doc_id"), col("clf_score")), "doc_id")
-            .join(dsirWeightsOver(b, frozen("ctgt"), frozen("craw"))
-              .select(col("doc_id"), col("dsir_weight")), "doc_id")
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sqsig") { b =>
+      b.select(col("doc_id"))
+        .join(QualityGate.gopherFlags(b)
+          .select(col("doc_id"), col("keep")), "doc_id")
+        .join(lmScoreOver(b, frozen("c1"), frozen("c2"), frozen("c3"))
+          .select(col("doc_id"), col("hit_rate"), col("lm_score")),
+          "doc_id")
+        .join(classifierScoreOver(b, frozen("cpos"), frozen("cneg"))
+          .select(col("doc_id"), col("clf_score")), "doc_id")
+        .join(dsirWeightsOver(b, frozen("ctgt"), frozen("craw"))
+          .select(col("doc_id"), col("dsir_weight")), "doc_id")
+    }.orderBy(col("doc_id"))
   }
 
   /** Calibration audit of the contrastive classifier against the Gopher
@@ -1294,31 +1225,14 @@ object TextAnalysis {
     * the shape an ingest pipeline wants anyway: the [[DsirBuckets]]-row
     * tables broadcast to every micro-batch for free. */
   def streamDsirScoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val outDir = graft.TempDirs.scoped("graft_sdsir_out")
-    val ckpt = graft.TempDirs.scoped("graft_sdsir_ckpt")
-    val staticDocs = Tables.documents(spark, dir)
     val frozen = scorerCounts(spark, dir)
-    val stream = spark.readStream.schema(staticDocs.schema)
-      .parquet(graft.Tables.streamGlob(dir, "documents"))
+    val stream = Tables.stream(spark, dir, "documents")
       // project on the STREAM side: foreachBatch bodies see a materialized
       // RDD, so only a source-plan projection reaches the scan (guide §2.3)
       .select(col("doc_id"), col("text"))
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          dsirWeightsOver(batch.toDF(), frozen("ctgt"), frozen("craw"))
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          ()
-        }
-        .start()
-        .awaitTermination()
-    }
-    spark.read.parquet(s"$outDir/b*").orderBy(col("doc_id"))
+    graft.streaming.MicroBatchPipeline.drainToSlices(stream, "sdsir") { batch =>
+      dsirWeightsOver(batch, frozen("ctgt"), frozen("craw"))
+    }.orderBy(col("doc_id"))
   }
 
   /** The feature-hash count CTEs (`c(doc_id, dim, signed_count)` and

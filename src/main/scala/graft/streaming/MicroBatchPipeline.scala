@@ -124,7 +124,50 @@ object MicroBatchPipeline {
         .start()
       q.awaitTermination()
     }
-    spark.table(name)
+    // The memory sink registers its result as a session temp view. The
+    // resolved frame holds the sink itself, so the view can go at once;
+    // kept, a long-lived session would gain one view per drain.
+    val result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    result
+  }
+
+  /** Drain `stream` to exhaustion (AvailableNow), handing each micro-batch
+    * and its id to `sink` — the foreachBatch drain every declared
+    * streaming query with a function sink shares. The checkpoint is a
+    * fresh session-scoped dir, so each call consumes the whole source
+    * once; the sink should make its writes idempotent per batch id (a
+    * batch retried after a failed write re-runs the sink). */
+  def drain(stream: DataFrame, name: String)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    drainAt(stream, graft.TempDirs.scoped(s"graft_${name}_ckpt"))(sink)
+
+  /** [[drain]] against a caller-owned checkpoint: a later drain over the
+    * same checkpoint resumes after the last committed batch (a restart),
+    * so only files that arrived since are processed. */
+  private[streaming] def drainAt(stream: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    withBatchSizedShuffle(stream.sparkSession) {
+      stream.writeStream
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch((batch: Dataset[Row], batchId: Long) => sink(batch, batchId))
+        .start()
+        .awaitTermination()
+    }
+
+  /** [[drain]] whose micro-batch result `f(batch)` lands as the
+    * overwrite-mode slice `b<batchId>` of a fresh session-scoped dir (a
+    * retried batch replaces its own partial slice), returning every slice
+    * read back as one frame. */
+  def drainToSlices(stream: DataFrame, name: String)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val out = graft.TempDirs.scoped(s"graft_${name}_out")
+    drain(stream, name) { (batch, batchId) =>
+      f(batch).write.mode("overwrite").parquet(s"$out/b$batchId")
+    }
+    stream.sparkSession.read.parquet(s"$out/b*")
   }
 
   /** Micro-batch volumes are bounded by trigger cadence, not corpus size
@@ -157,19 +200,11 @@ object MicroBatchPipeline {
     * hourly "batch store" DAG without its data-loss race. The checkpoint
     * makes file consumption exactly-once across restarts. */
   def foreachBatchAppend(events: DataFrame, outPath: String,
-      checkpoint: String): Unit = {
-    val q = events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    drainAt(events, checkpoint) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming dedup: drop events whose key was already seen within the
     * watermark horizon — the reference's consume-once guarantee without

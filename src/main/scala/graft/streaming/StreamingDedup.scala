@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.operators.{Dedup, Similarity}
 
 /** Streaming near-duplicate dedup — the batch LSH tiers made incremental,
@@ -99,48 +98,25 @@ object StreamingDedup {
       Similarity.planeBuckets,
       (a, b) => graft.functions.GraftExpressions.cosineFast(a, b) >= threshold)
 
-  /** Start a dedup stream with the given spec. Survivor rows (full input
-    * schema) land under `outDir/b<batchId>`. */
-  private[streaming] def startWith(records: DataFrame, spec: LshDedupSpec,
-      stateDir: String, outDir: String, checkpoint: String,
-      trigger: Trigger, bucketCap: Int): StreamingQuery =
-    records.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, spec, stateDir, outDir, bucketCap)
-        ()
-      }
-      .start()
-
-  /** Document-tier front end (needs `doc_id` and `text`). */
-  def start(docs: DataFrame, stateDir: String, outDir: String,
-      checkpoint: String, threshold: Double = Dedup.JaccardThreshold,
-      trigger: Trigger = Trigger.AvailableNow(),
-      bucketCap: Int = DefaultBucketCap): StreamingQuery =
-    startWith(docs, jaccardSpec(threshold), stateDir, outDir, checkpoint,
-      trigger, bucketCap)
-
+  /** Document-tier drain (needs `doc_id` and `text`): survivor rows
+    * (full input schema) land under `outDir/b<batchId>`. A later run over
+    * the same `checkpoint` resumes after the last committed batch. */
   def run(docs: DataFrame, stateDir: String, outDir: String,
       checkpoint: String, threshold: Double = Dedup.JaccardThreshold,
       bucketCap: Int = DefaultBucketCap): Unit =
-    start(docs, stateDir, outDir, checkpoint, threshold,
-      bucketCap = bucketCap).awaitTermination()
+    MicroBatchPipeline.drainAt(docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, jaccardSpec(threshold), stateDir, outDir,
+        bucketCap)
+    }
 
-  /** Embedding-tier front end (needs `vec_id` and `embedding`). */
-  def startEmbedding(emb: DataFrame, stateDir: String, outDir: String,
-      checkpoint: String, threshold: Double = Similarity.NearDupThreshold,
-      trigger: Trigger = Trigger.AvailableNow(),
-      bucketCap: Int = EmbeddingBucketCap): StreamingQuery =
-    startWith(emb, embeddingSpec(threshold), stateDir, outDir, checkpoint,
-      trigger, bucketCap)
-
+  /** Embedding-tier drain (needs `vec_id` and `embedding`). */
   def runEmbedding(emb: DataFrame, stateDir: String, outDir: String,
       checkpoint: String, threshold: Double = Similarity.NearDupThreshold,
       bucketCap: Int = EmbeddingBucketCap): Unit =
-    startEmbedding(emb, stateDir, outDir, checkpoint, threshold,
-      bucketCap = bucketCap).awaitTermination()
+    MicroBatchPipeline.drainAt(emb, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, embeddingSpec(threshold), stateDir, outDir,
+        bucketCap)
+    }
 
   /** Batch-side incremental dedup: match a new corpus slice against the
     * existing LSH index (same parquet format the streaming tier writes)
@@ -531,8 +507,6 @@ object StreamingDedup {
     * exact pair set on this corpus (the batch tier's pinned property),
     * so the output is exactly the cross-split exact-Jaccard pairs. */
   def streamTextServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.streaming.OutputMode
     val docs = graft.Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     // index built once per corpus (graft.StateCache); the QUERY STREAM —
@@ -545,24 +519,13 @@ object StreamingDedup {
       }
     }
     val out = graft.TempDirs.scoped("graft_tserve_out")
-    val ckpt = graft.TempDirs.scoped("graft_tserve_ckpt")
-    MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      val queries = spark.readStream.schema(docs.schema)
-        .parquet(graft.Tables.streamGlob(dir, "documents"))
-        .filter(isEval)
-        // stream-side projection — the foreachBatch scan-pruning rule
-        .select(col("doc_id"), col("text"))
-      queries.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[Row], id: Long) =>
-          serveTextBatch(b.toDF(), state, out, id,
-            Dedup.JaccardThreshold, DefaultBucketCap)
-          ()
-        }
-        .start()
-        .awaitTermination()
+    val queries = graft.Tables.stream(spark, dir, "documents")
+      .filter(isEval)
+      // stream-side projection — the foreachBatch scan-pruning rule
+      .select(col("doc_id"), col("text"))
+    MicroBatchPipeline.drain(queries, "tserve") { (b, id) =>
+      serveTextBatch(b, state, out, id,
+        Dedup.JaccardThreshold, DefaultBucketCap)
     }
     spark.read.parquet(s"$out/b*")
       .orderBy(col("query_doc"), col("match_doc"))
@@ -910,16 +873,11 @@ object StreamingDedup {
   def streamNearDupDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.StateCache.stateDir(dir, "txt/stream_dedup",
         "graft_sdedup") { root =>
-      val ckpt = graft.TempDirs.scoped("graft_sdedup_ckpt")
-      val schema = graft.Tables.documents(spark, dir).schema
-      val docs = spark.readStream
-        .schema(schema)
-        .parquet(graft.Tables.streamGlob(dir, "documents"))
+      val docs = graft.Tables.stream(spark, dir, "documents")
         // stream-side projection — the foreachBatch scan-pruning rule
         .select(col("doc_id"), col("text"))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        run(docs, s"$root/state", s"$root/out", ckpt)
-      }
+      run(docs, s"$root/state", s"$root/out",
+        graft.TempDirs.scoped("graft_sdedup_ckpt"))
     }
     survivors(spark, s"$root/out").select(col("doc_id")).orderBy(col("doc_id"))
   }
@@ -998,15 +956,10 @@ object StreamingDedup {
   def streamEmbeddingDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.StateCache.stateDir(dir, "emb/stream_dedup",
         "graft_sededup") { root =>
-      val ckpt = graft.TempDirs.scoped("graft_sededup_ckpt")
-      val schema = graft.Tables.embeddings(spark, dir).schema
-      val emb = spark.readStream
-        .schema(schema)
-        .parquet(graft.Tables.streamGlob(dir, "embeddings"))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        runEmbedding(emb.select(col("vec_id"), col("embedding")),
-          s"$root/state", s"$root/out", ckpt)
-      }
+      val emb = graft.Tables.stream(spark, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      runEmbedding(emb, s"$root/state", s"$root/out",
+        graft.TempDirs.scoped("graft_sededup_ckpt"))
     }
     survivors(spark, s"$root/out").select(col("vec_id")).orderBy(col("vec_id"))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftSparkExtensions, Scale}
+import graft.functions.Scale
 
 class ScaleSpec extends SparkSpec {
 
@@ -27,21 +27,6 @@ class ScaleSpec extends SparkSpec {
       .select(Scale.salt(col("event_id"), 16).as("s"))
       .distinct().collect().map(_.getLong(0)).toSet
     assert(values == again)
-  }
-
-  test("extensions installer injects the custom functions and the rule") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftSparkExtensions().apply(ext)
-    // The injected optimizer rule must be the distinct-rewrite, applied
-    // through the same factory a spark.sql.extensions deployment uses.
-    val rules = org.apache.spark.sql.GraftExtensionsProbe
-      .optimizerRules(ext, spark)
-    assert(rules.exists(_.isInstanceOf[graft.plans.ApproxDistinctRewrite]),
-      rules.map(_.getClass.getName).mkString(", "))
-    val strategies = org.apache.spark.sql.GraftExtensionsProbe
-      .plannerStrategies(ext, spark)
-    assert(strategies.contains(graft.plans.TopKPerKeyStrategy),
-      strategies.map(_.getClass.getName).mkString(", "))
   }
 
   test("LSH hot-bucket guard bounds candidates on a degenerate embedding corpus") {
@@ -177,33 +162,6 @@ class ScaleSpec extends SparkSpec {
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(Dedup.MaxBandBucketSize) == pairs(Int.MaxValue))
-  }
-
-  test("whole-operator extension: TopKPerKeyExec plans with an exchange and matches the window form") {
-    import graft.plans.{TopKPerKeyExec, TopKPerKeyOps}
-    val ev = Tables.events(spark, sf)
-      .select(col("event_type"), col("event_id"), col("value"))
-    val k = 5
-    val got = TopKPerKeyOps.topKPerKey(ev, Seq("event_type"), "value", k)
-    // ties beyond k are broken arbitrarily -> compare per-key score
-    // multisets against the window row_number form
-    def scoresByKey(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] =
-      df.select("event_type", "value").collect()
-        .groupBy(_.getString(0))
-        .map { case (t, rs) => t -> rs.map(_.getDouble(1)).toSeq.sorted }
-    val gotScores = scoresByKey(got) // materializes got's own adaptive plan
-    // physical plan: our exec node (AdaptiveSparkPlan hides its subtree
-    // from exists(), so assert on the rendered plan), fed by the hash
-    // exchange EnsureRequirements inserted for the declared distribution
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains(classOf[TopKPerKeyExec].getSimpleName.stripSuffix("Exec")), plan)
-    assert(plan.contains("hashpartitioning(event_type"), plan)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"))
-      .orderBy(col("value").desc, col("event_id").asc)
-    val expect = ev.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
-    assert(gotScores == scoresByKey(expect))
   }
 
   test("AQE splits a skewed join partition at runtime") {

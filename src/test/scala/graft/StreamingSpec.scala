@@ -63,6 +63,34 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == afterFirst)
   }
 
+  test("memory-sink drains leave no temp view; the result outlives its view") {
+    def tempViews: Int = spark.catalog.listTables().collect().count(_.isTemporary)
+    val before = tempViews
+    val first = StreamQueries.hourlyAggQuery(spark, sf)
+    val second = StreamQueries.hourlyAggQuery(spark, sf)
+    assert(tempViews == before)
+    assert(first.collect().nonEmpty)
+    assert(first.collect().sameElements(second.collect()))
+  }
+
+  test("drain propagates a failing batch and restores the session conf") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prev = keys.map(spark.conf.get)
+    // values the drain's own policy (8 partitions, AQE off) never uses
+    val set = Seq("3", "true")
+    keys.zip(set).foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val err = intercept[Exception] {
+        MicroBatchPipeline.drain(Tables.stream(spark, sf, "documents"), "fail") {
+          (_, _) => throw new IllegalStateException("batch body failed")
+        }
+      }
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(_.getMessage == "batch body failed"), err)
+      assert(keys.map(spark.conf.get) == set)
+    } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("streaming dedup within watermark drops replayed events") {
     import org.apache.spark.sql.streaming.OutputMode
     val src = MicroBatchPipeline.eventsStream(spark, sf)
