@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DoubleType
 
 /** The reference pipeline (SURVEY.md §2.1 O1-O13) as ONE lazily-composed
@@ -172,17 +173,34 @@ object BpiPipeline {
     * reference's cron shape (drain everything, terminate — default);
     * ProcessingTime = the long-running service shape (stay up, poll the
     * landing dir every interval). Same plan, same checkpoint either way —
-    * switching trigger mid-life is safe. */
+    * switching trigger mid-life is safe.
+    *
+    * The landing-dir reader is built on a private clone of `spark` whose
+    * `parallelPartitionDiscovery.threshold` is `Int.MaxValue`. Each
+    * micro-batch re-lists its own files (FileStreamSource.getBatch), and
+    * past the threshold (32 paths by default) Spark does that as a job
+    * with one task per file — so a 100-payload backlog flush would pay
+    * for 100 listing tasks before reading a row. The file source takes its
+    * session from the reader, so the clone lists on the driver while the
+    * caller's SQLConf is never written. The plan is then rebound to the
+    * caller's session (`ofRows(spark, …)`) before `writeStream`: the
+    * query starts on `spark`, so it registers with `spark.streams` and
+    * its listeners, and its batches run under the caller's conf. */
   def startStreamWith(spark: SparkSession, landingDir: String, rates: DataFrame,
       checkpoint: String, clock: Column = current_timestamp(),
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = spark.readStream
+    val reader = GraftColumnBridge.cloneSession(spark)
+    reader.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, Int.MaxValue.toString)
+    val landed = reader.readStream
       .schema(BpiSchema.raw)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(landingDir)
+    // The analyzed plan: the reader's unresolved source is bound to a
+    // session only by analysis, and it must be the clone.
+    val raw = GraftColumnBridge.ofRows(spark, landed.queryExecution.analyzed)
     val enriched = orderedSelect(
       withAuditColumns(enrichIdr(flatten(raw), rates), expr("uuid()"), clock))
     enriched.writeStream

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -8,10 +8,12 @@ import org.apache.spark.sql.types.DataType
   * (`dags/bpi_crawler/bpi_crawler.py:127-159`) re-expressed as `Column`
   * predicates the engine evaluates in ONE distributed pass.
   *
-  * Scale design: each expectation is a codegen'd predicate folded into a
-  * single `agg` over the batch — no per-expectation scans, no driver-side
-  * row loops, so the gate costs one map-side-combinable aggregate whether
-  * the batch is 1 row or 10^9. Schema (dtype) expectations are checked
+  * Scale design: each expectation is a codegen'd predicate counted by an
+  * observed metric (`Dataset.observe`) over a `noop` write of the batch —
+  * no per-expectation scans, no driver-side row loops, and no exchange:
+  * each task folds its rows into the counters and the driver merges the
+  * per-task partials, so the gate is one single-stage job whether the
+  * batch is 1 row or 10^9. Schema (dtype) expectations are checked
   * against `df.schema` on the driver for free.
   */
 object Expectations {
@@ -53,22 +55,27 @@ object Expectations {
     else Some(Violation(s"$column is ${dt.simpleString} (got ${actual.fold("missing")(_.simpleString)})", 1L))
   }
 
-  /** Evaluate all expectations in one aggregate pass over the data. */
+  /** Evaluate all expectations in one pass over the data: one job of one
+    * stage. The counters ride on a `noop` write as observed metrics; an
+    * empty frame observes null sums, which count as 0. */
   def summarize(df: DataFrame, expectations: Seq[Expectation]): Seq[Violation] = {
     if (expectations.isEmpty) return Nil
     val counters = expectations.zipWithIndex.map { case (e, i) =>
       sum(when(!coalesce(e.ok, lit(false)), 1L).otherwise(0L)).as(s"e$i")
     }
-    val row = df.agg(counters.head, counters.tail: _*).collect()(0)
+    val observation = new Observation()
+    df.observe(observation, counters.head, counters.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val row = observation.get
     expectations.zipWithIndex.map { case (e, i) =>
-      Violation(e.name, if (row.isNullAt(i)) 0L else row.getLong(i))
+      Violation(e.name, row.get(s"e$i").collect { case n: Long => n }.getOrElse(0L))
     }
   }
 
   /** The gate: pass the batch through unchanged or abort the pipeline —
     * the reference's `assert result.success` (bpi_crawler.py:144-159).
     * Type expectations are checked first (no job); row expectations cost
-    * one aggregate job. */
+    * one single-stage job. */
   def gate(df: DataFrame, rowExpectations: Seq[Expectation],
       typeExpectations: Seq[(String, DataType)] = Nil): DataFrame = {
     val schemaViolations = typeExpectations.flatMap { case (c, dt) => expectType(df, c, dt) }

@@ -115,10 +115,13 @@ object MicroBatchPipeline {
     // overhead ~4x versus the batch-side default of 32 while still keeping
     // every core busy (the stateful exchange is not the scan). The setting
     // is baked into the query at start; restore the session value after.
+    // The checkpoint is scoped like every drain's: without one Spark makes
+    // a /tmp/temporary-<uuid> dir per drain and leaves it behind on failure.
     withBatchSizedShuffle(spark) {
       val q = streamed.writeStream
         .format("memory")
         .queryName(name)
+        .option("checkpointLocation", graft.TempDirs.scoped("graft_stream_ckpt"))
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()

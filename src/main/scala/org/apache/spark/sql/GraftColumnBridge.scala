@@ -18,6 +18,12 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A private session that starts from a copy of `spark`'s SQLConf,
+    * temp views and functions (SparkSession.cloneSession is private[sql]):
+    * conf set on the clone never reaches the caller's session. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Idempotently add a planner strategy to the session (the programmatic
     * twin of SparkSessionExtensions.injectPlannerStrategy). */
   def addStrategy(spark: SparkSession,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType}
 import graft.pipeline.{BpiPipeline, BpiQueries, BpiSchema, Expectations}
@@ -7,6 +9,40 @@ import graft.pipeline.{BpiPipeline, BpiQueries, BpiSchema, Expectations}
 class BpiPipelineSpec extends SparkSpec {
 
   private def golden = BpiPipeline.readRawStrings(spark, BpiQueries.goldenPayloads)
+
+  private val fixedClock = to_timestamp(lit("2023-01-10 00:00:00"))
+
+  /** A fresh landing dir holding one file per payload. */
+  private def landing(payloads: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("bpi_landing")
+    payloads.zipWithIndex.foreach { case (p, i) =>
+      java.nio.file.Files.writeString(dir.resolve(f"payload_$i%03d.json"), p)
+    }
+    dir.toString
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started and stages completed while `body` runs, counted
+    * once the listener bus has delivered every event. */
+  private def jobsAndStages(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.GraftListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    (jobs.get, stages.get)
+  }
 
   test("golden payload produces the exact 16-column warehouse row") {
     val out = BpiPipeline.run(
@@ -287,5 +323,99 @@ class BpiPipelineSpec extends SparkSpec {
       Expectations.expectTimestampString("ts")))
     assert(out.head.violations == 3)
     assert(out(1).violations == 0)
+  }
+
+  test("expectations: summarize on an empty frame counts 0 for every expectation") {
+    val df = spark.range(0).select(col("id").as("v"), lit("x").as("ts"))
+    val out = Expectations.summarize(df, Seq(
+      Expectations.expectNotNull("v"),
+      Expectations.expectTimestampString("ts")))
+    assert(out.map(_.violations) == Seq(0L, 0L))
+  }
+
+  test("expectations: summarize runs as one job of one stage") {
+    val df = spark.range(10).select(
+      when(col("id") < 7, col("id")).as("v"),
+      lit("bad").as("ts"))
+    var out = Seq.empty[Expectations.Violation]
+    val counts = jobsAndStages {
+      out = Expectations.summarize(df, Seq(
+        Expectations.expectNotNull("v"),
+        Expectations.expectTimestampString("ts")))
+    }
+    assert(counts == (1, 1))
+    assert(out.map(_.violations) == Seq(3L, 10L))
+  }
+
+  test("streaming mode: a batch failing the gate stops the stream before the load") {
+    val bad = BpiQueries.goldenPayloads.head.replace("17,101.3517", "n/a")
+    val warehouse = tempDir("bpi_gate_wh")
+    val err = intercept[Exception] {
+      BpiPipeline.runStream(spark, landing(Seq(bad)), BpiQueries.ratesDf(spark),
+        warehouse, tempDir("bpi_gate_ckpt"), clock = fixedClock)
+    }
+    val failed = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case v: Expectations.ValidationFailedException => v }
+    assert(failed.exists(_.violations.exists(_.name.contains("bpi_usd_rate_float"))), err)
+    val written = java.nio.file.Files.walk(java.nio.file.Paths.get(warehouse))
+    try assert(!written.iterator().asScala.exists(_.getFileName.toString.startsWith("part-")))
+    finally written.close()
+  }
+
+  test("streaming mode: a 40-file flush starts as many jobs as a 3-file one") {
+    // Past 32 paths Spark lists a batch's files as a job of one task per
+    // file; the landing reader lists them on the driver instead.
+    def drainJobs(files: Int): Int = {
+      val payloads = Iterator.continually(BpiQueries.goldenPayloads).flatten.take(files).toSeq
+      val warehouse = tempDir("bpi_jobs_wh")
+      val jobs = jobsAndStages {
+        BpiPipeline.runStream(spark, landing(payloads), BpiQueries.ratesDf(spark),
+          warehouse, tempDir("bpi_jobs_ckpt"), clock = fixedClock)
+      }._1
+      assert(spark.read.parquet(warehouse).count() == files)
+      jobs
+    }
+    val few = drainJobs(3)
+    assert(drainJobs(40) == few)
+  }
+
+  test("streaming mode: a drain leaves the caller's SQLConf as it found it") {
+    val before = spark.conf.getAll
+    val warehouse = tempDir("bpi_conf_wh")
+    BpiPipeline.startStreamWith(spark, landing(BpiQueries.goldenPayloads),
+        BpiQueries.ratesDf(spark), tempDir("bpi_conf_ckpt"), clock = fixedClock) {
+      (batch, _) => BpiPipeline.appendParquet(BpiPipeline.validationGate(batch), warehouse)
+    }.awaitTermination()
+    assert(spark.read.parquet(warehouse).count() == 3)
+    assert(spark.conf.getAll == before)
+  }
+
+  test("streaming mode: the landing query runs on the caller's StreamingQueryManager") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+    import StreamingQueryListener._
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[QueryProgressEvent]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val warehouse = tempDir("bpi_listen_wh")
+      val q = BpiPipeline.startStreamWith(spark, landing(BpiQueries.goldenPayloads),
+          BpiQueries.ratesDf(spark), tempDir("bpi_listen_ckpt"), clock = fixedClock,
+          trigger = Trigger.ProcessingTime("100 milliseconds")) {
+        (batch, _) => BpiPipeline.appendParquet(BpiPipeline.validationGate(batch), warehouse)
+      }
+      try {
+        q.processAllAvailable()
+        assert(spark.streams.get(q.id) != null)
+      } finally q.stop()
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      val mine = progress.asScala.filter(_.progress.id == q.id)
+      // numInputRows counts each run of the batch's plan (the gate's and
+      // the load's), so only its presence is pinned here
+      assert(mine.exists(_.progress.numInputRows > 0))
+    } finally spark.streams.removeListener(listener)
   }
 }

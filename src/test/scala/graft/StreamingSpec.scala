@@ -91,6 +91,27 @@ class StreamingSpec extends SparkSpec {
     } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("a failing memory-sink drain leaves no temporary checkpoint behind") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.OutputMode
+    // Spark's own fallback checkpoint is java.io.tmpdir/temporary-<uuid>,
+    // deleted only when the query succeeds
+    def temporaries: Set[String] = {
+      val listing = Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("temporary-")).toSet
+      finally listing.close()
+    }
+    val before = temporaries
+    val failing = Tables.stream(spark, sf, "documents")
+      .select(raise_error(lit("projection failed")).as("x"))
+    val err = intercept[Exception](
+      MicroBatchPipeline.runToResult(spark, failing, OutputMode.Append()))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("projection failed")), err)
+    assert(temporaries -- before == Set.empty)
+  }
+
   test("streaming dedup within watermark drops replayed events") {
     import org.apache.spark.sql.streaming.OutputMode
     val src = MicroBatchPipeline.eventsStream(spark, sf)
