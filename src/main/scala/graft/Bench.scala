@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. The flagship star join runs once first as a JVM
   * warmup so per-query numbers reflect steady state, not JIT. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(defaultCpus = 32)
     // Warmup: flagship join plus one pass of each custom codegen kernel
     // on a tiny in-memory frame, so per-query numbers measure steady
     // state (what a long-running cluster job sees), not first-call JIT

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints formatted physical plans for representative
   * queries so pushdown (PushedFilters), column pruning (ReadSchema),
   * broadcast joins and WholeStageCodegen spans can be eyeballed.
@@ -46,13 +44,7 @@ object Explain {
         "sim_ivfpq_retrain", "sim_ivfpq_probe_sweep", "sim_li_retrain",
         "sim_pca_drift", "sim_pca_cutover", "sim_clusters_cutover",
         "dedup_serve_cutover", "mm_serve_cutover")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(defaultCpus = 32)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

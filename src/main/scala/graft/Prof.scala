@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** TEMPORARY profiling main (not part of the driver contract): runs one
@@ -12,15 +11,7 @@ object Prof {
     val name = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(defaultCpus = 32)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -74,13 +74,26 @@ object Tables {
   def lineitem(s: SparkSession, dir: String): DataFrame   = load(s, dir, "lineitem")
   /** events.ts has shipped under two physical encodings across testdata
     * refreshes: parquet TIMESTAMP(NANOS) (reads as raw Long nanos under the
-    * legacy conf) and plain timestamp[us] (reads as TIMESTAMP_NTZ). Setting
-    * the legacy conf is required to even LOAD a nanos file and is a no-op
-    * for micros files, so it stays unconditional; the rewrite branches on
+    * legacy conf) and plain timestamp[us] (reads as TIMESTAMP_NTZ). The
+    * legacy conf is required to even LOAD a nanos file and is a no-op for
+    * micros files, so the read always goes through [[withNanosAsLong]]
+    * (memoized like [[load]], under its own key); the rewrite branches on
     * the schema Spark actually resolved. */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(load(s, dir, "events"))
+  def events(s: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(resolved.computeIfAbsent((s, s"$dir/events.parquet#nanos"),
+      key => withNanosAsLong(key._1)(_.read.parquet(s"$dir/events.parquet"))))
+
+  /** `read` run on a clone of `spark` with
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, its analyzed plan
+    * rebound to `spark`: the parquet scan takes the conf from the
+    * relation's session (the clone), so TIMESTAMP(NANOS) files load while
+    * the caller's SQLConf is never written. The analyzed plan, because a
+    * reader's source is bound to a session only by analysis. */
+  private[graft] def withNanosAsLong(spark: SparkSession)(
+      read: SparkSession => DataFrame): DataFrame = {
+    val clone = GraftColumnBridge.cloneSession(spark)
+    clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftColumnBridge.ofRows(spark, read(clone).queryExecution.analyzed)
   }
 
   /** The ONE ts-normalization shared by the batch loader and the streaming

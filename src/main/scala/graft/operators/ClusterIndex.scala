@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{MicroBatchPipeline, StreamingDedup}
+import graft.streaming.MicroBatchPipeline
 
 /** INCREMENTAL maintenance for the mutual-kNN semantic clusters
   * (Similarity.semanticClusters) — the `appendBatch` and `deleteIds`
@@ -14,10 +14,10 @@ import graft.streaming.{MicroBatchPipeline, StreamingDedup}
   * follows (IvfIndex postings, StreamingDedup band slices, IndexFiles
   * tombstones).
   *
-  * State is five slice dirs under one root (the b<N> naming shared with
-  * StreamingDedup/IndexFiles, plus `tombstones/b<N>` for the delete
-  * verb; appends and deletes draw from ONE op clock so latest-wins
-  * folds order the verbs correctly):
+  * State is five slice dirs under one root ([[layout]]: the b<N> naming
+  * of every persisted index, plus `tombstones/b<N>` for the delete verb;
+  * appends and deletes draw from ONE op clock so latest-wins folds order
+  * the verbs correctly), and the frozen `geometry` table:
   *
   *   - `emb/b<N>`    — the batch's (vec_id, embedding) rows, append-only.
   *   - `pairs/b<N>`  — NEW scored LSH candidate pairs introduced by batch
@@ -55,46 +55,23 @@ import graft.streaming.{MicroBatchPipeline, StreamingDedup}
   */
 object ClusterIndex {
 
-  private def embBase(state: String) = s"$state/emb"
-  private def pairsBase(state: String) = s"$state/pairs"
-  private def knnBase(state: String) = s"$state/knn"
-  private def labelsBase(state: String) = s"$state/labels"
-  private def tombsBase(state: String) = s"$state/tombstones"
+  private val Emb = "emb"
+  private val Pairs = "pairs"
+  private val Knn = "knn"
+  private val Labels = "labels"
+  private val Geometry = "geometry"
+  private[graft] val layout = IndexFiles.Layout("cluster index",
+    sliced = Seq(Emb, Pairs, Knn, Labels), tombs = "tombstones",
+    idCol = "vec_id", partitionCol = None, frozen = Seq(Geometry))
 
-  /** One logical clock across BOTH verbs: appends bump `emb`, deletes
-    * bump `tombstones`, and each operation writes its knn/labels deltas
-    * under that id — so latest-wins folds order operations correctly
-    * regardless of how appends and deletes interleave. */
-  private def nextOpId(spark: SparkSession, state: String): Long =
-    Seq(embBase(state), tombsBase(state))
-      .map(StreamingDedup.nextSliceId(spark, _)).max
-
-  /** Every id ever deleted (union of tombstone slices; empty frame if no
-    * delete has run). Deletes here are PERMANENT: appendBatch refuses
-    * re-appends outright, so there is no resurrection path to order
-    * against — which is why a plain union suffices where the serving
-    * indexes need the slice-clock-ordered `IndexFiles.readLive`. */
+  /** Every id ever deleted (tombstone slices <= the snapshot, distinct).
+    * Deletes here are PERMANENT: appendBatch refuses re-appends
+    * outright, so there is no resurrection path to order against —
+    * which is why a plain union suffices where the serving indexes need
+    * the slice-clock-ordered [[IndexFiles.Layout.liveOf]]. */
   private def deadAll(spark: SparkSession, state: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val slices0 = StreamingDedup.listSlices(spark, tombsBase(state))
-    val slices = asOf match {
-      case None => slices0
-      case Some(snap) =>
-        slices0.filter(d => StreamingDedup.sliceBatch(d).exists(_ <= snap))
-    }
-    if (slices.isEmpty) {
-      import spark.implicits._
-      Seq.empty[Long].toDF("vec_id")
-    } else slices.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .select(col("vec_id")).distinct()
-  }
-
-  /** Plain append-only union read (emb/pairs: rows are never superseded). */
-  private def readAll(spark: SparkSession, base: String): DataFrame = {
-    val slices = StreamingDedup.listSlices(spark, base)
-    require(slices.nonEmpty, s"no slices under $base — append before reading")
-    slices.map(spark.read.parquet(_)).reduce(_ unionByName _)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    layout.dead(spark, state, asOf.getOrElse(Long.MaxValue)).distinct()
 
   /** Delta-fold read for knn/labels: every row tagged with its slice id,
     * and per key only the rows of the NEWEST slice holding that key
@@ -102,16 +79,12 @@ object ClusterIndex {
     * supersedes its older rows. One window over the slice union; slices
     * that fail the b<N> naming fail loudly (the IndexFiles contract).
     * `asOf` restricts the fold to ops <= the snapshot — time travel by
-    * ignoring newer deltas, the `IndexFiles.readLive(asOf)` convention. */
+    * ignoring newer deltas, the `Layout.liveOf(asOf)` convention. */
   private def latestWins(spark: SparkSession, base: String,
       key: String, asOf: Option[Long] = None): DataFrame = {
-    val slices0 = StreamingDedup.listSlices(spark, base)
-    val slices = asOf match {
-      case None => slices0
-      case Some(snap) =>
-        slices0.filter(d => StreamingDedup.sliceBatch(d).exists(_ <= snap))
-    }
-    if (slices.isEmpty && slices0.nonEmpty)
+    val all = IndexFiles.listSlices(spark, base)
+    val slices = asOf.fold(all)(IndexFiles.slicesUpTo(spark, base, _))
+    if (slices.isEmpty && all.nonEmpty)
       // every slice <= the snapshot was folded into a later c<N> merge:
       // the snapshot state no longer exists — refuse loudly (the
       // dedup_serve_asof compaction-refusal convention)
@@ -127,7 +100,7 @@ object ClusterIndex {
   private def latestWinsOver(spark: SparkSession, slices: Seq[String],
       key: String): DataFrame = {
     val tagged = slices.map { d =>
-      val id = StreamingDedup.sliceBatch(d).getOrElse(
+      val id = IndexFiles.sliceBatch(d).getOrElse(
         throw new IllegalStateException(
           s"slice dir $d does not follow the b<N>/c<N> naming — refusing " +
             "a latest-wins read that would silently mis-order it"))
@@ -145,14 +118,14 @@ object ClusterIndex {
     * their stale pre-delete top-K from an older slice). */
   private def liveKnn(spark: SparkSession, state: String,
       dead: DataFrame): DataFrame =
-    latestWins(spark, knnBase(state), "vec_id")
+    latestWins(spark, s"$state/$Knn", "vec_id")
       .filter(col("rank") >= 1L)
       .join(dead, Seq("vec_id"), "left_anti")
 
   /** Live labels: latest-wins fold minus dead vectors. */
   private def liveLabels(spark: SparkSession, state: String,
       dead: DataFrame, asOf: Option[Long] = None): DataFrame =
-    latestWins(spark, labelsBase(state), "vec_id", asOf)
+    latestWins(spark, s"$state/$Labels", "vec_id", asOf)
       .join(dead, Seq("vec_id"), "left_anti")
 
 
@@ -164,8 +137,6 @@ object ClusterIndex {
       posexplode(Similarity.planeBucketsN(col("embedding"), bits))
         .as(Seq("table_id", "bucket")))
 
-  private def geoPath(state: String) = s"$state/geometry"
-
   /** The index's frozen key-space width, chosen ONCE at creation
     * (explicitly by the caller, or [[Similarity.adaptiveBits]] of the
     * first batch) and recorded in the state dir: every later append
@@ -174,7 +145,7 @@ object ClusterIndex {
     * serve at build geometry, the `semanticClustersOracleSqlOver`
     * contract. */
   private def readGeometry(spark: SparkSession, state: String): Int =
-    spark.read.parquet(geoPath(state)).head().getInt(0)
+    spark.read.parquet(s"$state/$Geometry").head().getInt(0)
 
   private def writeGeometry(spark: SparkSession, state: String,
       bits: Int): Unit = {
@@ -184,7 +155,7 @@ object ClusterIndex {
     // must be replayable — ErrorIfExists would fail the retry on the
     // leftover geometry dir
     Seq(bits).toDF("bits").coalesce(1).write.mode("overwrite")
-      .parquet(geoPath(state))
+      .parquet(s"$state/$Geometry")
   }
 
   /** Exact cosine over candidate id pairs, embeddings re-attached by
@@ -236,7 +207,7 @@ object ClusterIndex {
       bits: Option[Int] = None): Unit = {
     val spark = batch0.sparkSession
     val batch = batch0.select(col("vec_id"), col("embedding")).persist()
-    val sliceId = nextOpId(spark, state)
+    val sliceId = layout.nextSliceId(spark, state)
 
     if (sliceId == 0L) {
       val geo = bits.getOrElse(Similarity.adaptiveBits(batch.count()))
@@ -256,10 +227,10 @@ object ClusterIndex {
       val labels = Dedup.componentsOver(
         batch.select(col("vec_id")),
         mutualTouching(knn, batch.select(col("vec_id"))))
-      batch.write.parquet(s"${embBase(state)}/b0")
-      pairs.write.parquet(s"${pairsBase(state)}/b0")
-      knn.write.parquet(s"${knnBase(state)}/b0")
-      labels.write.parquet(s"${labelsBase(state)}/b0")
+      batch.write.parquet(s"$state/$Emb/b0")
+      pairs.write.parquet(s"$state/$Pairs/b0")
+      knn.write.parquet(s"$state/$Knn/b0")
+      labels.write.parquet(s"$state/$Labels/b0")
       batch.unpersist()
       PlanUtils.freeLocalCheckpoint(pairs, knn)
       return
@@ -275,7 +246,7 @@ object ClusterIndex {
     // batch, rank in anyone's top-K, or re-enter through a re-append
     // (deletes are permanent here — re-appends are refused outright, so
     // a tombstoned id stays dead)
-    val histEmb = readAll(spark, embBase(state))
+    val histEmb = IndexFiles.readSlices(spark, s"$state/$Emb")
       .join(dead, Seq("vec_id"), "left_anti").persist()
     // --- candidate pairs introduced by this batch --------------------
     val histBuckets = bucketsOf(histEmb, geo)
@@ -351,7 +322,7 @@ object ClusterIndex {
       .unionByName(batch.select(col("vec_id")))
       .distinct()
     val touched = touched0.localCheckpoint(true)
-    val allPairs = readAll(spark, pairsBase(state))
+    val allPairs = IndexFiles.readSlices(spark, s"$state/$Pairs")
       .join(dead.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_anti")
       .join(dead.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_anti")
       .unionByName(newPairs)
@@ -396,10 +367,10 @@ object ClusterIndex {
         Seq("vec_id", "nbr"), "left_semi")
     val newLabels = Dedup.componentsOver(affVerts, subMutual)
 
-    batch.write.parquet(s"${embBase(state)}/b$sliceId")
-    newPairs.write.parquet(s"${pairsBase(state)}/b$sliceId")
-    touchedKnn.write.parquet(s"${knnBase(state)}/b$sliceId")
-    newLabels.write.parquet(s"${labelsBase(state)}/b$sliceId")
+    batch.write.parquet(s"$state/$Emb/b$sliceId")
+    newPairs.write.parquet(s"$state/$Pairs/b$sliceId")
+    touchedKnn.write.parquet(s"$state/$Knn/b$sliceId")
+    newLabels.write.parquet(s"$state/$Labels/b$sliceId")
     batch.unpersist(); histEmb.unpersist()
     PlanUtils.freeLocalCheckpoint(dead, newPairs, touched, touchedKnn, affVerts,
       oldKnn, newKnn)
@@ -425,9 +396,9 @@ object ClusterIndex {
     val dead = ids0.select(col("vec_id")).distinct()
       .join(prevDead, Seq("vec_id"), "left_anti")   // replayed delete: no-op ids
       .localCheckpoint(true)
-    val sliceId = nextOpId(spark, state)
+    val sliceId = layout.nextSliceId(spark, state)
     dead.coalesce(1).write.mode("overwrite")
-      .parquet(s"${tombsBase(state)}/b$sliceId")
+      .parquet(s"$state/${layout.tombs}/b$sliceId")
 
     val oldKnn = liveKnn(spark, state, prevDead)
     // the delete-side admission filter: only vectors whose CURRENT top-K
@@ -439,7 +410,7 @@ object ClusterIndex {
       .join(dead, Seq("vec_id"), "left_anti")
       .localCheckpoint(true)
     val allDead = prevDead.unionByName(dead)
-    val livePairs = readAll(spark, pairsBase(state))
+    val livePairs = IndexFiles.readSlices(spark, s"$state/$Pairs")
       .join(allDead.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_anti")
       .join(allDead.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_anti")
     val touchedKnn = topKOf(
@@ -485,8 +456,8 @@ object ClusterIndex {
     val newLabels = Dedup.componentsOver(affVerts, subMutual)
 
     touchedKnn.unionByName(sentinels)
-      .write.parquet(s"${knnBase(state)}/b$sliceId")
-    newLabels.write.parquet(s"${labelsBase(state)}/b$sliceId")
+      .write.parquet(s"$state/$Knn/b$sliceId")
+    newLabels.write.parquet(s"$state/$Labels/b$sliceId")
     PlanUtils.freeLocalCheckpoint(dead, touched, touchedKnn, affVerts)
   }
 
@@ -602,19 +573,20 @@ object ClusterIndex {
   /** Declared query — the CUTOVER lifecycle on the cluster index
     * (VERDICT r19 #1): the standard 2-append + delete lifecycle, the
     * +2-rung [[rebucketIndex]] remedy into a fresh state dir, then the
-    * ATOMIC alias swap ([[cutover]]) and a serve THROUGH the pointer
-    * ([[resolveServing]]) — the remedy → serve loop closed in code for
+    * ATOMIC alias swap (the [[layout]] cutover plus [[checkGeometry]]) and
+    * a serve THROUGH the pointer — the remedy → serve loop closed in code for
     * this family exactly as the IVF tiers' cutover rows closed theirs.
     * Equals [[rebucketClustersQuery]] row for row (the pointer resolves
     * to the widened state; atomicity/refusal/retire pinned in
     * ClusterIndexSpec), so the +2-ladder rebuild-on-survivors oracle
     * carries verbatim. */
-  def cutoverClustersQuery(spark: SparkSession, dir: String): DataFrame = {
+  def clustersCutoverQuery(spark: SparkSession, dir: String): DataFrame = {
     val alias = graft.StateCache.stateDir(dir, "clusters/cutover_alias",
         "graft_clalias") { a =>
-      cutover(spark, a, rebucketedState(spark, dir))
+      val target = rebucketedState(spark, dir)
+      layout.cutoverProbed(spark, a, target)(checkGeometry(spark, target))
     }
-    clusters(spark, resolveServing(alias))
+    clusters(spark, IndexFiles.resolveServing(alias))
   }
 
   /** AS-OF snapshot serving — the time-travel verb of the index family
@@ -642,6 +614,33 @@ object ClusterIndex {
     clusters(spark, state, asOf = Some(0L))
   }
 
+  /** RE-BUCKET the index at a wider frozen geometry — the operation the
+    * salt-cap guard's refusal prescribes ("re-bucket with a wider
+    * geometry"): one rebuild-shaped pass over the LIVE set into a fresh
+    * state at `bits`, after which appends resume with the cap headroom
+    * the [[Similarity.geometryAudit]] row shows. The permanent delete
+    * record carries over — a tombstoned id must stay un-appendable in
+    * the re-bucketed index too (the forget-audit contract) — and the
+    * old state is left untouched for as-of reads until retired (serving
+    * swaps to the new state via the layout's atomic cutover). */
+  def rebucketIndex(spark: SparkSession, oldState: String,
+      newState: String, bits: Int): Unit = {
+    val dead = deadAll(spark, oldState).localCheckpoint(true)
+    val live = IndexFiles.readSlices(spark, s"$oldState/$Emb")
+      .join(dead, Seq("vec_id"), "left_anti")
+    appendBatch(live, newState, Some(bits))
+    if (!dead.isEmpty) deleteIds(dead, newState)
+  }
+
+  /** The cluster family's own cutover check, on top of the layout's
+    * (a slice under every subdir, a non-empty geometry table): the frozen
+    * geometry records a positive key-space width. */
+  private[graft] def checkGeometry(spark: SparkSession, state: String): Unit = {
+    val bits = readGeometry(spark, state)
+    require(bits > 0,
+      s"cutover refused: $state records non-positive geometry $bits")
+  }
+
   /** COMPACT the cluster state: fold every slice with op id <=
     * `upToOp` into one `c<upToOp>` slice per subdir — emb/pairs as
     * dead-free unions, knn/labels as MATERIALIZED latest-wins folds (so
@@ -650,98 +649,26 @@ object ClusterIndex {
     * re-append guard consults. Results are bit-identical before and
     * after (pinned in ClusterIndexSpec); an as-of read whose snapshot
     * predates the fold refuses loudly. Crash safety is the shared
-    * [[StreamingDedup.publishCompacted]] dot-dir/rename/cleanup
-    * protocol. */
-  /** RE-BUCKET the index at a wider frozen geometry — the operation the
-    * salt-cap guard's refusal prescribes ("re-bucket with a wider
-    * geometry"): one rebuild-shaped pass over the LIVE set into a fresh
-    * state at `bits`, after which appends resume with the cap headroom
-    * the [[Similarity.geometryAudit]] row shows. The permanent delete
-    * record carries over — a tombstoned id must stay un-appendable in
-    * the re-bucketed index too (the forget-audit contract) — and the
-    * old state is left untouched for as-of reads until [[retire]]d
-    * (serving swaps to the new state via [[cutover]]'s atomic
-    * pointer). */
-  def rebucketIndex(spark: SparkSession, oldState: String,
-      newState: String, bits: Int): Unit = {
-    val dead = deadAll(spark, oldState).localCheckpoint(true)
-    val live = readAll(spark, embBase(oldState))
-      .join(dead, Seq("vec_id"), "left_anti")
-    appendBatch(live, newState, Some(bits))
-    if (!dead.isEmpty) deleteIds(dead, newState)
-  }
-
-  /** CUT SERVING OVER to `newState` — the atomic pointer verb
-    * generalized off the IVF tiers (VERDICT r19 #1): [[rebucketIndex]]
-    * writes the widened geometry to a NEW state dir, and until now the
-    * swap to it was left as convention ("until retired" with no verb).
-    * Completeness probe, the [[IvfIndex.cutover]] refuse-loudly rule at
-    * this family's layout: a readable frozen geometry and at least one
-    * slice under each of emb/knn/labels — a half-built rebuild refuses
-    * and leaves the alias pointing at the live state. Publication is
-    * [[IndexFiles.cutoverTo]]'s write-temp-then-rename; the old state
-    * stays untouched for in-flight and as-of readers until [[retire]]. */
-  def cutover(spark: SparkSession, aliasDir: String, newState: String): Unit =
-    IndexFiles.cutoverTo(aliasDir, newState) {
-      val bits = try readGeometry(spark, newState) catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"cutover refused: $newState has no readable geometry table — " +
-            "not a built cluster state", e)
-      }
-      require(bits > 0,
-        s"cutover refused: $newState records non-positive geometry $bits")
-      Seq(embBase(newState), knnBase(newState), labelsBase(newState))
-        .foreach { base =>
-          require(StreamingDedup.listSlices(spark, base).nonEmpty,
-            s"cutover refused: no slices under $base — half-built cluster " +
-              "state")
-        }
-    }
-
-  /** The alias's current serving target — what a serving deployment
-    * resolves before reading [[clusters]]. */
-  def resolveServing(aliasDir: String): String =
-    IndexFiles.readPointer(aliasDir)
-
-  /** RETIRE a replaced cluster state dir — the end of this family's
-    * cutover loop, with the shared guards ([[IndexFiles.retireTarget]]):
-    * the dir the alias still serves refuses, and a dir without this
-    * family's geometry table (or a StateCache completion marker) refuses
-    * rather than deleting unrelated data. Retire-then-as-of ordering is
-    * operator-owned and fails LOUDLY, the [[IvfIndex.retire]] contract. */
-  def retire(aliasDir: String, oldState: String): Unit =
-    IndexFiles.retireTarget(aliasDir, oldState, "cluster index")(
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(geoPath(oldState))) ||
-        graft.StateCache.hasCompletionMarker(oldState))
-
+    * [[IndexFiles.publishCompacted]] dot-dir/rename/cleanup protocol. */
   def compactOps(spark: SparkSession, state: String, upToOp: Long): Unit = {
     val dead = deadAll(spark, state).persist()
-    def mergeInputs(base: String): Seq[String] =
-      StreamingDedup.listSlices(spark, base)
-        .filter(d => StreamingDedup.sliceBatch(d).exists(_ <= upToOp))
-    def publish(base: String, merged: DataFrame, inputs: Seq[String]): Unit =
-      StreamingDedup.publishCompacted(spark, base, upToOp, merged, inputs)(
-        (df, path) => df.write.parquet(path))
-    val embIn = mergeInputs(embBase(state))
-    if (embIn.nonEmpty) publish(embBase(state),
-      embIn.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .join(dead, Seq("vec_id"), "left_anti"), embIn)
-    val pairsIn = mergeInputs(pairsBase(state))
-    if (pairsIn.nonEmpty) publish(pairsBase(state),
-      pairsIn.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .join(dead.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_anti")
-        .join(dead.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_anti"),
-      pairsIn)
-    val knnIn = mergeInputs(knnBase(state))
-    if (knnIn.nonEmpty) publish(knnBase(state),
-      latestWinsOver(spark, knnIn, "vec_id")
-        .filter(col("rank") >= 1L)
-        .join(dead, Seq("vec_id"), "left_anti"), knnIn)
-    val labelsIn = mergeInputs(labelsBase(state))
-    if (labelsIn.nonEmpty) publish(labelsBase(state),
-      latestWinsOver(spark, labelsIn, "vec_id")
-        .join(dead, Seq("vec_id"), "left_anti"), labelsIn)
+    def fold(sub: String)(merge: Seq[String] => DataFrame): Unit = {
+      val base = s"$state/$sub"
+      val inputs = IndexFiles.slicesUpTo(spark, base, upToOp)
+      if (inputs.nonEmpty)
+        IndexFiles.publishCompacted(spark, base, upToOp, merge(inputs),
+          inputs, Nil)((df, path) => df.write.parquet(path))
+    }
+    fold(Emb)(in => IndexFiles.readUnion(spark, in)
+      .join(dead, Seq("vec_id"), "left_anti"))
+    fold(Pairs)(in => IndexFiles.readUnion(spark, in)
+      .join(dead.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_anti")
+      .join(dead.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_anti"))
+    fold(Knn)(in => latestWinsOver(spark, in, "vec_id")
+      .filter(col("rank") >= 1L)
+      .join(dead, Seq("vec_id"), "left_anti"))
+    fold(Labels)(in => latestWinsOver(spark, in, "vec_id")
+      .join(dead, Seq("vec_id"), "left_anti"))
     dead.unpersist()
   }
 
@@ -804,7 +731,7 @@ object ClusterIndex {
       // the claim is streaming MAINTENANCE: if the source ever coalesced
       // the files into one batch, this would silently degrade to a single
       // rebuild-shaped op0 — refuse instead of serving a hollow result
-      require(StreamingDedup.listSlices(spark, embBase(state)).size >= 2,
+      require(layout.slices(spark, state, Emb).size >= 2,
         "stream_cluster_append drained as a single micro-batch — " +
           "maxFilesPerTrigger was not honored; the general append path " +
           "was never exercised")
@@ -824,8 +751,8 @@ object ClusterIndex {
     // built-once state; the slice accounting below still observes the
     // real dirs, so a drifted build shape fails the literal oracle
     val state = deletedState(spark, dir)
-    val nAppend = StreamingDedup.listSlices(spark, embBase(state)).size
-    val nTomb = StreamingDedup.listSlices(spark, tombsBase(state)).size
+    val nAppend = layout.slices(spark, state, Emb).size
+    val nTomb = layout.slices(spark, state, layout.tombs).size
     val dead = deadAll(spark, state)
     clusters(spark, state)
       .agg(count(lit(1)).as("n_live_vectors"),
@@ -872,7 +799,7 @@ ORDER BY vec_id""",
     // alias, so the +2-ladder rebuild-on-survivors replay carries
     // verbatim — a pointer resolving anywhere else diverges or fails
     // loudly.
-    withOracle("sim_clusters_cutover", cutoverClustersQuery,
+    withOracle("sim_clusters_cutover", clustersCutoverQuery,
       restrictedOracleSql("vec_id % 7 <> 3",
         Similarity.OracleGeo.Ladder("embeddings", 2))))
 }

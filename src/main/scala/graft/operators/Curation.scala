@@ -779,7 +779,7 @@ object Curation {
     *
     * Scale shape: a forget list is tiny relative to the corpus, and
     * every index absorbs it as ONE tombstone slice (the LSM delete
-    * convention all three share via [[IndexFiles.delete]]) — no index
+    * convention all three share via [[IndexFiles.Layout.delete]]) — no index
     * rewrite, no corpus shuffle; serving pays one anti-join against
     * the (broadcast-small) tombstone set until compaction folds it. */
   def forgetAuditQuery(s: SparkSession, dir: String): DataFrame = {
@@ -805,7 +805,7 @@ object Curation {
         "graft_forget_ivf") { ivfIdx =>
       MicroBatchPipeline.withBatchSizedShuffle(s) {
         IvfIndex.build(emb, ivfIdx)
-        IvfIndex.delete(
+        IvfIndex.layout.delete(
           emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), ivfIdx)
         ()
       }
@@ -823,19 +823,14 @@ object Curation {
           (col("n_live") + col("n_dead") === col("n_indexed") &&
             col("n_dead") === col("n_requested"))
             .cast("long").as("fully_forgotten"))
+    val lsh = StreamingDedup.layout
     val textAudit = auditRow("text_lsh", train, "doc_id",
-      IndexFiles.readLiveFrom(s,
-        StreamingDedup.listSlices(s, s"$textState/bands"),
-        s"$textState/tombstones", "rec_id"), "rec_id",
-      IndexFiles.readSlices(s, s"$textState/tombstones"), "rec_id")
+      lsh.live(s, textState), "rec_id", lsh.dead(s, textState), "rec_id")
     val mediaAudit = auditRow("media_phash", media, "media_id",
-      IndexFiles.readLiveFrom(s,
-        StreamingDedup.listSlices(s, s"$mediaState/bands"),
-        s"$mediaState/tombstones", "rec_id"), "rec_id",
-      IndexFiles.readSlices(s, s"$mediaState/tombstones"), "rec_id")
+      lsh.live(s, mediaState), "rec_id", lsh.dead(s, mediaState), "rec_id")
     val ivfAudit = auditRow("ivf_embedding", emb, "vec_id",
-      IvfIndex.postings(s, ivfIdx), "vec_id",
-      IndexFiles.readSlices(s, IvfIndex.tombstonesDir(ivfIdx)), "vec_id")
+      IvfIndex.layout.live(s, ivfIdx), "vec_id",
+      IvfIndex.layout.dead(s, ivfIdx), "vec_id")
     textAudit.unionByName(mediaAudit).unionByName(ivfAudit)
       .orderBy(col("index_name"))
   }

@@ -96,19 +96,12 @@ object EmbeddingOps {
     val dotL = aggregate(
       zip_with(col("qcodes"), col("codes"), (a, b) => a * b),
       lit(0L), (acc, x) => acc + x)
-    val scored = broadcast(queries)
+    Similarity.rankTopK(broadcast(queries)
       .join(q.select(col("vec_id"), col("scale"), col("codes")),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         (dotL.cast("double") * col("qscale") * col("scale")
-          / lit(QuantLevels * QuantLevels)).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= Similarity.TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+          / lit(QuantLevels * QuantLevels)).as("score")))
   }
 
   /** Embedding-column QA — the audit an indexing owner runs before
@@ -362,15 +355,16 @@ object EmbeddingOps {
   // the delete and as-of verbs hash-checked end to end.
   // -------------------------------------------------------------------
 
-  private def binCodesDir(idx: String) = s"$idx/codes"
-  private def binTombsDir(idx: String) = s"$idx/tombstones"
+  private[graft] val binaryLayout = IndexFiles.Layout("binary index",
+    sliced = Seq("codes"), tombs = "tombstones", idCol = "vec_id",
+    partitionCol = None, frozen = Nil)
 
-  private def appendBinarySlice(emb: DataFrame, idx: String,
-      sliceId: Long): Unit =
-    packedSignBits(emb)
-      .select(col("vec_id"), col("code_lo"), col("code_hi"))
-      .write.mode("overwrite")
-      .parquet(s"${binCodesDir(idx)}/b$sliceId")
+  /** Append the packed codes of `emb` as slice `sliceId`. */
+  private[graft] def appendBinarySlice(emb: DataFrame, idx: String,
+      sliceId: Long): Long =
+    binaryLayout.append(
+      packedSignBits(emb).select(col("vec_id"), col("code_lo"), col("code_hi")),
+      idx, sliceId)
 
   /** Serve the standard query set against the persisted code table as
     * of `asOf` — queries pack from the embeddings table (a tombstoned
@@ -379,8 +373,7 @@ object EmbeddingOps {
   private def serveBinaryIndex(s: SparkSession, dir: String, idx: String,
       asOf: Long = Long.MaxValue): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val live = IndexFiles.readLive(s, binCodesDir(idx), binTombsDir(idx),
-      "vec_id", asOf)
+    val live = binaryLayout.live(s, idx, asOf)
     val queryCodes = packedSignBits(
         emb.filter(col("vec_id") < Similarity.NumQueryVectors))
       .select(col("vec_id").as("query_id"),
@@ -407,15 +400,14 @@ object EmbeddingOps {
     val idx = graft.TempDirs.scoped("graft_binidxdel")
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     appendBinarySlice(emb, idx, 0L)
-    IndexFiles.delete(
-      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-      "vec_id", binCodesDir(idx), binTombsDir(idx))
+    binaryLayout.delete(
+      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), idx)
     serveBinaryIndex(s, dir, idx)
   }
 
   /** Declared query — COMPACTION, hash-checked: build, delete, fold the
-    * tombstones into the physical rows ([[IndexFiles
-    * .compactWithTombstones]]), then serve. The fold must be invisible
+    * tombstones into the physical rows ([[IndexFiles.Layout.compact]]),
+    * then serve. The fold must be invisible
     * to readers, so the oracle is the DELETED oracle verbatim — if
     * compaction dropped a live row, resurrected a dead one, or
     * duplicated anything through a crashed rename, this query diverges
@@ -424,13 +416,9 @@ object EmbeddingOps {
     val idx = graft.TempDirs.scoped("graft_binidxcomp")
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     appendBinarySlice(emb, idx, 0L)
-    IndexFiles.delete(
-      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-      "vec_id", binCodesDir(idx), binTombsDir(idx))
-    IndexFiles.compactWithTombstones(s, binCodesDir(idx), binTombsDir(idx),
-      upTo = 1L, "vec_id") { (merged, dst) =>
-        merged.write.mode("overwrite").parquet(dst)
-    }
+    binaryLayout.delete(
+      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), idx)
+    binaryLayout.compact(s, idx, 1L)
     serveBinaryIndex(s, dir, idx)
   }
 
@@ -444,9 +432,8 @@ object EmbeddingOps {
     val cut = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
     appendBinarySlice(emb.filter(col("vec_id") <= cut), idx, 0L)
     appendBinarySlice(emb.filter(col("vec_id") > cut), idx, 1L)
-    IndexFiles.delete(
-      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")),
-      "vec_id", binCodesDir(idx), binTombsDir(idx))
+    binaryLayout.delete(
+      emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), idx)
     serveBinaryIndex(s, dir, idx, asOf = 0L)
   }
 

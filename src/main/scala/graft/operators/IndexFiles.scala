@@ -2,16 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import graft.streaming.StreamingDedup
 
-/** Shared persistence primitives for the persisted ANN indexes
-  * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]]) and the streaming LSH
-  * index: one definition of how frozen centroids and PQ codebooks
-  * round-trip through parquet, one multi-slice reader, and ONE tombstone
-  * convention (write / read-minus / fold-at-compaction), so the persisted
-  * state implementations cannot drift in their on-disk geometry or their
-  * delete semantics. */
+/** The on-disk layout of every persisted index ([[IvfIndex]], [[PqIndex]],
+  * [[IvfPqIndex]], the binary codes in [[EmbeddingOps]], the
+  * late-interaction features in [[Similarity]], the text/media LSH index
+  * in [[graft.streaming.StreamingDedup]], [[ClusterIndex]] and [[Pca]]):
+  * the b/c slice naming, ONE tombstone convention (write / read-minus /
+  * fold-at-compaction), the frozen centroid and codebook tables, and the
+  * serving pointer. Each family declares its dirs once as a [[Layout]];
+  * every lifecycle verb is implemented once on it, so the families cannot
+  * drift in their on-disk geometry or their delete semantics. */
 private[graft] object IndexFiles {
+
+  /** Frozen-artifact subdirs shared by the trained ANN layouts. */
+  val Centroids = "centroids"
+  val Codebooks = "codebooks"
 
   /** Name of the serving-pointer file under an alias dir. */
   private val PointerFile = "current"
@@ -30,7 +35,7 @@ private[graft] object IndexFiles {
     * untouched, so in-flight and as-of reads against it keep working
     * after the swap; retiring it is a separate, later decision once its
     * last snapshot reader is gone. */
-  def writePointer(aliasDir: String, target: String): Unit = {
+  private def writePointer(aliasDir: String, target: String): Unit = {
     val dir = java.nio.file.Paths.get(aliasDir)
     java.nio.file.Files.createDirectories(dir)
     val tmp = dir.resolve("." + PointerFile + ".tmp")
@@ -42,9 +47,10 @@ private[graft] object IndexFiles {
     ()
   }
 
-  /** Resolve the serving pointer. Fails loudly on a missing alias — an
-    * unpointed alias is a deployment bug, not an empty index. */
-  def readPointer(aliasDir: String): String = {
+  /** The alias's current serving target — what a serving deployment
+    * resolves before every query batch. Fails loudly on a missing alias:
+    * an unpointed alias is a deployment bug, not an empty index. */
+  def resolveServing(aliasDir: String): String = {
     val p = java.nio.file.Paths.get(aliasDir, PointerFile)
     require(java.nio.file.Files.isRegularFile(p),
       s"no serving pointer at $p — cutover never ran for this alias")
@@ -54,53 +60,15 @@ private[graft] object IndexFiles {
     target
   }
 
-  /** Family-agnostic CUTOVER body: run the family's completeness probe —
-    * which must THROW on a half-built target, leaving the alias pointing
-    * at the live index — then publish via [[writePointer]]'s
-    * write-temp-then-rename. Every index family's cutover verb
-    * ([[IvfIndex.cutover]], [[ClusterIndex.cutover]], the text/media
-    * wrappers in [[graft.streaming.StreamingDedup]], [[Pca]]) is this
-    * body plus its own layout probe, so the refuse-loudly-then-swap
-    * semantics cannot drift between families. */
-  def cutoverTo(aliasDir: String, newDir: String)(probe: => Unit): Unit = {
-    probe
-    writePointer(aliasDir, newDir)
-  }
-
-  /** Family-agnostic RETIRE body — deletes a REPLACED index dir, with the
-    * two guards every family shares (ADVICE r19): the dir the alias
-    * still serves is refused, and a dir that does not even look like the
-    * family's state layout is refused (a transposed or mistyped argument
-    * must not delete unrelated data).
-    *
-    * ORDERING CONTRACT (operator-owned — the slice machinery keeps no
-    * refcounts): retire only after the last reader holding a recorded
-    * as-of snapshot of `oldDir` is gone. The failure mode is LOUD, not
-    * silent: a snapshot read against a retired dir fails with the
-    * readers' "no slices under …" refusal rather than serving an empty
-    * or partial state (pinned in IvfIndexSpec). */
-  def retireTarget(aliasDir: String, oldDir: String, familyDesc: String)(
-      looksLikeIndex: => Boolean): Unit = {
-    def norm(p: String) =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    require(norm(readPointer(aliasDir)) != norm(oldDir),
-      s"retire refused: the serving alias still points at $oldDir — " +
-        "cutover first")
-    require(looksLikeIndex,
-      s"retire refused: $oldDir does not look like a $familyDesc state " +
-        "dir — refusing to delete what this verb does not own " +
-        "(transposed or mistyped argument?)")
-    graft.TempDirs.deleteTree(oldDir)
-  }
-
-  /** Persist IVF centroids as (cell, centroid), overwriting. */
-  def writeCentroids(spark: SparkSession, dir: String,
+  /** Persist IVF centroids as (cell, centroid) under `indexDir/centroids`,
+    * overwriting. */
+  def writeCentroids(spark: SparkSession, indexDir: String,
       cents: Seq[Array[Float]]): Unit = {
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("cell", "centroid")
       .coalesce(1)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$indexDir/$Centroids")
   }
 
   /** The frozen centroid table, cell-ordered (IvfCells rows — a driver
@@ -112,7 +80,8 @@ private[graft] object IndexFiles {
     * The fingerprint in the key makes an in-place rewrite (tests,
     * rebuild-into-same-dir) MISS instead of serving stale geometry —
     * the pack-offset cache's guard applied here. */
-  def loadCentroids(spark: SparkSession, dir: String): Seq[Array[Float]] =
+  def loadCentroids(spark: SparkSession, indexDir: String): Seq[Array[Float]] = {
+    val dir = s"$indexDir/$Centroids"
     graft.StateCache.cached(dir,
         "centroids:" + graft.StateCache.dirFingerprint(dir)) {
       spark.read.parquet(dir)
@@ -121,25 +90,28 @@ private[graft] object IndexFiles {
         .map(_.getSeq[Float](1).toArray)
         .toSeq
     }
+  }
 
-  /** Persist PQ codebooks as (subspace, code, centroid), overwriting.
-    * `cbs` is the subspace-major flattened [m*ks][subDim] table
+  /** Persist PQ codebooks as (subspace, code, centroid) under
+    * `indexDir/codebooks`, overwriting. `cbs` is the subspace-major
+    * flattened [m*ks][subDim] table
     * [[graft.functions.GraftExpressions.PqEncode]] consumes. */
-  def writeCodebooks(spark: SparkSession, dir: String,
+  def writeCodebooks(spark: SparkSession, indexDir: String,
       cbs: Array[Array[Double]]): Unit = {
     import spark.implicits._
     cbs.zipWithIndex.map { case (c, i) =>
       (i / Similarity.PqCodebookSize, i % Similarity.PqCodebookSize, c.toSeq)
     }.toSeq.toDF("subspace", "code", "centroid")
       .coalesce(1)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$indexDir/$Codebooks")
   }
 
   /** The frozen codebooks back in PqEncode's flattened order. Memoized
     * like [[loadCentroids]] (same immutability argument: codebooks are
     * frozen at train time, retrains write new dirs, the fingerprint
     * guards in-place rewrites). */
-  def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Double]] =
+  def loadCodebooks(spark: SparkSession, indexDir: String): Array[Array[Double]] = {
+    val dir = s"$indexDir/$Codebooks"
     graft.StateCache.cached(dir,
         "codebooks:" + graft.StateCache.dirFingerprint(dir)) {
       spark.read.parquet(dir)
@@ -147,178 +119,358 @@ private[graft] object IndexFiles {
         .collect()
         .map(_.getSeq[Double](2).toArray)
     }
-
-  /** All rows across the b/c slices under `base`. Each slice is read
-    * under its own root so partition columns (the cell=N layout) are
-    * discovered per slice — no basePath coupling between slices. */
-  def readSlices(spark: SparkSession, base: String): DataFrame = {
-    val slices = StreamingDedup.listSlices(spark, base)
-    require(slices.nonEmpty,
-      s"no index slices under $base — build/append before querying")
-    slices.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }
 
   // -------------------------------------------------------------------
-  // Tombstones: the persisted indexes' DELETE verb (the reference's O15
-  // staging delete, bpi_crawler.py:37-41, re-expressed for durable
-  // serving state). A delete writes a TOMBSTONE SLICE of ids under the
-  // same b/c naming as the data slices, drawing its id from a clock
-  // SHARED with the data subdir, and kills rows in STRICTLY EARLIER
-  // slices — so a replayed delete is idempotent (overwrite-mode slice),
-  // serving anti-joins the (usually tiny) tombstone set, and an id
-  // re-appended after its delete is alive again (LSM semantics, the
-  // slice id as the logical clock). Compaction folds tombstones into the
-  // physical rows and removes them.
+  // Slices: every sliced subdir holds overwrite-mode `b<N>` slices (one
+  // per append, delete or micro-batch — a retried write replaces its own
+  // partial output) and `c<N>` compactions (N = the highest slice id the
+  // merge contains). Dot-prefixed names are in-flight compaction temps.
 
-  /** Each slice's rows tagged with the slice's numeric id (`c<N>` tags as
-    * N — safe, because every tombstone that survived its compaction has
-    * id > N, and every row in the compacted slice came from a slice
-    * <= N). An unparseable slice name fails LOUDLY: the no-tombstone
-    * read path unions every directory, so silently skipping one here
-    * would make the engine's row set change the first time a delete
+  /** Slice id encoded in a slice directory name. Strict match: a foreign
+    * entry under the index dir (a stray `_SUCCESS`-like dir, or `bc1`,
+    * which a loose stripPrefix parse would read as id 1) yields None. */
+  private val SliceName = "^[bc](\\d+)$".r
+  def sliceBatch(dir: String): Option[Long] =
+    dir.substring(dir.lastIndexOf('/') + 1) match {
+      case SliceName(id) => Some(id.toLong)
+      case _ => None
+    }
+
+  /** Visible (non-hidden) slice directories under a slice base dir. */
+  def listSlices(spark: SparkSession, base: String): Seq[String] = {
+    val path = new org.apache.hadoop.fs.Path(base)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(path)) Seq.empty
+    else fs.listStatus(path)
+      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
+      .map(_.getPath.toString).toSeq
+  }
+
+  /** The slices under `base` whose id is `<= upTo`. */
+  def slicesUpTo(spark: SparkSession, base: String, upTo: Long): Seq[String] =
+    listSlices(spark, base).filter(sliceBatch(_).exists(_ <= upTo))
+
+  /** Union of slice dirs, each read under its own root and unioned by
+    * name: a single multi-root read would trip partition discovery on
+    * partitioned slices (the cell=N layout) with
+    * CONFLICTING_DIRECTORY_STRUCTURES. */
+  def readUnion(spark: SparkSession, slices: Seq[String]): DataFrame =
+    slices.map(spark.read.parquet(_)).reduce(_ unionByName _)
+
+  /** All physical rows across the slices under `base`, tombstones NOT
+    * applied — the slice accounting of the manifest queries. */
+  def readSlices(spark: SparkSession, base: String): DataFrame = {
+    val slices = listSlices(spark, base)
+    require(slices.nonEmpty,
+      s"no index slices under $base — build/append before querying")
+    readUnion(spark, slices)
+  }
+
+  /** One past the newest slice under `base`. */
+  private def nextSliceIdUnder(spark: SparkSession, base: String): Long = {
+    val ids = listSlices(spark, base).flatMap(sliceBatch)
+    if (ids.isEmpty) 0L else ids.max + 1L
+  }
+
+  /** The crash-safe publish step of every compaction: write `merged` to a
+    * dot-prefixed temp (invisible to readers), rename it to `c<upTo>`
+    * (return value CHECKED — Hadoop FileSystems report many failures by
+    * returning false), then delete the `inputs` it replaces plus
+    * `alsoDelete` (a tombstone-folding compaction removes the tombstone
+    * slices it just applied). A crash between rename and deletes leaves
+    * a slice next to its own merge — duplicate rows until the compaction
+    * is re-run, which removes it (the LSH reads dedup their inputs, so
+    * their results do not change meanwhile). */
+  def publishCompacted(spark: SparkSession, base: String, upTo: Long,
+      merged: DataFrame, inputs: Seq[String], alsoDelete: Seq[String])(
+      write: (DataFrame, String) => Unit): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new org.apache.hadoop.fs.Path(base, s".c$upTo.tmp")
+    // batch-sized shuffle: the merge must not fragment the compacted
+    // slice into session-default-many part files.
+    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
+      write(merged, tmp.toString)
+    }
+    val dst = new org.apache.hadoop.fs.Path(base, s"c$upTo")
+    fs.delete(dst, true)
+    // An unchecked false here would leave the merge hidden in the
+    // dot-dir while the loop below deletes all inputs — silently
+    // destroying the index. Abort before any deletion.
+    if (!fs.rename(tmp, dst)) throw new IllegalStateException(
+      s"compaction: rename $tmp -> $dst failed; index left unmodified")
+    // dst itself may be among the inputs (re-run after a crash) — it
+    // now holds the fresh merge, so it must survive this cleanup
+    (inputs ++ alsoDelete).filterNot(_.endsWith(s"/c$upTo"))
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+  }
+
+  /** Each slice's rows tagged `_slice` with the slice's numeric id (`c<N>`
+    * tags as N — safe, because every tombstone that survived its
+    * compaction has id > N, and every row in the compacted slice came
+    * from a slice <= N). An unparseable slice name fails LOUDLY: the
+    * no-tombstone read path unions every directory, so silently skipping
+    * one here would make the row set change the first time a delete
     * runs. */
-  private def taggedSlices(spark: SparkSession,
-      slices: Seq[String]): Seq[DataFrame] =
+  private def taggedUnion(spark: SparkSession,
+      slices: Seq[String]): DataFrame =
     slices.map { d =>
-      val id = StreamingDedup.sliceBatch(d).getOrElse(
+      val id = sliceBatch(d).getOrElse(
         throw new IllegalStateException(
           s"slice dir $d does not follow the b<N>/c<N> naming — " +
-            "refusing a tombstone-tagged read that would silently drop it"))
+            "refusing a slice-tagged read that would silently drop it"))
       spark.read.parquet(d).withColumn("_slice", lit(id))
-    }
+    }.reduce(_ unionByName _)
 
-  /** Next free slice id across subdirs sharing one logical clock (data +
-    * tombstones): a tombstone must out-number every slice it is meant to
-    * kill, so both verbs draw from the max over BOTH subdirs. */
-  def nextSliceIdAcross(spark: SparkSession, bases: Seq[String]): Long =
-    bases.map(StreamingDedup.nextSliceId(spark, _)).max
-
-  /** Write tombstone slice `b<sliceId>` of distinct ids under `tombsBase`
-    * (overwrite mode — a replayed delete replaces its own slice). */
-  def writeTombstoneSlice(ids: DataFrame, idCol: String, tombsBase: String,
-      sliceId: Long): Unit =
-    ids.select(col(idCol)).distinct().coalesce(1)
-      .write.mode("overwrite").parquet(s"$tombsBase/b$sliceId")
-
-  /** The DELETE verb itself, one body for every persisted index: draw the
-    * tombstone's id from the clock shared with `dataBase` (an unspecified
-    * `sliceId` kills exactly the state that exists NOW; an explicit one
-    * replays idempotently) and write the slice. Returns the slice id. */
-  def delete(ids: DataFrame, idCol: String, dataBase: String,
-      tombsBase: String, sliceId: Long = -1L): Long = {
-    val id = if (sliceId >= 0) sliceId
-      else nextSliceIdAcross(ids.sparkSession, Seq(dataBase, tombsBase))
-    writeTombstoneSlice(ids, idCol, tombsBase, id)
-    id
-  }
-
-  /** `rows` (tagged with `tagCol`) minus tombstoned ones: a row is dead
-    * iff some tombstone slice with a STRICTLY larger id carries its id.
-    * Equi-join on the id with the slice comparison as residual — never a
-    * cartesian. */
+  /** Tagged `rows` minus tombstoned ones: a row is dead iff some
+    * tombstone slice with a STRICTLY larger id carries its id. Equi-join
+    * on the id with the slice comparison as residual — never a
+    * cartesian. Drops the tag. */
   private def minusTombstoned(rows: DataFrame, tombs: DataFrame,
-      idCol: String, tagCol: String): DataFrame = {
+      idCol: String): DataFrame = {
     val t = tombs.select(col(idCol).as("_t_id"), col("_slice").as("_t_slice"))
     rows.join(t,
-      rows(idCol) === t("_t_id") && t("_t_slice") > rows(tagCol), "left_anti")
+        rows(idCol) === t("_t_id") && t("_t_slice") > rows("_slice"),
+        "left_anti")
+      .drop("_slice")
   }
 
-  /** Live rows over an explicit slice list: the plain per-slice union
-    * when no tombstones exist (byte-identical plan to the pre-delete
-    * engine), the tagged anti-join otherwise. `asOf` restricts the
-    * TOMBSTONE side to slices `<= asOf` (callers restricting the data
-    * side restrict both — [[readLive]]). */
-  def readLiveFrom(spark: SparkSession, slices: Seq[String],
-      tombsBase: String, idCol: String,
-      asOf: Long = Long.MaxValue): DataFrame = {
-    val tombSlices = StreamingDedup.listSlices(spark, tombsBase)
-      .filter(StreamingDedup.sliceBatch(_).exists(_ <= asOf))
-    if (tombSlices.isEmpty)
-      slices.map(spark.read.parquet(_)).reduce(_ unionByName _)
-    else
-      minusTombstoned(
-        taggedSlices(spark, slices).reduce(_ unionByName _),
-        taggedSlices(spark, tombSlices).reduce(_ unionByName _),
-        idCol, "_slice")
-        .drop("_slice")
-  }
-
-  /** All LIVE rows across the b/c slices under `base`: [[readSlices]]
-    * minus the ids tombstoned under `tombsBase`.
+  /** ONE persisted index family's on-disk layout, declared once per
+    * family; every lifecycle verb below is written once against it.
     *
-    * `asOf` (default: everything) reads the SNAPSHOT at logical time
-    * `asOf` — data slices `<= asOf` minus tombstones `<= asOf`, i.e. the
-    * exact row set a reader saw after slice `asOf` landed. This is the
-    * reproducibility verb a training run needs: the corpus snapshot a
-    * model trained on stays queryable while later appends/deletes land.
-    * Snapshots live as long as their slices: a compaction whose id
-    * exceeds `asOf` has merged history past the snapshot point, and the
-    * read fails LOUDLY rather than silently serving the coarser state
-    * (compaction is the retention knob: compact only past snapshots
-    * nobody needs). */
-  def readLive(spark: SparkSession, base: String, tombsBase: String,
-      idCol: String, asOf: Long = Long.MaxValue): DataFrame = {
-    val all = StreamingDedup.listSlices(spark, base)
-    // Same strictness as taggedSlices: an unparseable slice dir must fail
-    // LOUDLY here too, not be silently dropped by the asOf filter below —
-    // otherwise the two read paths disagree on the same stray directory.
-    val unparseable = all.filter(StreamingDedup.sliceBatch(_).isEmpty)
-    require(unparseable.isEmpty,
-      s"slice dirs not following the b<N>/c<N> naming under $base: " +
-        s"${unparseable.mkString(", ")} — refusing a read that would " +
-        "silently drop them")
-    if (asOf != Long.MaxValue) {
-      val coarse = all.filter(d => d.substring(d.lastIndexOf('/') + 1)
-        .startsWith("c") && StreamingDedup.sliceBatch(d).exists(_ > asOf))
-      require(coarse.isEmpty,
-        s"snapshot at slice $asOf is gone: compaction merged past it " +
-          s"(${coarse.mkString(", ")})")
-    }
-    val slices = all.filter(StreamingDedup.sliceBatch(_).exists(_ <= asOf))
-    require(slices.nonEmpty,
-      s"no index slices under $base at or below slice $asOf — " +
-        "build/append before querying")
-    readLiveFrom(spark, slices, tombsBase, idCol, asOf)
-  }
+    *   - `sliced`: the b/c-sliced subdirs. They share ONE slice clock: an
+    *     append writes the same id into each, and a tombstone draws its
+    *     id from the max over all of them, so it kills exactly the rows
+    *     that exist when the delete runs (LSM semantics — an id
+    *     re-appended after its delete is alive again).
+    *   - `tombs`: the tombstone subdir, one slice of `idCol` values per
+    *     delete.
+    *   - `partitionCol`: the column slice writes partition by (the IVF
+    *     cell layout — a probe prunes to its cells' directories).
+    *   - `frozen`: the build-time artifacts (centroids, codebooks, model
+    *     tables) a complete index must hold; appends never rewrite them.
+    *
+    * A layout with no sliced subdir (PCA) uses only cutover and retire. */
+  final case class Layout(family: String, sliced: Seq[String], tombs: String,
+      idCol: String, partitionCol: Option[String], frozen: Seq[String]) {
 
-  /** Tombstone-folding compaction: merge data slices `<= upTo` into one
-    * `c<upTo>` slice MINUS the rows killed by tombstones `<= upTo`, then
-    * delete those tombstone slices — every row they cover (slice id
-    * strictly below theirs, hence `<= upTo`) is in the merge, so after
-    * folding they carry no information. Tombstones `> upTo` survive and
-    * still apply to `c<upTo>` (its tag `upTo` is below their id).
-    * `purgeTombstones=false` folds without deleting — for state layouts
-    * where several subdirs share one tombstone dir ([[StreamingDedup]]'s
-    * bands+sets) and only the LAST fold may purge. Runs even for a
-    * single data slice when tombstones exist (the fold is the point);
-    * no-ops when there is nothing to merge or fold. */
-  def compactWithTombstones(spark: SparkSession, base: String,
-      tombsBase: String, upTo: Long, idCol: String,
-      purgeTombstones: Boolean = true)(
-      write: (DataFrame, String) => Unit): Unit = {
-    val posts = StreamingDedup.listSlices(spark, base)
-      .filter(StreamingDedup.sliceBatch(_).exists(_ <= upTo))
-    val tombs = StreamingDedup.listSlices(spark, tombsBase)
-      .filter(StreamingDedup.sliceBatch(_).exists(_ <= upTo))
-    if (tombs.isEmpty)
-      StreamingDedup.compactSlices(spark, base, upTo)(write)
-    else if (posts.nonEmpty) {
-      val merged = minusTombstoned(
-          taggedSlices(spark, posts).reduce(_ unionByName _),
-          taggedSlices(spark, tombs).reduce(_ unionByName _),
-          idCol, "_slice")
-        .drop("_slice").distinct()
-      StreamingDedup.publishCompacted(spark, base, upTo, merged, posts,
-        alsoDelete = if (purgeTombstones) tombs else Nil)(write)
-    } else if (purgeTombstones) {
-      // No data slice <= upTo: these tombstones provably kill nothing
-      // (any slice they could kill has a strictly smaller id, hence also
-      // <= upTo and in `posts`). Without this branch a delete-before-
-      // first-append leaves a dead tombstone slice that every future
-      // read pays the tagged anti-join for.
-      val fs = new org.apache.hadoop.fs.Path(tombsBase)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      tombs.foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    /** Visible slices of subdir `sub` (a sliced subdir or `tombs`). */
+    def slices(spark: SparkSession, dir: String, sub: String): Seq[String] =
+      listSlices(spark, s"$dir/$sub")
+
+    /** Next free id on the layout's shared slice clock. */
+    def nextSliceId(spark: SparkSession, dir: String): Long =
+      (sliced :+ tombs).map(sub => nextSliceIdUnder(spark, s"$dir/$sub")).max
+
+    /** `sliceId` when given (>= 0: a replay REPLACES that slice), else the
+      * next free id. */
+    def sliceIdOr(spark: SparkSession, dir: String, sliceId: Long): Long =
+      if (sliceId >= 0) sliceId else nextSliceId(spark, dir)
+
+    private def writeRows(rows: DataFrame, path: String): Unit = {
+      val w = rows.write.mode("overwrite")
+      partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
+    }
+
+    /** Write `rows` as slice `b<sliceId>` of subdir `sub`. */
+    def writeSlice(rows: DataFrame, dir: String, sub: String,
+        sliceId: Long): Unit =
+      writeRows(rows, s"$dir/$sub/b$sliceId")
+
+    /** APPEND `rows` as a new slice of the first sliced subdir; returns
+      * the slice id ([[sliceIdOr]]). */
+    def append(rows: DataFrame, dir: String, sliceId: Long): Long = {
+      val id = sliceIdOr(rows.sparkSession, dir, sliceId)
+      writeSlice(rows, dir, sliced.head, id)
+      id
+    }
+
+    /** DELETE — the reference's O15 staging delete (bpi_crawler.py:37-41)
+      * re-expressed for durable serving state: write tombstone slice
+      * `b<id>` of the distinct ids in the single-column frame `ids`. An
+      * unspecified `sliceId` kills exactly the state that exists NOW; an
+      * explicit one replays idempotently (overwrite mode). Readers
+      * anti-join the (usually tiny) tombstone set; [[compact]] folds it
+      * into the physical rows. Returns the slice id. */
+    def delete(ids: DataFrame, dir: String, sliceId: Long = -1L): Long = {
+      val id = sliceIdOr(ids.sparkSession, dir, sliceId)
+      ids.toDF(idCol).distinct().coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/$tombs/b$id")
+      id
+    }
+
+    /** Live rows over an explicit slice list of one sliced subdir: the
+      * plain per-slice union when no tombstone `<= asOf` exists
+      * (byte-identical plan to the pre-delete engine), the tagged
+      * anti-join otherwise. */
+    def liveFrom(spark: SparkSession, dir: String, slices: Seq[String],
+        asOf: Long = Long.MaxValue): DataFrame = {
+      val tombSlices = slicesUpTo(spark, s"$dir/$tombs", asOf)
+      if (tombSlices.isEmpty) readUnion(spark, slices)
+      else minusTombstoned(taggedUnion(spark, slices),
+        taggedUnion(spark, tombSlices), idCol)
+    }
+
+    /** All LIVE rows of the first sliced subdir ([[liveOf]]). */
+    def live(spark: SparkSession, dir: String,
+        asOf: Long = Long.MaxValue): DataFrame =
+      liveOf(spark, dir, sliced.head, asOf)
+
+    /** All LIVE rows of sliced subdir `sub`: its slices minus the ids
+      * tombstoned after them.
+      *
+      * `asOf` (default: everything) reads the SNAPSHOT at logical time
+      * `asOf` — data slices `<= asOf` minus tombstones `<= asOf`, i.e. the
+      * exact row set a reader saw after slice `asOf` landed. This is the
+      * reproducibility verb a training run needs: the corpus snapshot a
+      * model trained on stays queryable while later appends/deletes land.
+      * Snapshots live as long as their slices: a compaction whose id
+      * exceeds `asOf` has merged history past the snapshot point, and the
+      * read fails LOUDLY rather than silently serving the coarser state
+      * (compaction is the retention knob: compact only past snapshots
+      * nobody needs). A retired dir fails the same way ("no index
+      * slices"), never as a silently empty read. */
+    def liveOf(spark: SparkSession, dir: String, sub: String,
+        asOf: Long = Long.MaxValue): DataFrame = {
+      val base = s"$dir/$sub"
+      val all = listSlices(spark, base)
+      // Same strictness as taggedUnion: an unparseable slice dir must
+      // fail LOUDLY here too, not be silently dropped by the asOf filter
+      // below — otherwise the two read paths disagree on a stray dir.
+      val unparseable = all.filter(sliceBatch(_).isEmpty)
+      require(unparseable.isEmpty,
+        s"slice dirs not following the b<N>/c<N> naming under $base: " +
+          s"${unparseable.mkString(", ")} — refusing a read that would " +
+          "silently drop them")
+      if (asOf != Long.MaxValue) {
+        val coarse = all.filter(d => d.substring(d.lastIndexOf('/') + 1)
+          .startsWith("c") && sliceBatch(d).exists(_ > asOf))
+        require(coarse.isEmpty,
+          s"snapshot at slice $asOf is gone: compaction merged past it " +
+            s"(${coarse.mkString(", ")})")
+      }
+      val slices = all.filter(sliceBatch(_).exists(_ <= asOf))
+      require(slices.nonEmpty,
+        s"no index slices under $base at or below slice $asOf — " +
+          "build/append before querying")
+      liveFrom(spark, dir, slices, asOf)
+    }
+
+    /** Every tombstoned id (tombstone slices `<= asOf`, duplicates kept),
+      * as one `idCol` column; empty when no delete has run. */
+    def dead(spark: SparkSession, dir: String,
+        asOf: Long = Long.MaxValue): DataFrame = {
+      val tombSlices = slicesUpTo(spark, s"$dir/$tombs", asOf)
+      if (tombSlices.isEmpty) {
+        import spark.implicits._
+        Seq.empty[Long].toDF(idCol)
+      } else readUnion(spark, tombSlices).select(col(idCol))
+    }
+
+    /** COMPACT: merge each sliced subdir's slices `<= upTo` into one
+      * `c<upTo>` slice MINUS the rows killed by tombstones `<= upTo`, then
+      * delete those tombstone slices — every row they cover (slice id
+      * strictly below theirs, hence `<= upTo`) is in the merge, so after
+      * folding they carry no information. Tombstones `> upTo` survive and
+      * still apply to `c<upTo>` (its tag `upTo` is below their id). Query
+      * results are identical before and after.
+      *
+      * The subdirs share one tombstone dir, so only the LAST fold purges
+      * it: a crash between two folds re-folds the earlier subdir's fresh
+      * `c` slice harmlessly (its tag equals upTo, above every folded
+      * tombstone, so the re-applied anti-join matches nothing). Runs
+      * between drains — never concurrently with an active writer on the
+      * same dir. */
+    def compact(spark: SparkSession, dir: String, upTo: Long): Unit =
+      compactWith(spark, dir, upTo)(writeRows)
+
+    /** [[compact]] with the merge writer passed in — the fault-injection
+      * seam of the crash-mid-compaction tests. */
+    private[graft] def compactWith(spark: SparkSession, dir: String,
+        upTo: Long)(write: (DataFrame, String) => Unit): Unit =
+      sliced.zipWithIndex.foreach { case (sub, i) =>
+        foldSlices(spark, s"$dir/$sub", s"$dir/$tombs", upTo,
+          purge = i == sliced.size - 1)(write)
+      }
+
+    private def foldSlices(spark: SparkSession, base: String,
+        tombsBase: String, upTo: Long, purge: Boolean)(
+        write: (DataFrame, String) => Unit): Unit = {
+      val posts = slicesUpTo(spark, base, upTo)
+      val tombSlices = slicesUpTo(spark, tombsBase, upTo)
+      if (tombSlices.isEmpty) {
+        // compacting a single slice without tombstones is a no-op
+        if (posts.size > 1) publishCompacted(spark, base, upTo,
+          readUnion(spark, posts).distinct(), posts, Nil)(write)
+      } else if (posts.nonEmpty) {
+        val merged = minusTombstoned(taggedUnion(spark, posts),
+          taggedUnion(spark, tombSlices), idCol).distinct()
+        publishCompacted(spark, base, upTo, merged, posts,
+          if (purge) tombSlices else Nil)(write)
+      } else if (purge) {
+        // No data slice <= upTo: these tombstones provably kill nothing
+        // (any slice they could kill has a strictly smaller id, hence
+        // also <= upTo). Without this branch a delete-before-first-append
+        // leaves a dead tombstone slice every read pays the anti-join for.
+        val fs = new org.apache.hadoop.fs.Path(tombsBase)
+          .getFileSystem(spark.sessionState.newHadoopConf())
+        tombSlices.foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      }
+    }
+
+    /** CUTOVER the serving alias to `newDir` ([[cutoverProbed]] with no
+      * family-specific check). */
+    def cutover(spark: SparkSession, aliasDir: String, newDir: String): Unit =
+      cutoverProbed(spark, aliasDir, newDir)(())
+
+    /** CUTOVER: refuse a half-built target — every sliced subdir must hold
+      * a slice, every frozen table must load non-empty, and the family's
+      * own `probe` must not throw — then publish `newDir` through the
+      * atomic pointer ([[writePointer]]). A refused cutover leaves the
+      * alias on the live index, so a serve can never race a half-written
+      * build into production. The old target is untouched: its in-flight
+      * and as-of readers keep working until [[retire]]. */
+    def cutoverProbed(spark: SparkSession, aliasDir: String, newDir: String)(
+        probe: => Unit): Unit = {
+      sliced.foreach { sub =>
+        require(listSlices(spark, s"$newDir/$sub").nonEmpty,
+          s"cutover refused: no slices under $newDir/$sub — half-built $family")
+      }
+      frozen.foreach { sub =>
+        val ok = try !spark.read.parquet(s"$newDir/$sub").isEmpty
+          catch { case _: Exception => false }
+        require(ok, s"cutover refused: $newDir/$sub holds no table — " +
+          s"half-built $family")
+      }
+      probe
+      writePointer(aliasDir, newDir)
+    }
+
+    /** RETIRE a replaced index dir, with two loud refusals: the dir the
+      * alias still serves (paths compared normalized), and a dir that
+      * holds none of this layout's subdirs and no StateCache completion
+      * marker (a transposed or mistyped argument must not delete
+      * unrelated data).
+      *
+      * ORDERING CONTRACT (operator-owned — the slice machinery keeps no
+      * refcounts): retire only after the last reader holding a recorded
+      * as-of snapshot of `oldDir` is gone. The failure mode is LOUD, not
+      * silent: a snapshot read against a retired dir fails with
+      * [[liveOf]]'s "no index slices" refusal. */
+    def retire(aliasDir: String, oldDir: String): Unit = {
+      def norm(p: String) =
+        java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+      require(norm(resolveServing(aliasDir)) != norm(oldDir),
+        s"retire refused: the serving alias still points at $oldDir — " +
+          "cutover first")
+      require((sliced ++ frozen).exists(sub =>
+          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(oldDir, sub))) ||
+          graft.StateCache.hasCompletionMarker(oldDir),
+        s"retire refused: $oldDir does not look like a $family dir — " +
+          "refusing to delete what this verb does not own " +
+          "(transposed or mistyped argument?)")
+      graft.TempDirs.deleteTree(oldDir)
     }
   }
 }

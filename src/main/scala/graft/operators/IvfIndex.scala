@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QuerySpec, Tables, TempDirs}
-import graft.streaming.StreamingDedup
 
 /** Persisted IVF (inverted-file) ANN index — build once, query repeatedly,
   * append as the corpus grows. The lifecycle the transient [[Similarity.topKIvf]]
@@ -12,9 +11,8 @@ import graft.streaming.StreamingDedup
   * fine for a one-shot analytic query but wrong for a serving deployment where
   * the index is built once over 100 TB and then answers query streams.
   *
-  * On-disk layout under `dir` (the [[StreamingDedup]] b/c slice convention,
-  * shared via [[StreamingDedup.nextSliceId]]/[[StreamingDedup.compactSlices]]
-  * so the two persisted-state implementations cannot drift):
+  * On-disk layout under `dir` ([[layout]] — the shared b/c slice
+  * convention, so the persisted-state implementations cannot drift):
   *
   *   - `dir/centroids/` — one tiny parquet of (cell, centroid), written ONCE
   *     at build time and frozen; appends assign against these, never retrain
@@ -24,18 +22,20 @@ import graft.streaming.StreamingDedup
   *     partition directories at the scan — at 100 TB the scan reads
   *     probes/cells of the corpus (the IVF contract) straight off the
   *     directory layout, no filter evaluation over cold data.
-  *   - compaction merges slices `b0..bN` into `c<N>` ([[compact]]), keeping
-  *     listing + footer overhead flat as append count grows.
+  *   - `dir/tombstones/b<N>/` — deleted vec_ids ([[IndexFiles.Layout.delete]]);
+  *     compaction merges slices `b0..bN` into `c<N>`, folding them.
   *
-  * Replay safety matches [[StreamingDedup.appendBatch]]: each append writes
+  * Replay safety matches the streaming LSH index: each append writes
   * its own overwrite-mode slice dir keyed by slice id, so a retried append
   * replaces its partial output instead of doubling it.
   */
 object IvfIndex {
 
-  private def postingsDir(dir: String) = s"$dir/postings"
-  private def centroidsDir(dir: String) = s"$dir/centroids"
-  private[graft] def tombstonesDir(dir: String) = s"$dir/tombstones"
+  /** The IVF layout, shared verbatim by the LI cascade's feature-vector
+    * index. */
+  private[graft] val layout = IndexFiles.Layout("persisted ANN index",
+    sliced = Seq("postings"), tombs = "tombstones", idCol = "vec_id",
+    partitionCol = Some("cell"), frozen = Seq(IndexFiles.Centroids))
 
   /** Train centroids from the bootstrap corpus (or freeze the given
     * ones) and persist them WITHOUT writing any postings — the init step
@@ -44,7 +44,7 @@ object IvfIndex {
   def init(emb: DataFrame, dir: String,
       centroids: Option[Seq[Array[Float]]] = None): Seq[Array[Float]] = {
     val cents = centroids.getOrElse(Similarity.learnCentroids(emb))
-    IndexFiles.writeCentroids(emb.sparkSession, centroidsDir(dir), cents)
+    IndexFiles.writeCentroids(emb.sparkSession, dir, cents)
     cents
   }
 
@@ -53,55 +53,17 @@ object IvfIndex {
     * centroid-identical indexes) and write slice b0 of the postings. */
   def build(emb: DataFrame, dir: String,
       centroids: Option[Seq[Array[Float]]] = None): Unit =
-    appendSlice(emb, dir, init(emb, dir, centroids), sliceId = 0L)
+    layout.append(encode(emb, init(emb, dir, centroids)), dir, 0L)
 
   /** Append a new corpus slice: assign against the FROZEN centroids and
     * write a new postings slice. Returns the slice id. Passing an id
     * already in the index replaces that slice (idempotent replay). */
-  def append(emb: DataFrame, dir: String, sliceId: Long = -1L): Long = {
-    val spark = emb.sparkSession
-    val id = if (sliceId >= 0) sliceId
-      else IndexFiles.nextSliceIdAcross(spark,
-        Seq(postingsDir(dir), tombstonesDir(dir)))
-    appendSlice(emb, dir, loadCentroids(spark, dir), id)
-    id
-  }
+  def append(emb: DataFrame, dir: String, sliceId: Long = -1L): Long =
+    layout.append(encode(emb, IndexFiles.loadCentroids(emb.sparkSession, dir)),
+      dir, sliceId)
 
-  /** Forget vectors — the persisted index's DELETE verb (the reference's
-    * O15 staging delete re-expressed for durable serving state; the dedup
-    * tier's dropped-ids list is the natural input). Writes a tombstone
-    * slice under the shared b/c convention: [[topK]] anti-joins it,
-    * [[compact]] folds it into the physical postings. The tombstone's
-    * slice id comes from the clock shared with the postings, so it kills
-    * exactly the postings that exist NOW — a later [[append]] of the same
-    * vec_id is alive again. Passing an explicit `sliceId` replays
-    * idempotently (overwrite-mode slice). Returns the slice id. */
-  def delete(ids: DataFrame, dir: String, sliceId: Long = -1L): Long =
-    IndexFiles.delete(ids, "vec_id", postingsDir(dir), tombstonesDir(dir),
-      sliceId)
-
-  private def appendSlice(emb: DataFrame, dir: String,
-      cents: Seq[Array[Float]], sliceId: Long): Unit =
+  private def encode(emb: DataFrame, cents: Seq[Array[Float]]): DataFrame =
     Similarity.assignedCells(emb.select(col("vec_id"), col("embedding")), cents)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${postingsDir(dir)}/b$sliceId")
-
-  /** Merge postings slices `<= upToSliceId` into one `c<id>` slice — the
-    * [[StreamingDedup.compactSlices]] machinery with a partitioned writer,
-    * so the compacted slice keeps the cell directory layout (and with it
-    * partition pruning). Folds tombstones `<= upToSliceId` into the
-    * physical rows and removes them ([[IndexFiles.compactWithTombstones]]).
-    * Bit-identical QUERY results before and after: postings carry no
-    * slice-order semantics once the tombstones they answer to are gone. */
-  def compact(spark: SparkSession, dir: String, upToSliceId: Long): Unit =
-    IndexFiles.compactWithTombstones(spark, postingsDir(dir),
-      tombstonesDir(dir), upToSliceId, "vec_id") { (merged, dst) =>
-        merged.write.mode("overwrite").partitionBy("cell").parquet(dst)
-    }
-
-  /** The frozen centroid table, cell-ordered. */
-  def loadCentroids(spark: SparkSession, dir: String): Seq[Array[Float]] =
-    IndexFiles.loadCentroids(spark, centroidsDir(dir))
 
   /** MERGE persisted shard indexes into one serving index — the
     * shard-then-merge build every large deployment runs: index a 100 TB
@@ -128,7 +90,7 @@ object IvfIndex {
     * one that also folds tombstones. */
   def merge(spark: SparkSession, dst: String, srcs: Seq[String]): Unit = {
     require(srcs.nonEmpty, "merge needs at least one source index")
-    val cents = srcs.map(loadCentroids(spark, _))
+    val cents = srcs.map(IndexFiles.loadCentroids(spark, _))
     cents.tail.zip(srcs.tail).foreach { case (c, src) =>
       require(c.length == cents.head.length &&
           c.zip(cents.head).forall { case (a, b) => java.util.Arrays.equals(a, b) },
@@ -145,33 +107,22 @@ object IvfIndex {
     srcs.foreach { src =>
       // persist: the emptiness probe and the write would otherwise each
       // run the full slice-union + tombstone anti-join plan
-      val live = postings(spark, src)
+      val live = layout.live(spark, src)
         .select(col("vec_id"), col("embedding"), col("cell")).persist()
       // A fully-tombstoned shard contributes nothing — and writing its
       // EMPTY slice would leave a part-less parquet dir the slice reader
       // refuses to infer a schema from. Skip it instead of crashing every
       // later read of the merged index.
       if (live.count() > 0) {
-        live.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"${postingsDir(dst)}/b$slice")
+        layout.append(live, dst, slice)
         slice += 1
       }
       live.unpersist()
     }
     require(slice > 0,
       "merge produced an empty index — every source was fully tombstoned")
-    IndexFiles.writeCentroids(spark, centroidsDir(dst), cents.head)
+    IndexFiles.writeCentroids(spark, dst, cents.head)
   }
-
-  /** All LIVE postings across slices (tombstoned vec_ids excluded; the
-    * plain multi-slice union when no delete ever ran). `asOf` reads the
-    * snapshot at that slice id instead ([[IndexFiles.readLive]]) — the
-    * index state a past training run queried, kept addressable while
-    * later appends/deletes land. */
-  def postings(spark: SparkSession, dir: String,
-      asOf: Long = Long.MaxValue): DataFrame =
-    IndexFiles.readLive(spark, postingsDir(dir), tombstonesDir(dir), "vec_id",
-      asOf)
 
   /** Answer a query frame (query_id, qv) against the persisted index:
     * rank cells per query through the shared [[Similarity.rankedCells]]
@@ -183,15 +134,8 @@ object IvfIndex {
     * that slice id — centroids are frozen at build time, so a snapshot
     * read needs no historical centroid state, only the slice filter. */
   def topK(spark: SparkSession, dir: String, queries: DataFrame,
-      asOf: Long = Long.MaxValue): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    probedScores(spark, dir, queries, asOf)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= Similarity.TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+      asOf: Long = Long.MaxValue): DataFrame =
+    Similarity.rankTopK(probedScores(spark, dir, queries, asOf))
 
   /** The probed (query_id, vec_id, score) candidate stream behind the
     * persisted index's query verbs — factored from [[topK]] so cascades
@@ -200,7 +144,7 @@ object IvfIndex {
     * differing. */
   private[operators] def probedScores(spark: SparkSession, dir: String,
       queries: DataFrame, asOf: Long = Long.MaxValue): DataFrame = {
-    val cents = loadCentroids(spark, dir)
+    val cents = IndexFiles.loadCentroids(spark, dir)
     val probes = Similarity.rankedCells(
         queries.select(col("query_id").as("vec_id"), col("qv").as("embedding")),
         cents)
@@ -211,7 +155,7 @@ object IvfIndex {
     // not a data collect.
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0))
-    postings(spark, dir, asOf)
+    layout.live(spark, dir, asOf)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -275,7 +219,7 @@ object IvfIndex {
     graft.StateCache.stateDir(dir, "ivf/build_del7", "graft_ivfdel") { idx =>
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       build(emb, idx)
-      delete(deleteSet(emb), idx)
+      layout.delete(deleteSet(emb), idx)
       ()
     }
 
@@ -348,13 +292,10 @@ object IvfIndex {
     * live read stops excluding tombstoned ids, this query diverges. */
   def indexStatsQuery(s: SparkSession, dir: String): DataFrame = {
     val idx = builtDeletedIndex(s, dir)
-    val spark = s
-    val nData = StreamingDedup.listSlices(spark, postingsDir(idx)).size
-    val nTomb = StreamingDedup.listSlices(spark, tombstonesDir(idx)).size
-    // tombstones enumerate through the shared slice parser (readSlices),
-    // not a raw b* glob — compacted c<N> tombstone forms stay counted
-    postings(spark, idx).agg(count(lit(1)).as("n_live"))
-      .crossJoin(IndexFiles.readSlices(spark, tombstonesDir(idx))
+    val nData = layout.slices(s, idx, layout.sliced.head).size
+    val nTomb = layout.slices(s, idx, layout.tombs).size
+    layout.live(s, idx).agg(count(lit(1)).as("n_live"))
+      .crossJoin(layout.dead(s, idx)
         .agg(count_distinct(col("vec_id")).as("n_dead")))
       .select(lit(nData.toLong).as("n_data_slices"),
         lit(nTomb.toLong).as("n_tombstone_slices"),
@@ -387,7 +328,7 @@ object IvfIndex {
     * drift spec can build a deliberately skewed index (spread bootstrap,
     * then a hot-spot append) and pin that the flag actually fires. */
   private[graft] def cellBalanceOf(s: SparkSession, idx: String): DataFrame = {
-    val pc = postings(s, idx).groupBy(col("cell"))
+    val pc = layout.live(s, idx).groupBy(col("cell"))
       .agg(count(lit(1)).as("n"))
     pc.agg(
         count(lit(1)).cast("long").as("n_cells"),
@@ -475,7 +416,7 @@ object IvfIndex {
     * fresh centroids. */
   def retrain(spark: SparkSession, oldDir: String, newDir: String,
       key: String = RetrainCentroidsKey): Seq[Array[Float]] = {
-    val live = postings(spark, oldDir)
+    val live = layout.live(spark, oldDir)
       .select(col("vec_id"), col("embedding")).persist()
     try {
       val cents = Similarity.learnCentroidsAt(live,
@@ -485,84 +426,12 @@ object IvfIndex {
       // vector deleted and later re-appended is live (its append slice
       // postdates the tombstone), and blind-carrying its id would kill
       // it here — the new tombstone slice postdates the rebuilt b0.
-      val tombSlices = StreamingDedup.listSlices(spark, tombstonesDir(oldDir))
-      if (tombSlices.nonEmpty) {
-        val dead = IndexFiles.readSlices(spark, tombstonesDir(oldDir))
-          .select(col("vec_id")).distinct()
-          .join(live.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        if (!dead.isEmpty) delete(dead, newDir)
-      }
+      val dead = layout.dead(spark, oldDir).distinct()
+        .join(live.select(col("vec_id")), Seq("vec_id"), "left_anti")
+      if (!dead.isEmpty) layout.delete(dead, newDir)
       cents
     } finally live.unpersist()
   }
-
-  /** CUT SERVING OVER to `newDir` — the step that closes the retrain →
-    * serve loop (VERDICT r18 #3): [[retrain]] writes a fresh index and
-    * used to leave the swap as "the serving owner's pointer swap" by
-    * convention; this verb makes it code. Validates the target is a
-    * COMPLETE index first — loadable centroids AND at least one postings
-    * slice — so a serve can never race a half-written build into
-    * production (the refuse-loudly rule [[merge]] follows), then
-    * publishes via [[IndexFiles.writePointer]]'s write-then-rename.
-    * `oldDir` (whatever the alias pointed at before) is untouched: its
-    * in-flight serves and as-of snapshot reads keep working; retiring it
-    * is a separate decision after its last snapshot reader is gone.
-    * The POINTER is layout-agnostic (it stores a path) and this verb's
-    * completeness check reads the centroids/ + postings/ layout, which
-    * [[IvfPqIndex]] shares; when the target carries a codebooks/ dir
-    * (the compressed layout) that table is probed too (ADVICE r19 — a
-    * half-deleted IVFPQ dir must refuse here, not fail at serve time
-    * after the alias already swapped), and [[IvfPqIndex.cutover]]
-    * additionally REQUIRES it. [[PqIndex]]'s layout differs (codes/ +
-    * codebooks/, no centroids table): cutting one over is
-    * [[IndexFiles.writePointer]] plus that layout's own completeness
-    * probe, not this verb. */
-  def cutover(spark: SparkSession, aliasDir: String, newDir: String): Unit =
-    IndexFiles.cutoverTo(aliasDir, newDir) {
-      val cents = loadCentroids(spark, newDir)
-      require(cents.nonEmpty, s"cutover refused: $newDir has no centroid table")
-      require(StreamingDedup.listSlices(spark, postingsDir(newDir)).nonEmpty,
-        s"cutover refused: $newDir has no postings slice — half-built index")
-      val cbDir = java.nio.file.Paths.get(newDir, "codebooks")
-      if (java.nio.file.Files.isDirectory(cbDir)) {
-        val ok = try IndexFiles.loadCodebooks(spark, cbDir.toString).nonEmpty
-          catch { case _: Exception => false }
-        require(ok, s"cutover refused: $newDir/codebooks exists but holds " +
-          "no codebook table — half-built compressed index")
-      }
-    }
-
-  /** The alias's current target — what a serving deployment resolves
-    * before every query batch. */
-  def resolveServing(aliasDir: String): String =
-    IndexFiles.readPointer(aliasDir)
-
-  /** RETIRE a replaced index dir — the END of the cutover loop: after
-    * [[cutover]] repoints the alias, the old dir stays on disk for
-    * in-flight queries and as-of snapshot readers; once the serving
-    * owner decides its last snapshot reader is gone (a retention
-    * policy, like the compaction verbs' — the slice machinery keeps no
-    * refcounts), this verb deletes it. Two loud refusals
-    * ([[IndexFiles.retireTarget]], ADVICE r19): deleting the index the
-    * alias STILL SERVES (paths compared normalized, so a relative-vs-
-    * absolute spelling cannot sneak past), and deleting a dir that does
-    * not even look like an ANN index (no centroids/ table and no
-    * StateCache completion marker — a transposed argument must not
-    * delete unrelated data).
-    *
-    * Retire-then-as-of ordering is OPERATOR-OWNED (VERDICT r19 #6): a
-    * recorded snapshot id addresses slices inside the dir, so retiring
-    * before the snapshot's last reader is gone breaks that reader — but
-    * it breaks LOUDLY ([[postings]]' "no index slices under …" refusal),
-    * never by silently serving an empty or partial state; pinned in
-    * IvfIndexSpec. A dir still pointed at by some OTHER alias is likewise
-    * the owner's bookkeeping — one maintenance owner per index family is
-    * the single-writer contract the pointer already assumes. */
-  def retire(aliasDir: String, oldDir: String): Unit =
-    IndexFiles.retireTarget(aliasDir, oldDir, "persisted ANN index")(
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(oldDir, "centroids")) ||
-        graft.StateCache.hasCompletionMarker(oldDir))
 
   /** The retrained twin of [[builtDeletedIndex]] — build, forget the
     * [[deleteSet]], then [[retrain]] into a fresh index; built once per
@@ -584,9 +453,10 @@ object IvfIndex {
     topK(s, retrainedIndex(s, dir), standardQueries(s, dir))
 
   /** Declared query — the CUTOVER lifecycle end-to-end: build, forget,
-    * retrain, [[cutover]] the serving alias to the retrained index, then
-    * answer the standard query set THROUGH the pointer
-    * ([[resolveServing]]) — the full maintenance loop a deployment runs
+    * retrain, cut the serving alias over to the retrained index
+    * ([[IndexFiles.Layout.cutover]]: centroids load and a postings slice
+    * exists, or the alias stays put), then answer the standard query set
+    * THROUGH the pointer — the full maintenance loop a deployment runs
     * (audit pages → retrain → atomic swap → serves follow), with the
     * serve reading the alias rather than a hard-coded dir. Equals
     * [[topKIvfRetrained]] row for row (the pointer resolves to the
@@ -596,9 +466,9 @@ object IvfIndex {
   def topKIvfCutover(s: SparkSession, dir: String): DataFrame = {
     val alias = graft.StateCache.stateDir(dir, "ivf/cutover_alias",
         "graft_ivfalias") { a =>
-      cutover(s, a, retrainedIndex(s, dir))
+      layout.cutover(s, a, retrainedIndex(s, dir))
     }
-    topK(s, resolveServing(alias), standardQueries(s, dir))
+    topK(s, IndexFiles.resolveServing(alias), standardQueries(s, dir))
   }
 
   /** Declared query — streaming ANN serving, the serving twin of

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QuerySpec, Tables, TempDirs}
-import graft.streaming.StreamingDedup
 
 /** Persisted IVF+PQ index — the composition a 100 TB ANN deployment
   * actually runs (the FAISS `IndexIVFPQ` shape, in its `by_residual=true`
@@ -42,10 +41,10 @@ object IvfPqIndex {
   val IvfPqProbes = 6
   val IvfPqRerank = 80
 
-  private def postingsDir(dir: String) = s"$dir/postings"
-  private def centroidsDir(dir: String) = s"$dir/centroids"
-  private def codebooksDir(dir: String) = s"$dir/codebooks"
-  private def tombstonesDir(dir: String) = s"$dir/tombstones"
+  private[graft] val layout = IndexFiles.Layout("persisted IVFPQ index",
+    sliced = Seq("postings"), tombs = "tombstones", idCol = "vec_id",
+    partitionCol = Some("cell"),
+    frozen = Seq(IndexFiles.Centroids, IndexFiles.Codebooks))
 
   /** Build: train IVF centroids and PQ codebooks from the corpus (or
     * freeze the given ones), write postings slice b0. */
@@ -55,33 +54,21 @@ object IvfPqIndex {
     val spark = emb.sparkSession
     val cents = centroids.getOrElse(Similarity.learnCentroids(emb))
     val cbs = codebooks.getOrElse(Similarity.learnResidualPqCodebooks(emb, cents))
-    IndexFiles.writeCentroids(spark, centroidsDir(dir), cents)
-    IndexFiles.writeCodebooks(spark, codebooksDir(dir), cbs)
-    appendSlice(emb, dir, cents, cbs, sliceId = 0L)
+    IndexFiles.writeCentroids(spark, dir, cents)
+    IndexFiles.writeCodebooks(spark, dir, cbs)
+    layout.append(encode(emb, cents, cbs), dir, 0L)
   }
 
   /** Append a corpus slice against the FROZEN centroids and codebooks.
     * Passing an existing id replaces that slice (idempotent replay). */
   def append(emb: DataFrame, dir: String, sliceId: Long = -1L): Long = {
     val spark = emb.sparkSession
-    val id = if (sliceId >= 0) sliceId
-      else IndexFiles.nextSliceIdAcross(spark,
-        Seq(postingsDir(dir), tombstonesDir(dir)))
-    appendSlice(emb, dir, loadCentroids(spark, dir),
-      loadCodebooks(spark, dir), id)
-    id
+    layout.append(encode(emb, IndexFiles.loadCentroids(spark, dir),
+      IndexFiles.loadCodebooks(spark, dir)), dir, sliceId)
   }
 
-  /** Forget vectors — the shared tombstone DELETE verb ([[IvfIndex.delete]]
-    * semantics, same slice clock): [[topK]] anti-joins the tombstones,
-    * [[compact]] folds them into the physical postings. */
-  def delete(ids: DataFrame, dir: String, sliceId: Long = -1L): Long =
-    IndexFiles.delete(ids, "vec_id", postingsDir(dir), tombstonesDir(dir),
-      sliceId)
-
-  private def appendSlice(emb: DataFrame, dir: String,
-      cents: Seq[Array[Float]], cbs: Array[Array[Double]],
-      sliceId: Long): Unit =
+  private def encode(emb: DataFrame, cents: Seq[Array[Float]],
+      cbs: Array[Array[Double]]): DataFrame =
     // encode uses the PURE normalization: recording literals belongs to
     // TRAIN time (build/retrain pick the key), so an append against a
     // retrained index can never overwrite the serving key's replay
@@ -92,30 +79,6 @@ object IvfPqIndex {
           Similarity.l2NormalizedCentroids(cents), cbs,
           Similarity.PqSubspaces, Similarity.PqCodebookSize).as("codes"),
         col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${postingsDir(dir)}/b$sliceId")
-
-  /** Merge postings slices `<= upToSliceId`, keeping the cell layout and
-    * folding (and removing) tombstones `<= upToSliceId`. */
-  def compact(spark: SparkSession, dir: String, upToSliceId: Long): Unit =
-    IndexFiles.compactWithTombstones(spark, postingsDir(dir),
-      tombstonesDir(dir), upToSliceId, "vec_id") { (merged, dst) =>
-        merged.write.mode("overwrite").partitionBy("cell").parquet(dst)
-    }
-
-  def loadCentroids(spark: SparkSession, dir: String): Seq[Array[Float]] =
-    IndexFiles.loadCentroids(spark, centroidsDir(dir))
-
-  def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Double]] =
-    IndexFiles.loadCodebooks(spark, codebooksDir(dir))
-
-  /** All LIVE persisted (vec_id, codes, cell) postings across slices
-    * (tombstoned vec_ids excluded). `asOf` reads the snapshot at that
-    * slice id ([[IndexFiles.readLive]]). */
-  def postings(spark: SparkSession, dir: String,
-      asOf: Long = Long.MaxValue): DataFrame =
-    IndexFiles.readLive(spark, postingsDir(dir), tombstonesDir(dir), "vec_id",
-      asOf)
 
   /** Answer a query frame (query_id, qv): probe cells via the shared
     * [[Similarity.rankedCells]], prune the postings scan to the probed
@@ -126,7 +89,7 @@ object IvfPqIndex {
     * codebooks, so a snapshot needs only the slice filter). */
   def topK(spark: SparkSession, dir: String, queries: DataFrame,
       corpus: DataFrame, asOf: Long = Long.MaxValue): DataFrame = {
-    val cents = loadCentroids(spark, dir)
+    val cents = IndexFiles.loadCentroids(spark, dir)
     // cell_score = cos(q, centroid) = dot(q̂, ĉ) — exactly the residual
     // ADC's per-(query, cell) offset, already computed by the probe
     // ranking; carrying it through the join costs nothing.
@@ -138,13 +101,12 @@ object IvfPqIndex {
         col("cell_score").as("adc_base"))
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0))
-    val queryLuts = Similarity.pqQueryLuts(queries, loadCodebooks(spark, dir))
+    val queryLuts = Similarity.pqQueryLuts(queries,
+      IndexFiles.loadCodebooks(spark, dir))
     val approx = Similarity.adcScore
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id").asc)
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val candidates = postings(spark, dir, asOf)
+    val candidates = layout.live(spark, dir, asOf)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .join(broadcast(probes), Seq("cell"))
       .join(broadcast(queryLuts), Seq("query_id"))
@@ -154,14 +116,10 @@ object IvfPqIndex {
       .withColumn("ar", row_number().over(wAdc))
       .filter(col("ar") <= IvfPqRerank)
       .select(col("query_id"), col("qv"), col("vec_id"))
-    corpus.select(col("vec_id"), col("embedding"))
+    Similarity.rankTopK(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        Similarity.cos(col("qv"), col("embedding")).as("score"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= Similarity.TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+        Similarity.cos(col("qv"), col("embedding")).as("score")))
   }
 
   /** Declared query: build the persisted IVF+PQ index from the embeddings
@@ -210,7 +168,7 @@ object IvfPqIndex {
         val emb = Tables.embeddings(s, dir)
           .select(col("vec_id"), col("embedding"))
         build(emb, idx)
-        delete(IvfIndex.deleteSet(emb), idx)
+        layout.delete(IvfIndex.deleteSet(emb), idx)
         ()
     }
 
@@ -267,7 +225,7 @@ object IvfPqIndex {
     * deleted-then-re-appended vector is live and must NOT be killed by
     * a blind carry — the [[IvfIndex.retrain]] edge case, same rule).
     * `oldDir` is untouched: snapshots stay addressable; cutover is the
-    * serving pointer swap ([[IndexFiles.writePointer]]).
+    * serving pointer swap.
     *
     * Shape at scale: one partition-pruned live read, one id-equi-join
     * against the corpus (shuffle on vec_id — AQE-planned, linear), the
@@ -277,7 +235,7 @@ object IvfPqIndex {
       corpus: DataFrame, centKey: String = RetrainCentroidsKey,
       ncKey: String = RetrainNCentsKey,
       cbKey: String = RetrainCodebooksKey): Unit = {
-    val liveIds = postings(spark, oldDir).select(col("vec_id")).persist()
+    val liveIds = layout.live(spark, oldDir).select(col("vec_id")).persist()
     val live = corpus.select(col("vec_id"), col("embedding"))
       .join(liveIds, Seq("vec_id")).persist()
     try {
@@ -290,13 +248,9 @@ object IvfPqIndex {
       val cbs = Similarity.learnResidualPqCodebooksAt(live, cents, cbKey,
         ncKey)
       build(live, newDir, Some(cents), Some(cbs))
-      val tombSlices = StreamingDedup.listSlices(spark, tombstonesDir(oldDir))
-      if (tombSlices.nonEmpty) {
-        val dead = IndexFiles.readSlices(spark, tombstonesDir(oldDir))
-          .select(col("vec_id")).distinct()
-          .join(liveIds, Seq("vec_id"), "left_anti")
-        if (!dead.isEmpty) { delete(dead, newDir); () }
-      }
+      val dead = layout.dead(spark, oldDir).distinct()
+        .join(liveIds, Seq("vec_id"), "left_anti")
+      if (!dead.isEmpty) { layout.delete(dead, newDir); () }
     } finally { live.unpersist(); liveIds.unpersist(); () }
   }
 
@@ -320,29 +274,12 @@ object IvfPqIndex {
   def topKIvfPqRetrained(s: SparkSession, dir: String): DataFrame =
     topK(s, retrainedIndex(s, dir), standardQueries(s, dir), corpusOf(s, dir))
 
-  /** The compressed layout's own CUTOVER verb: the shared
-    * [[IvfIndex.cutover]] probe (centroids + postings, and the
-    * conditional codebooks-table check when the dir exists) plus a HARD
-    * codebooks-dir requirement — a target whose codebooks/ dir vanished
-    * ENTIRELY would pass the generic probe and only fail at serve time,
-    * after the alias already swapped (ADVICE r19); this wrapper refuses
-    * it up front. The existence check here is a cheap stat: the TABLE
-    * itself is validated by the generic verb's conditional probe (which
-    * fires exactly because the dir exists), so the codebooks parquet is
-    * read once per cutover, not twice. */
-  def cutover(spark: SparkSession, aliasDir: String, newDir: String): Unit = {
-    require(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(newDir, "codebooks")),
-      s"cutover refused: $newDir has no codebooks dir — " +
-        "not a complete IVFPQ index")
-    IvfIndex.cutover(spark, aliasDir, newDir)
-  }
-
   /** Declared query — the CUTOVER lifecycle on the COMPRESSED index:
     * build, forget, retrain (fresh centroids AND codebooks), swap the
-    * serving alias atomically ([[cutover]] — the shared pointer verb
-    * behind [[IvfIndex.cutover]] plus the compressed layout's hard
-    * codebooks probe), then answer the standard query set
+    * serving alias atomically ([[IndexFiles.Layout.cutover]] — this
+    * layout declares both frozen tables, so a target whose centroids or
+    * codebooks are missing or empty refuses), then answer the standard
+    * query set
     * THROUGH the pointer. The full maintenance loop for the index a
     * 100 TB deployment actually runs, with the serve reading the alias
     * rather than a hard-coded dir; equals [[topKIvfPqRetrained]] row
@@ -351,9 +288,9 @@ object IvfPqIndex {
   def topKIvfPqCutover(s: SparkSession, dir: String): DataFrame = {
     val alias = graft.StateCache.stateDir(dir, "ivfpq/cutover_alias",
         "graft_ivfpqalias") { a =>
-      cutover(s, a, retrainedIndex(s, dir))
+      layout.cutover(s, a, retrainedIndex(s, dir))
     }
-    topK(s, IvfIndex.resolveServing(alias), standardQueries(s, dir),
+    topK(s, IndexFiles.resolveServing(alias), standardQueries(s, dir),
       corpusOf(s, dir))
   }
 
@@ -377,9 +314,10 @@ object IvfPqIndex {
     * serving recall. */
   def probeSweep(s: SparkSession, dir: String): DataFrame = {
     val idx = builtIndex(s, dir)
-    val cents = loadCentroids(s, idx)
+    val cents = IndexFiles.loadCentroids(s, idx)
     val queries = standardQueries(s, dir)
-    val queryLuts = Similarity.pqQueryLuts(queries, loadCodebooks(s, idx))
+    val queryLuts = Similarity.pqQueryLuts(queries,
+      IndexFiles.loadCodebooks(s, idx))
     Similarity.probeSweepOver(s, dir, queries, cents, 2 * IvfPqProbes) {
       (probes0, budgets) =>
         // qv rides queryLuts on this tier (the per-query LUT join the ADC
@@ -388,7 +326,7 @@ object IvfPqIndex {
         val probes = probes0.drop("qv")
         val probedCells = probes.select(col("cell")).distinct()
           .collect().map(_.getInt(0))
-        val adc = postings(s, idx)
+        val adc = layout.live(s, idx)
           .filter(col("cell").isin(probedCells.map(Int.box): _*))
           .join(broadcast(probes), Seq("cell"))
           .join(broadcast(queryLuts), Seq("query_id"))

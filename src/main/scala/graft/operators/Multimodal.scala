@@ -707,7 +707,7 @@ object Multimodal {
         graft.streaming.StreamingDedup.appendMediaBatch(
           hashes.filter(col("media_id") > cut1 && col("media_id") <= cut2),
           state, out)
-        graft.streaming.StreamingDedup.compactState(s, state, 1)
+        graft.streaming.StreamingDedup.layout.compact(s, state, 1)
         graft.streaming.StreamingDedup.appendMediaBatch(
           hashes.filter(col("media_id") > cut2), state, out)
       }
@@ -792,9 +792,9 @@ object Multimodal {
       graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
         graft.streaming.StreamingDedup
           .appendMediaBatch(hashes.filter(!isEval), state, sink).count()
-        graft.streaming.StreamingDedup.deleteFromIndex(s, state,
+        graft.streaming.StreamingDedup.layout.delete(
           hashes.filter(!isEval && col("media_id") % 5 === 2)
-            .select(col("media_id")))
+            .select(col("media_id")), state)
       }
       ()
     }
@@ -822,12 +822,12 @@ object Multimodal {
           ()
         }
       }
-      graft.streaming.StreamingDedup.cutoverIndex(s, a, rebuilt)
+      graft.streaming.StreamingDedup.layout.cutover(s, a, rebuilt)
     }
     val out = graft.TempDirs.scoped("graft_mmcut_out")
     graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
       graft.streaming.StreamingDedup.serveMediaBatch(hashes.filter(isEval),
-        graft.streaming.StreamingDedup.resolveServing(alias), out, 0L)
+        IndexFiles.resolveServing(alias), out, 0L)
     }
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
@@ -857,8 +857,9 @@ object Multimodal {
         graft.streaming.StreamingDedup
           .appendMediaBatch(train.filter(col("media_id") > cut), state, sink)
           .count()
-        graft.streaming.StreamingDedup.deleteFromIndex(s, state,
-          train.filter(col("media_id") % 5 === 2).select(col("media_id")))
+        graft.streaming.StreamingDedup.layout.delete(
+          train.filter(col("media_id") % 5 === 2).select(col("media_id")),
+          state)
       }
       ()
     }

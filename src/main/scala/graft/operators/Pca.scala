@@ -474,6 +474,13 @@ object Pca {
       writeIndex(s, dir, d, mean, basis)
     }
 
+  /** The persisted PCA index: two frozen tables and no slices, so only
+    * the layout's cutover and retire apply (no delete verb writes its
+    * tombstone subdir). */
+  private[graft] val layout = IndexFiles.Layout("PCA index", sliced = Nil,
+    tombs = "tombstones", idCol = "vec_id", partitionCol = None,
+    frozen = Seq("model", "proj"))
+
   /** One persisted-index writer behind the build and the retrain: the
     * trained (mean, basis) as the model table, the projected corpus as
     * the serving table. */
@@ -600,44 +607,25 @@ object Pca {
     * over the corpus as it exists NOW ([[freshBasis]] — the exact train
     * the audit's comparison arm priced), written as a complete NEW index
     * dir (model + projected table) while the serving dir stays
-    * untouched for in-flight readers; the swap is [[cutover]]. */
+    * untouched for in-flight readers; the swap is the layout's cutover
+    * with [[checkModel]]. */
   private def retrainedPcaIndex(s: SparkSession, dir: String): String =
     graft.StateCache.stateDir(dir, "pca/index_retrained", "graft_pcart") { d =>
       val (mean, basis) = freshBasis(s, dir)
       writeIndex(s, dir, d, mean, basis)
     }
 
-  /** CUT SERVING OVER to a retrained PCA index — the shared atomic
-    * pointer at this family's layout ([[IndexFiles.cutoverTo]]):
-    * completeness probe = the model table loads with the mean row plus
-    * exactly [[PcaDims]] basis rows AND the projected table holds rows;
-    * a half-built retrain refuses loudly with the alias left on the
-    * live index. */
-  def cutover(s: SparkSession, aliasDir: String, newIdx: String): Unit =
-    IndexFiles.cutoverTo(aliasDir, newIdx) {
-      val ok = try {
-        val (mean, basis) = loadModelFrom(s, newIdx)
-        mean.nonEmpty && basis.length == PcaDims &&
-          basis.forall(_.length == mean.length) &&
-          !s.read.parquet(s"$newIdx/proj").isEmpty
-      } catch { case _: Exception => false }
-      require(ok, s"cutover refused: $newIdx is not a complete PCA index " +
-        s"(model with mean + $PcaDims basis rows, non-empty projection)")
-    }
-
-  /** The alias's current serving target. */
-  def resolveServing(aliasDir: String): String =
-    IndexFiles.readPointer(aliasDir)
-
-  /** RETIRE a replaced PCA index dir — the shared guards
-    * ([[IndexFiles.retireTarget]]): refuses the dir the alias still
-    * serves and anything without this family's model table (or a
-    * StateCache completion marker). */
-  def retire(aliasDir: String, oldIdx: String): Unit =
-    IndexFiles.retireTarget(aliasDir, oldIdx, "PCA index")(
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(oldIdx, "model")) ||
-        graft.StateCache.hasCompletionMarker(oldIdx))
+  /** The PCA family's own cutover check, on top of the layout's (both
+    * tables load non-empty): the model table holds the mean row plus
+    * exactly [[PcaDims]] basis rows of the mean's width. A half-built
+    * retrain refuses with the alias left on the live index. */
+  private[graft] def checkModel(s: SparkSession, idx: String): Unit = {
+    val (mean, basis) = loadModelFrom(s, idx)
+    require(mean.nonEmpty && basis.length == PcaDims &&
+        basis.forall(_.length == mean.length),
+      s"cutover refused: $idx is not a complete PCA index " +
+        s"(model with mean + $PcaDims basis rows)")
+  }
 
   /** Declared query — the CUTOVER lifecycle on the PCA tier: retrain
     * into a fresh index dir, swap the serving alias atomically, serve
@@ -651,10 +639,11 @@ object Pca {
   def topKPcaCutover(s: SparkSession, dir: String): DataFrame = {
     val alias = graft.StateCache.stateDir(dir, "pca/cutover_alias",
         "graft_pcaalias") { a =>
-      cutover(s, a, retrainedPcaIndex(s, dir))
+      val target = retrainedPcaIndex(s, dir)
+      layout.cutoverProbed(s, a, target)(checkModel(s, target))
     }
     topKPcaOver(s, dir,
-      s.read.parquet(s"${resolveServing(alias)}/proj"))
+      s.read.parquet(s"${IndexFiles.resolveServing(alias)}/proj"))
   }
 
   /** Declared query — projection AT INGEST: the basis is trained ONCE

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QuerySpec, Tables, TempDirs}
-import graft.streaming.StreamingDedup
 
 /** Persisted product-quantization index — the PQ twin of [[IvfIndex]],
   * closing the same lifecycle gap: [[Similarity.topKPq]] retrains its
@@ -20,78 +19,43 @@ import graft.streaming.StreamingDedup
   * the difference between scanning the corpus and scanning its compressed
   * shadow.
   *
-  * On-disk layout under `dir` (the shared b/c slice convention):
+  * On-disk layout under `dir` ([[layout]], the shared b/c slice convention):
   *   - `dir/codebooks/` — m·ks rows of (subspace, code, centroid), written
   *     once at build and FROZEN; appends encode against these (retraining
   *     would silently invalidate every persisted code).
   *   - `dir/codes/b<N>/` — per-slice (vec_id, codes). No partition column:
   *     ADC is a full compressed scan by design, there is nothing to prune.
-  *   - [[compact]] merges slices via [[StreamingDedup.compactSlices]].
+  *   - `dir/tombstones/b<N>/` — deleted vec_ids; compaction folds them.
   *
   * Replay safety matches [[IvfIndex]]: appends write overwrite-mode slices
   * keyed by slice id.
   */
 object PqIndex {
 
-  private def codesDir(dir: String) = s"$dir/codes"
-  private def codebooksDir(dir: String) = s"$dir/codebooks"
-  private def tombstonesDir(dir: String) = s"$dir/tombstones"
+  private[graft] val layout = IndexFiles.Layout("persisted PQ index",
+    sliced = Seq("codes"), tombs = "tombstones", idCol = "vec_id",
+    partitionCol = None, frozen = Seq(IndexFiles.Codebooks))
 
   /** Build: train codebooks from the corpus (or freeze the given ones) and
     * write codes slice b0. */
   def build(emb: DataFrame, dir: String,
       codebooks: Option[Array[Array[Double]]] = None): Unit = {
     val cbs = codebooks.getOrElse(Similarity.learnPqCodebooks(emb))
-    IndexFiles.writeCodebooks(emb.sparkSession, codebooksDir(dir), cbs)
-    appendSlice(emb, dir, cbs, sliceId = 0L)
+    IndexFiles.writeCodebooks(emb.sparkSession, dir, cbs)
+    layout.append(encode(emb, cbs), dir, 0L)
   }
 
   /** Append a corpus slice: encode against the FROZEN codebooks, write a
     * new codes slice. Passing an id already in the index replaces that
     * slice (idempotent replay). Returns the slice id. */
-  def append(emb: DataFrame, dir: String, sliceId: Long = -1L): Long = {
-    val spark = emb.sparkSession
-    val id = if (sliceId >= 0) sliceId
-      else IndexFiles.nextSliceIdAcross(spark,
-        Seq(codesDir(dir), tombstonesDir(dir)))
-    appendSlice(emb, dir, loadCodebooks(spark, dir), id)
-    id
-  }
+  def append(emb: DataFrame, dir: String, sliceId: Long = -1L): Long =
+    layout.append(encode(emb, IndexFiles.loadCodebooks(emb.sparkSession, dir)),
+      dir, sliceId)
 
-  /** Forget vectors — the shared tombstone DELETE verb ([[IvfIndex.delete]]
-    * semantics, same slice clock): [[topK]] anti-joins the tombstones,
-    * [[compact]] folds them into the physical codes. */
-  def delete(ids: DataFrame, dir: String, sliceId: Long = -1L): Long =
-    IndexFiles.delete(ids, "vec_id", codesDir(dir), tombstonesDir(dir),
-      sliceId)
-
-  private def appendSlice(emb: DataFrame, dir: String,
-      cbs: Array[Array[Double]], sliceId: Long): Unit =
+  private def encode(emb: DataFrame, cbs: Array[Array[Double]]): DataFrame =
     emb.select(col("vec_id"),
-        graft.functions.GraftExpressions.pqEncode(col("embedding"), cbs,
-          Similarity.PqSubspaces, Similarity.PqCodebookSize).as("codes"))
-      .write.mode("overwrite").parquet(s"${codesDir(dir)}/b$sliceId")
-
-  /** Merge codes slices `<= upToSliceId` into one `c<id>` slice, folding
-    * (and removing) tombstones `<= upToSliceId`. */
-  def compact(spark: SparkSession, dir: String, upToSliceId: Long): Unit =
-    IndexFiles.compactWithTombstones(spark, codesDir(dir),
-      tombstonesDir(dir), upToSliceId, "vec_id") {
-      (merged, dst) => merged.write.mode("overwrite").parquet(dst)
-    }
-
-  /** The frozen codebooks in the subspace-major flattened [m*ks][subDim]
-    * order [[graft.functions.GraftExpressions.PqEncode]] consumes. */
-  def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Double]] =
-    IndexFiles.loadCodebooks(spark, codebooksDir(dir))
-
-  /** All LIVE persisted codes across slices (tombstoned vec_ids
-    * excluded; the plain union when no delete ever ran). `asOf` reads
-    * the snapshot at that slice id ([[IndexFiles.readLive]]). */
-  def codes(spark: SparkSession, dir: String,
-      asOf: Long = Long.MaxValue): DataFrame =
-    IndexFiles.readLive(spark, codesDir(dir), tombstonesDir(dir), "vec_id",
-      asOf)
+      graft.functions.GraftExpressions.pqEncode(col("embedding"), cbs,
+        Similarity.PqSubspaces, Similarity.PqCodebookSize).as("codes"))
 
   /** Answer a query frame (query_id, qv) against the persisted index:
     * per-query ADC lookup tables built on the driver (|q|·m·ks doubles,
@@ -104,26 +68,21 @@ object PqIndex {
     * snapshot needs only the slice filter). */
   def topK(spark: SparkSession, dir: String, queries: DataFrame,
       corpus: DataFrame, asOf: Long = Long.MaxValue): DataFrame = {
-    val queryLuts = Similarity.pqQueryLuts(queries, loadCodebooks(spark, dir))
+    val queryLuts = Similarity.pqQueryLuts(queries,
+      IndexFiles.loadCodebooks(spark, dir))
     val approx = Similarity.adcScore
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id").asc)
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val candidates = codes(spark, dir, asOf)
+    val candidates = layout.live(spark, dir, asOf)
       .join(broadcast(queryLuts), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("vec_id"), approx.as("adc"))
       .withColumn("ar", row_number().over(wAdc))
       .filter(col("ar") <= Similarity.PqRerank)
       .select(col("query_id"), col("qv"), col("vec_id"))
-    corpus.select(col("vec_id"), col("embedding"))
+    Similarity.rankTopK(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        Similarity.cos(col("qv"), col("embedding")).as("score"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= Similarity.TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+        Similarity.cos(col("qv"), col("embedding")).as("score")))
   }
 
   /** Declared query: build the persisted PQ index from the embeddings

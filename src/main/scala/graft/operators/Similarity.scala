@@ -43,6 +43,19 @@ object Similarity {
   private[operators] def cos(a: Column, b: Column): Column =
     graft.functions.GraftExpressions.cosineFast(a, b)
 
+  /** The ranked top-k tail every vector tier ends in: per query, rank the
+    * scored (query_id, vec_id, score) candidates by score desc with the
+    * deterministic vec_id tie-break, keep the top [[TopK]], and emit
+    * (query_id, rank, vec_id, score) in (query_id, rank) order. */
+  private[graft] def rankTopK(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= TopK)
+      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
   /** Exact cosine top-k for query vectors (vec_id < NumQueryVectors)
     * against the whole corpus, self excluded. Deterministic tie-break on
     * neighbor id. */
@@ -50,15 +63,9 @@ object Similarity {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < NumQueryVectors)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    rankTopK(emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cos(col("qv"), col("embedding")).as("score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+        cos(col("qv"), col("embedding")).as("score")))
   }
 
   /** Hard-negative mining for contrastive/retrieval training: per query
@@ -74,16 +81,10 @@ object Similarity {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < NumQueryVectors)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    rankTopK(emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cos(col("qv"), col("embedding")).as("score"))
-      .filter(col("score") < NearDupThreshold)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+      .filter(col("score") < NearDupThreshold))
   }
 
   /** LSH-bucketed candidate pairs: both sides get their L-table bucket
@@ -725,17 +726,11 @@ object Similarity {
     val queries = bucketed.filter(col("vec_id") < NumQueryVectors)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("table_id"), col("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    bucketed.join(broadcast(queries), Seq("table_id", "bucket"))
+    rankTopK(bucketed.join(broadcast(queries), Seq("table_id", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cos(col("qv"), col("embedding")).as("score"))
-      .distinct()
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+      .distinct())
   }
 
   /** MULTIPROBE LSH top-k — the recall/cost knob of the hyperplane tier
@@ -762,17 +757,11 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("table_id"), explode(probeSet).as("bucket"))
       .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    bucketed.join(broadcast(queries), Seq("table_id", "bucket"))
+    rankTopK(bucketed.join(broadcast(queries), Seq("table_id", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cos(col("qv"), col("embedding")).as("score"))
-      .distinct()
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+      .distinct())
   }
 
   /** The multiprobe tier's recall audit, same shared body as the rest. */
@@ -1347,15 +1336,8 @@ object Similarity {
     * nearest centroid cell in one codegen'd pass; each query probes its
     * IvfProbes nearest cells, so per-query cost is the probed cells'
     * population (~ probes/cells of the corpus), independent of N. */
-  def topKIvf(s: SparkSession, dir: String): DataFrame = {
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    ivfProbedScores(s, dir)
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def topKIvf(s: SparkSession, dir: String): DataFrame =
+    rankTopK(ivfProbedScores(s, dir))
 
   /** The probed (query, vec, score) stream shared by the IVF top-k and
     * range verbs — trained-centroid assignment, per-query probe cells,
@@ -1904,19 +1886,13 @@ object Similarity {
     val approx = adcScore
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id").asc)
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    rankTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("vec_id"), col("embedding"),
         approx.as("adc"))
       .withColumn("ar", row_number().over(wAdc))
       .filter(col("ar") <= PqRerank)
       .select(col("query_id"), col("vec_id"),
-        cos(col("qv"), col("embedding")).as("score"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
+        cos(col("qv"), col("embedding")).as("score")))
   }
 
   /** Filtered vector search — top-k under a metadata predicate (the
@@ -2274,7 +2250,7 @@ object Similarity {
           val cents = learnCentroidsAt(femb,
             ivfServingCells(femb.count()), LiIvfCentroidsKey)
           IvfIndex.build(femb, old, Some(cents))
-          IvfIndex.delete(IvfIndex.deleteSet(femb), old)
+          IvfIndex.layout.delete(IvfIndex.deleteSet(femb), old)
           IvfIndex.retrain(s, old, idx, LiIvfRetrainKey)
           ()
         } finally { femb.unpersist(); () }
@@ -2304,7 +2280,8 @@ object Similarity {
 
   /** Declared query — the CUTOVER lifecycle on the cascade's stage-1
     * index: build, forget, retrain, swap the serving alias atomically
-    * ([[IvfIndex.cutover]] — the stage-1 index is a plain IVF layout),
+    * (the [[IvfIndex.layout]] cutover — the stage-1 index is a plain IVF
+    * layout),
     * then serve the cascade THROUGH the pointer. Closes the audit →
     * retrain → atomic swap → serves-follow loop for the LAST IVF-backed
     * tier (dense and compressed got theirs in r19). Equals
@@ -2313,10 +2290,10 @@ object Similarity {
   def lateInteractionIvfCutover(s: SparkSession, dir: String): DataFrame = {
     val alias = graft.StateCache.stateDir(dir, "li/ivf_cutover_alias",
         "graft_lialias") { a =>
-      IvfIndex.cutover(s, a, liIvfRetrainedIndex(s, dir))
+      IvfIndex.layout.cutover(s, a, liIvfRetrainedIndex(s, dir))
     }
     liCascadeOver(s, dir,
-      liIvfPool(s, dir, IvfIndex.resolveServing(alias)))
+      liIvfPool(s, dir, IndexFiles.resolveServing(alias)))
   }
 
   /** The doc-grain feature vectors DENSE, as an embeddings-shaped frame
@@ -2684,18 +2661,24 @@ object Similarity {
         (batch, batchId) => appendLiSlice(batch, st, batchId)
       }
     }
-    liServeOver(liQueryFeatures(spark, dir),
-      IndexFiles.readSlices(spark, s"$st/feats"))
+    liServeOver(liQueryFeatures(spark, dir), liLayout.live(spark, st))
   }
+
+  /** The chunk-feature state's layout: document-grain tombstones (one id
+    * kills every chunk row of its document). */
+  private[graft] val liLayout = IndexFiles.Layout("late-interaction index",
+    sliced = Seq("feats"), tombs = "tombs", idCol = "doc_id",
+    partitionCol = None, frozen = Nil)
 
   /** One maintenance micro-batch: chunk + featurize the arriving corpus
     * docs, land them as the batch-keyed overwrite slice (idempotent
     * replay). Factored so the append==rebuild pin drives the stream's
     * exact code. */
   private[graft] def appendLiSlice(docs: DataFrame, stateDir: String,
-      batchId: Long): Unit =
-    TextAnalysis.chunkFeatureCountsOf(TextAnalysis.ragChunksOf(docs))
-      .write.mode("overwrite").parquet(s"$stateDir/feats/b$batchId")
+      batchId: Long): Long =
+    liLayout.append(
+      TextAnalysis.chunkFeatureCountsOf(TextAnalysis.ragChunksOf(docs)),
+      stateDir, batchId)
 
   /** The standard query documents chunked + featurized — the query side
     * every LI serve shares (the corpus side varies per verb). */
@@ -2721,8 +2704,7 @@ object Similarity {
   private def liDeletedState(s: SparkSession, dir: String): String =
     graft.StateCache.stateDir(dir, "li/feats_del7", "graft_lidel") { st =>
       writeLiBuildSlice(s, dir, st)
-      IndexFiles.delete(liDeleteSet(Tables.documents(s, dir)), "doc_id",
-        s"$st/feats", s"$st/tombs", sliceId = 1L)
+      liLayout.delete(liDeleteSet(Tables.documents(s, dir)), st, sliceId = 1L)
       ()
     }
 
@@ -2730,9 +2712,8 @@ object Similarity {
     * state — a parquet copy of the shared [[liFeatureState]], not a
     * re-featurization. */
   private def writeLiBuildSlice(s: SparkSession, dir: String,
-      st: String): Unit =
-    s.read.parquet(s"${liFeatureState(s, dir)}/feats")
-      .write.mode("overwrite").parquet(s"$st/feats/b0")
+      st: String): Long =
+    liLayout.append(s.read.parquet(s"${liFeatureState(s, dir)}/feats"), st, 0L)
 
   /** Declared query — the DELETE verb on the chunk-feature state, fully
     * oracle-checked: build, tombstone the [[liDeleteSet]], serve the
@@ -2743,8 +2724,7 @@ object Similarity {
     * (pinned against a literal rebuild-without in SimilaritySpec). */
   def liDeleted(s: SparkSession, dir: String): DataFrame = {
     val st = liDeletedState(s, dir)
-    liServeOver(liQueryFeatures(s, dir),
-      IndexFiles.readLive(s, s"$st/feats", s"$st/tombs", "doc_id"))
+    liServeOver(liQueryFeatures(s, dir), liLayout.live(s, st))
   }
 
   /** Declared query — the LI index MANIFEST, completing the stats column
@@ -2760,14 +2740,12 @@ object Similarity {
     * stopped anti-joining tombstones, this query diverges. */
   def liIndexStats(s: SparkSession, dir: String): DataFrame = {
     val st = liDeletedState(s, dir)
-    val feats = s"$st/feats"
-    val tombs = s"$st/tombs"
-    val nData = graft.streaming.StreamingDedup.listSlices(s, feats).size
-    val nTomb = graft.streaming.StreamingDedup.listSlices(s, tombs).size
-    IndexFiles.readLive(s, feats, tombs, "doc_id")
+    val nData = liLayout.slices(s, st, liLayout.sliced.head).size
+    val nTomb = liLayout.slices(s, st, liLayout.tombs).size
+    liLayout.live(s, st)
       .agg(count_distinct(col("doc_id")).as("n_live_docs"),
         count_distinct(col("doc_id"), col("chunk_id")).as("n_live_chunks"))
-      .crossJoin(IndexFiles.readSlices(s, tombs)
+      .crossJoin(liLayout.dead(s, st)
         .agg(count_distinct(col("doc_id")).as("n_dead_ids")))
       .select(lit(nData.toLong).as("n_data_slices"),
         lit(nTomb.toLong).as("n_tombstone_slices"),
@@ -2802,13 +2780,12 @@ object Similarity {
     * VERBATIM from sim_late_interaction. */
   def liAsOf(s: SparkSession, dir: String): DataFrame = {
     val st = liDeletedState(s, dir)
-    liServeOver(liQueryFeatures(s, dir),
-      IndexFiles.readLive(s, s"$st/feats", s"$st/tombs", "doc_id", asOf = 0L))
+    liServeOver(liQueryFeatures(s, dir), liLayout.live(s, st, asOf = 0L))
   }
 
   /** Declared query — COMPACTION on the chunk-feature state, hash-checked:
     * build, delete, fold the tombstones into one physical c1 slice
-    * ([[IndexFiles.compactWithTombstones]]), serve. The fold must be
+    * ([[IndexFiles.Layout.compact]]), serve. The fold must be
     * invisible to readers, so the oracle is the DELETED text verbatim —
     * a dropped live chunk, a resurrected dead one, or a duplicate from a
     * crashed rename all diverge the hash. Its own state dir (not
@@ -2818,14 +2795,10 @@ object Similarity {
     val st = graft.StateCache.stateDir(dir, "li/feats_del7_compacted",
         "graft_licomp") { st =>
       writeLiBuildSlice(s, dir, st)
-      IndexFiles.delete(liDeleteSet(Tables.documents(s, dir)), "doc_id",
-        s"$st/feats", s"$st/tombs", sliceId = 1L)
-      IndexFiles.compactWithTombstones(s, s"$st/feats", s"$st/tombs",
-        upTo = 1L, "doc_id") { (merged, dst) =>
-          merged.write.mode("overwrite").parquet(dst) }
+      liLayout.delete(liDeleteSet(Tables.documents(s, dir)), st, sliceId = 1L)
+      liLayout.compact(s, st, 1L)
     }
-    liServeOver(liQueryFeatures(s, dir),
-      IndexFiles.readLive(s, s"$st/feats", s"$st/tombs", "doc_id"))
+    liServeOver(liQueryFeatures(s, dir), liLayout.live(s, st))
   }
 
   /** The standard LI serve: MaxSim the query chunk features against a

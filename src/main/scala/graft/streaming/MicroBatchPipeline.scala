@@ -48,13 +48,13 @@ object MicroBatchPipeline {
     * "Unable to infer schema"). Production landing zones should pass
     * `schema` explicitly (from the table catalog) — that skips the footer
     * read entirely, works on an empty directory, and scales to
-    * million-file landing dirs; inference stays as the test/dev fallback. */
+    * million-file landing dirs; inference stays as the test/dev fallback.
+    * Both reads go through [[graft.Tables.withNanosAsLong]], so old
+    * TIMESTAMP(NANOS) files load without writing the caller's SQLConf. */
   def eventsStreamFrom(spark: SparkSession, dir: String,
       pathGlobFilter: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None,
       schema: Option[StructType] = None): DataFrame = {
-    // required to even load the old TIMESTAMP(NANOS) encoding; no-op for micros
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Schema inference memoized per (dir, glob): the footer read is a pure
     // function of the frozen source files, and every drain used to pay its
     // own driver-side listing + footer job just to recover the identical
@@ -63,16 +63,16 @@ object MicroBatchPipeline {
     val resolved = schema.getOrElse {
       graft.StateCache.cached(dir,
           "stream_schema:" + pathGlobFilter.getOrElse("")) {
-        pathGlobFilter
-          .foldLeft(spark.read)((r, g) => r.option("pathGlobFilter", g))
-          .parquet(dir).schema
+        graft.Tables.withNanosAsLong(spark)(s => pathGlobFilter
+          .foldLeft(s.read)((r, g) => r.option("pathGlobFilter", g))
+          .parquet(dir)).schema
       }
     }
-    val reader0 = spark.readStream.schema(resolved)
-    val reader = (pathGlobFilter.map(g => ("pathGlobFilter", g)) ++
-        maxFilesPerTrigger.map(n => ("maxFilesPerTrigger", n.toString)))
-      .foldLeft(reader0)((r, kv) => r.option(kv._1, kv._2))
-    graft.Tables.normalizeEventTs(reader.parquet(dir))
+    val options = pathGlobFilter.map(g => ("pathGlobFilter", g)) ++
+      maxFilesPerTrigger.map(n => ("maxFilesPerTrigger", n.toString))
+    graft.Tables.normalizeEventTs(graft.Tables.withNanosAsLong(spark)(s =>
+      options.foldLeft(s.readStream.schema(resolved))((r, kv) =>
+        r.option(kv._1, kv._2)).parquet(dir)))
   }
 
   /** Event-time tumbling-window aggregation (the engine's replacement for

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IndexFiles, Similarity}
 
 /** Streaming near-duplicate dedup — the batch LSH tiers made incremental,
   * with FIRST-SEEN-WINS semantics: a record is dropped iff an LSH bucket
@@ -73,6 +73,15 @@ object StreamingDedup {
     * [[graft.operators.Similarity.cappedWitnessPairScoresCtes]]. */
   val EmbeddingBucketCap = 128
 
+  /** The LSH index layout, shared by the text, embedding and media
+    * tiers: per-slice (band, bucket) rows and signatures on one slice
+    * clock, tombstones of `rec_id`s. */
+  private val Bands = "bands"
+  private val Sets = "sets"
+  private[graft] val layout = IndexFiles.Layout("LSH index",
+    sliced = Seq(Bands, Sets), tombs = "tombstones", idCol = "rec_id",
+    partitionCol = None, frozen = Nil)
+
   /** What varies between the document and embedding tiers. `sig` is the
     * stored-signature expression over the incoming frame's columns;
     * `buckets` maps a signature to its bucket array (posexplode index =
@@ -123,7 +132,7 @@ object StreamingDedup {
     * and append the slice to it — what a recurring curation job runs
     * nightly, without rebuilding signatures for the accumulated corpus.
     * Exactly the streaming tier's per-batch path, so batch and stream
-    * slices interoperate in one index and [[compactState]] applies.
+    * slices interoperate in one index and [[layout]]'s compaction applies.
     * `batchId` defaults to (max slice id in the index) + 1; passing an
     * id already in the index REPLACES that slice and its survivors
     * (overwrite-mode replay, same as a retried micro-batch). Returns
@@ -133,22 +142,16 @@ object StreamingDedup {
     * FileNotFoundException; [[survivors]] re-lists and is always safe). */
   def appendBatch(slice: DataFrame, stateDir: String, outDir: String,
       threshold: Double = Dedup.JaccardThreshold,
-      bucketCap: Int = DefaultBucketCap, batchId: Long = -1L): DataFrame = {
-    val spark = slice.sparkSession
-    val id = if (batchId >= 0) batchId else nextBatchId(spark, stateDir)
-    processBatch(slice, id, jaccardSpec(threshold), stateDir, outDir, bucketCap)
-    spark.read.parquet(s"$outDir/b$id")
-  }
+      bucketCap: Int = DefaultBucketCap, batchId: Long = -1L): DataFrame =
+    appendWith(slice, jaccardSpec(threshold), stateDir, outDir, bucketCap,
+      batchId)
 
   /** Embedding twin of [[appendBatch]] (needs `vec_id` and `embedding`). */
   def appendEmbeddingBatch(slice: DataFrame, stateDir: String, outDir: String,
       threshold: Double = Similarity.NearDupThreshold,
-      bucketCap: Int = EmbeddingBucketCap, batchId: Long = -1L): DataFrame = {
-    val spark = slice.sparkSession
-    val id = if (batchId >= 0) batchId else nextBatchId(spark, stateDir)
-    processBatch(slice, id, embeddingSpec(threshold), stateDir, outDir, bucketCap)
-    spark.read.parquet(s"$outDir/b$id")
-  }
+      bucketCap: Int = EmbeddingBucketCap, batchId: Long = -1L): DataFrame =
+    appendWith(slice, embeddingSpec(threshold), stateDir, outDir, bucketCap,
+      batchId)
 
   /** Media twin of [[appendBatch]] — the third cell of the incremental
     * matrix (text, embedding, multimodal). Expects the fingerprint frame
@@ -160,10 +163,19 @@ object StreamingDedup {
     * the exact hamming predicate on the stored signatures. */
   def appendMediaBatch(slice: DataFrame, stateDir: String, outDir: String,
       maxHamming: Int = graft.operators.Multimodal.PhashMaxHamming,
-      bucketCap: Int = DefaultBucketCap, batchId: Long = -1L): DataFrame = {
+      bucketCap: Int = DefaultBucketCap, batchId: Long = -1L): DataFrame =
+    appendWith(slice, phashSpec(maxHamming), stateDir, outDir, bucketCap,
+      batchId)
+
+  /** The batch-side append behind the three tiers: draw the slice id from
+    * the layout's clock (an explicit id replays), index the slice, return
+    * its survivors. */
+  private def appendWith(slice: DataFrame, spec: LshDedupSpec,
+      stateDir: String, outDir: String, bucketCap: Int,
+      batchId: Long): DataFrame = {
     val spark = slice.sparkSession
-    val id = if (batchId >= 0) batchId else nextBatchId(spark, stateDir)
-    processBatch(slice, id, phashSpec(maxHamming), stateDir, outDir, bucketCap)
+    val id = layout.sliceIdOr(spark, stateDir, batchId)
+    processBatch(slice, id, spec, stateDir, outDir, bucketCap)
     spark.read.parquet(s"$outDir/b$id")
   }
 
@@ -174,49 +186,6 @@ object StreamingDedup {
       h => array((0 until graft.operators.Multimodal.PhashBands).map(b =>
         shiftright(h, b * 16).bitwiseAND(lit(65535L))): _*),
       (a, b) => bit_count(a.bitwiseXOR(b)) <= maxHamming)
-
-  /** Batch id encoded in a slice directory name (`b<id>` for raw slices,
-    * `c<id>` for compactions — a compaction's id is the highest batch it
-    * contains). Single parser shared by [[nextBatchId]] and
-    * [[compactState]] so the naming scheme cannot drift. Strict match:
-    * a foreign entry under the index dir (say a stray `_SUCCESS`-like
-    * dir, or `bc1`, which a loose stripPrefix parse would read as id 1)
-    * yields None and is skipped rather than misparsed. */
-  private val SliceName = "^[bc](\\d+)$".r
-  private[graft] def sliceBatch(dir: String): Option[Long] =
-    dir.substring(dir.lastIndexOf('/') + 1) match {
-      case SliceName(id) => Some(id.toLong)
-      case _ => None
-    }
-
-  /** Next free slice id under a slice base dir: one past the newest
-    * slice. Shared with the persisted ANN index, which reuses this
-    * b/c slice convention for its postings. */
-  private[graft] def nextSliceId(spark: SparkSession, base: String): Long = {
-    val ids = listSlices(spark, base).flatMap(sliceBatch)
-    if (ids.isEmpty) 0L else ids.max + 1L
-  }
-
-  /** Next free batch id: one past the newest slice OR tombstone — the
-    * shared clock that makes a tombstone kill exactly the index state
-    * that existed when the delete ran ([[deleteFromIndex]]). */
-  private def nextBatchId(spark: SparkSession, stateDir: String): Long =
-    graft.operators.IndexFiles.nextSliceIdAcross(spark,
-      Seq(s"$stateDir/bands", s"$stateDir/tombstones"))
-
-  /** Forget documents from the persisted LSH index — the dedup tier's own
-    * DELETE verb (same tombstone convention as [[graft.operators.IvfIndex.delete]]):
-    * a tombstone slice of rec_ids under `stateDir/tombstones`, killing
-    * band/signature rows from STRICTLY earlier batches. A forgotten
-    * record stops serving as a dedup witness on both the read side
-    * ([[serveTextBatch]]) and the write side (later batches' candidate
-    * joins); [[compactState]] folds tombstones into the physical slices.
-    * Explicit `sliceId` replays idempotently. Returns the slice id. */
-  def deleteFromIndex(spark: SparkSession, stateDir: String, ids: DataFrame,
-      sliceId: Long = -1L): Long = {
-    graft.operators.IndexFiles.delete(ids.toDF("rec_id"), "rec_id",
-      s"$stateDir/bands", s"$stateDir/tombstones", sliceId)
-  }
 
   /** One micro-batch: index this batch, candidate-join against the whole
     * index (this batch included, so within-batch dups are caught by the
@@ -241,27 +210,20 @@ object StreamingDedup {
         posexplode(spec.buckets(col("sig"))).as(Seq("band", "bucket")))
       .withColumn("batch_id", lit(batchId))
       .persist()
-    taggedBands.write.mode("overwrite").parquet(s"$stateDir/bands/b$batchId")
-    withSigs.write.mode("overwrite").parquet(s"$stateDir/sets/b$batchId")
+    layout.writeSlice(taggedBands, stateDir, Bands, batchId)
+    layout.writeSlice(withSigs, stateDir, Sets, batchId)
     // Prior state is read tombstone-aware: a deleted record must not
-    // witness-dedup this batch ([[deleteFromIndex]]). The in-memory batch
-    // frames are never tombstoned (their batch id postdates every
-    // existing tombstone), so only the disk side anti-joins.
-    def priorSlices(base: String): Seq[String] =
-      listSlices(spark, base).filterNot(_.endsWith(s"/b$batchId"))
-    val tombsBase = s"$stateDir/tombstones"
-    val priorBands = priorSlices(s"$stateDir/bands")
-    val allBands =
-      if (priorBands.isEmpty) taggedBands
-      else graft.operators.IndexFiles
-        .readLiveFrom(spark, priorBands, tombsBase, "rec_id")
-        .unionByName(taggedBands)
-    val priorSigs = priorSlices(s"$stateDir/sets")
-    val allSigs =
-      if (priorSigs.isEmpty) withSigs
-      else graft.operators.IndexFiles
-        .readLiveFrom(spark, priorSigs, tombsBase, "rec_id")
-        .unionByName(withSigs)
+    // witness-dedup this batch. The in-memory batch frames are never
+    // tombstoned (their batch id postdates every existing tombstone), so
+    // only the disk side anti-joins.
+    def withPrior(sub: String, batchRows: DataFrame): DataFrame = {
+      val prior = layout.slices(spark, stateDir, sub)
+        .filterNot(_.endsWith(s"/b$batchId"))
+      if (prior.isEmpty) batchRows
+      else layout.liveFrom(spark, stateDir, prior).unionByName(batchRows)
+    }
+    val allBands = withPrior(Bands, taggedBands)
+    val allSigs = withPrior(Sets, withSigs)
     // Hot-bucket guard: only the first bucketCap records per bucket (in
     // first-seen arrival order — keepers AND dropped dups alike; any
     // earlier arrival is a valid dedup witness under first-seen-wins)
@@ -308,98 +270,6 @@ object StreamingDedup {
     taggedBands.unpersist()
   }
 
-  /** Visible (non-hidden) slice directories under an index subdir.
-    * Dot-prefixed names are in-flight compaction temps — never read. */
-  private[graft] def listSlices(spark: SparkSession, base: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(base)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path)
-      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).toSeq
-  }
-
-  /** Compact the index's per-batch slices: thousands of micro-batches
-    * mean thousands of small parquet dirs, and listing + footer reads
-    * amplify every batch. Merges all slices for batches <= `upToBatchId`
-    * (and earlier compactions) into one `c<upToBatchId>` slice per
-    * subdir; band rows KEEP their original batch_id, so first-seen
-    * ordering and the earlier-batch/same-batch distinction are
-    * unaffected — results are bit-identical before and after.
-    *
-    * Crash safety: the merge writes to a dot-prefixed temp (invisible to
-    * readers), renames it visible (return value CHECKED — Hadoop
-    * FileSystems report many failures by returning false), then deletes
-    * the merged inputs. A crash between rename and deletes leaves
-    * duplicate rows visible; results stay identical anyway (candidates
-    * and dup decisions are DISTINCT-ed, and the exemplar ranking dedups
-    * its input), and re-running compactState removes the copies. Run it
-    * between drains — never concurrently with an active query on the
-    * same state dir. */
-  def compactState(spark: SparkSession, stateDir: String,
-      upToBatchId: Long): Unit =
-    // bands and sets share one tombstone dir, so only the LAST fold may
-    // purge it (a crash between the two re-folds bands' fresh `c` slice
-    // harmlessly: its tag equals upToBatchId, above every folded
-    // tombstone, so the re-applied anti-join matches nothing).
-    for ((sub, last) <- Seq("bands" -> false, "sets" -> true))
-      graft.operators.IndexFiles.compactWithTombstones(spark,
-        s"$stateDir/$sub", s"$stateDir/tombstones", upToBatchId, "rec_id",
-        purgeTombstones = last) { (merged, dst) =>
-        merged.write.mode("overwrite").parquet(dst)
-      }
-
-  /** The generic slice-merge step behind [[compactState]], shared with the
-    * persisted ANN index (whose compacted slice needs a partitioned
-    * write — hence the pluggable writer). Merges all slices with id <=
-    * `upToBatchId` into one `c<upToBatchId>` slice, deduplicated. */
-  private[graft] def compactSlices(spark: SparkSession, base: String,
-      upToBatchId: Long)(write: (DataFrame, String) => Unit): Unit = {
-    val merge = listSlices(spark, base)
-      .filter(sliceBatch(_).exists(_ <= upToBatchId))
-    if (merge.size > 1)
-      // Each slice is read under its own root and unioned by name: a
-      // single multi-root read would trip partition discovery on
-      // partitioned slices (the persisted ANN index's cell=N layout)
-      // with CONFLICTING_DIRECTORY_STRUCTURES.
-      publishCompacted(spark, base, upToBatchId,
-        merge.map(spark.read.parquet(_)).reduce(_ unionByName _).distinct(),
-        merge)(write)
-  }
-
-  /** The crash-safe publish step of every compaction: write `merged` to a
-    * dot-prefixed temp (invisible to readers), rename it to `c<upTo>`
-    * (return value CHECKED — Hadoop FileSystems report many failures by
-    * returning false), then delete the `inputs` it replaces plus
-    * `alsoDelete` (a tombstone-folding compaction removes the tombstone
-    * slices it just applied). Factored out of [[compactSlices]] so the
-    * tombstone-aware variant ([[graft.operators.IndexFiles.compactWithTombstones]])
-    * shares one rename dance. */
-  private[graft] def publishCompacted(spark: SparkSession, base: String,
-      upToBatchId: Long, merged: DataFrame, inputs: Seq[String],
-      alsoDelete: Seq[String] = Nil)(
-      write: (DataFrame, String) => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(base, s".c$upToBatchId.tmp")
-    // batch-sized shuffle: the merge must not fragment the compacted
-    // slice into session-default-many part files.
-    MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      write(merged, tmp.toString)
-    }
-    val dst = new org.apache.hadoop.fs.Path(base, s"c$upToBatchId")
-    fs.delete(dst, true)
-    // An unchecked false here would leave the merge hidden in the
-    // dot-dir while the loop below deletes all inputs — silently
-    // destroying the index. Abort before any deletion.
-    if (!fs.rename(tmp, dst)) throw new IllegalStateException(
-      s"compactSlices: rename $tmp -> $dst failed; index left unmodified")
-    // dst itself may be among the inputs (re-run after a crash) — it
-    // now holds the fresh merge, so it must survive this cleanup
-    (inputs ++ alsoDelete).filterNot(_.endsWith(s"/c$upToBatchId"))
-      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-  }
-
   /** All survivors emitted so far. */
   def survivors(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/b*")
@@ -416,7 +286,7 @@ object StreamingDedup {
     * batch boundaries cannot change the result.
     *
     * `asOf` (default: everything) serves the SNAPSHOT at logical slice
-    * `asOf` — the [[graft.operators.IndexFiles.readLive]] verb on both
+    * `asOf` — the [[IndexFiles.Layout.liveOf]] verb on both
     * the band and signature sides, so data slices AND tombstones past the
     * snapshot are invisible (a delete issued after the snapshot does not
     * retro-hide matches), and a compaction that merged history past the
@@ -459,10 +329,8 @@ object StreamingDedup {
         posexplode(spec.buckets(col("sig_q"))).as(Seq("band", "bucket")))
       .persist()
     // Tombstone-aware: a deleted record must not come back as a match
-    // ([[deleteFromIndex]] — the serving side of the forget verb).
-    val allBands = graft.operators.IndexFiles
-      .readLive(spark, s"$stateDir/bands", s"$stateDir/tombstones",
-        "rec_id", asOf)
+    // (the serving side of the forget verb).
+    val allBands = layout.liveOf(spark, stateDir, Bands, asOf)
     val touched = qBands.select(col("band"), col("bucket")).distinct()
     val wBucket = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
@@ -477,9 +345,7 @@ object StreamingDedup {
     // next to its own merge — identical signature rows twice; dedupe by
     // id (same defense as the exemplar input above) so the sig join
     // cannot double matched output rows
-    val allSigs = graft.operators.IndexFiles
-      .readLive(spark, s"$stateDir/sets", s"$stateDir/tombstones",
-        "rec_id", asOf)
+    val allSigs = layout.liveOf(spark, stateDir, Sets, asOf)
       .dropDuplicates("rec_id")
     val candidates = qBands
       .join(exemplars.select(col("band"), col("bucket"),
@@ -533,7 +399,7 @@ object StreamingDedup {
 
   /** Declared query — the DELETE lifecycle of the text index end-to-end:
     * index the train split, FORGET every train doc with `doc_id % 5 == 2`
-    * ([[deleteFromIndex]] — the curation tier's "these documents were
+    * ([[layout]]'s delete — the curation tier's "these documents were
     * dropped, stop matching against them" call), then serve the eval
     * split read-only. Deleted documents must not reappear as matches, so
     * the oracle is [[streamTextServeQuery]]'s cross-split exact-Jaccard
@@ -565,9 +431,8 @@ object StreamingDedup {
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       MicroBatchPipeline.withBatchSizedShuffle(spark) {
         appendBatch(docs.filter(!isEval), state, sink).count()
-        deleteFromIndex(spark, state,
-          docs.filter(!isEval && col("doc_id") % 5 === 2)
-            .select(col("doc_id")))
+        layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
+          .select(col("doc_id")), state)
       }
     }
 
@@ -584,8 +449,8 @@ object StreamingDedup {
       MicroBatchPipeline.withBatchSizedShuffle(spark) {
         appendBatch(train.filter(col("doc_id") <= cut), state, sink).count()
         appendBatch(train.filter(col("doc_id") > cut), state, sink).count()
-        deleteFromIndex(spark, state,
-          train.filter(col("doc_id") % 5 === 2).select(col("doc_id")))
+        layout.delete(train.filter(col("doc_id") % 5 === 2)
+          .select(col("doc_id")), state)
       }
     }
 
@@ -618,7 +483,7 @@ object StreamingDedup {
 
   /** Declared query — the COMPACTION-POLICY readout over the slice
     * manifest ([[textIndexStatsQuery]]'s lifecycle completed through
-    * [[compactState]]): two id-ordered appends, a delete, then a fold of
+    * [[layout]]'s compaction): two id-ordered appends, a delete, then a fold of
     * everything. The row reports what the fold must leave behind — ONE
     * compacted slice per subdir, ZERO tombstone slices (all folded and
     * purged), and physical row counts that equal live docs exactly
@@ -636,18 +501,18 @@ object StreamingDedup {
       MicroBatchPipeline.withBatchSizedShuffle(spark) {
         appendBatch(docs.filter(col("doc_id") <= cut), state, sink).count()
         appendBatch(docs.filter(col("doc_id") > cut), state, sink).count()
-        deleteFromIndex(spark, state,
-          docs.filter(col("doc_id") % 5 === 2).select(col("doc_id")))
-        compactState(spark, state, 2L)
+        layout.delete(docs.filter(col("doc_id") % 5 === 2)
+          .select(col("doc_id")), state)
+        layout.compact(spark, state, 2L)
       }
     }
-    val nBandSlices = listSlices(spark, s"$state/bands").size
-    val nSetSlices = listSlices(spark, s"$state/sets").size
-    val nTombSlices = listSlices(spark, s"$state/tombstones").size
-    graft.operators.IndexFiles.readSlices(spark, s"$state/bands")
+    val nBandSlices = layout.slices(spark, state, Bands).size
+    val nSetSlices = layout.slices(spark, state, Sets).size
+    val nTombSlices = layout.slices(spark, state, layout.tombs).size
+    IndexFiles.readSlices(spark, s"$state/$Bands")
       .agg(count(lit(1)).as("n_band_rows"),
         count_distinct(col("rec_id")).as("n_live_docs"))
-      .crossJoin(graft.operators.IndexFiles.readSlices(spark, s"$state/sets")
+      .crossJoin(IndexFiles.readSlices(spark, s"$state/$Sets")
         .agg(count(lit(1)).as("n_set_rows")))
       .select(lit(nBandSlices.toLong).as("n_band_slices"),
         lit(nSetSlices.toLong).as("n_set_slices"),
@@ -685,9 +550,8 @@ object StreamingDedup {
         appendBatch(docs.filter(!isEval), state, sink).count()
         serveTextBatch(docs.filter(isEval && inBatch0), state, out, 0L,
           Dedup.JaccardThreshold, DefaultBucketCap)
-        deleteFromIndex(spark, state,
-          docs.filter(!isEval && col("doc_id") % 5 === 2)
-            .select(col("doc_id")))
+        layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
+          .select(col("doc_id")), state)
         serveTextBatch(docs.filter(isEval && !inBatch0), state, out, 1L,
           Dedup.JaccardThreshold, DefaultBucketCap)
       }
@@ -699,41 +563,6 @@ object StreamingDedup {
       .orderBy(col("query_doc"), col("match_doc"))
   }
 
-  /** CUTOVER the serving alias for a banded-LSH index (text and media —
-    * same bands/sets/tombstones layout) — the atomic pointer verb
-    * generalized off the IVF tiers (VERDICT r19 #1: these families'
-    * serve paths hardcoded the state dir). Completeness probe at this
-    * layout: at least one bands slice AND one sets slice — a half-built
-    * rebuild refuses loudly with the alias left on the live index.
-    * Publication is [[graft.operators.IndexFiles.cutoverTo]]'s
-    * write-temp-then-rename; the old state stays untouched for
-    * in-flight and as-of readers until [[retireIndex]]. */
-  def cutoverIndex(spark: SparkSession, aliasDir: String,
-      newState: String): Unit =
-    graft.operators.IndexFiles.cutoverTo(aliasDir, newState) {
-      Seq("bands", "sets").foreach { sub =>
-        require(listSlices(spark, s"$newState/$sub").nonEmpty,
-          s"cutover refused: no slices under $newState/$sub — half-built " +
-            "LSH index")
-      }
-    }
-
-  /** The alias's current serving target. */
-  def resolveServing(aliasDir: String): String =
-    graft.operators.IndexFiles.readPointer(aliasDir)
-
-  /** RETIRE a replaced LSH index state dir — the shared guards
-    * ([[graft.operators.IndexFiles.retireTarget]]): refuses the dir the
-    * alias still serves, refuses anything without this family's bands
-    * subdir (or a StateCache completion marker). Retire-then-as-of
-    * ordering is operator-owned and fails loudly, the
-    * [[graft.operators.IvfIndex.retire]] contract. */
-  def retireIndex(aliasDir: String, oldState: String): Unit =
-    graft.operators.IndexFiles.retireTarget(aliasDir, oldState, "LSH index")(
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(oldState, "bands")) ||
-        graft.StateCache.hasCompletionMarker(oldState))
-
   /** Declared query — REBUILD → CUTOVER → serve-through-pointer on the
     * text LSH index (VERDICT r19 #1, closing the non-IVF families'
     * "remedy produced a second dir" gap): the standard train +
@@ -741,9 +570,9 @@ object StreamingDedup {
     * every serve pays; the maintenance rebuild writes a fresh index
     * over the LIVE train docs (LSH geometry is seeded and
     * data-independent, so a rebuild needs no retraining — it is this
-    * family's compaction-into-a-new-dir), [[cutoverIndex]] swaps the
-    * serving alias atomically, and the eval split is served THROUGH the
-    * pointer ([[resolveServing]]). Rebuild-on-survivors ≡
+    * family's compaction-into-a-new-dir), [[layout]]'s cutover swaps the
+    * serving alias atomically (refusing a target without bands and sets
+    * slices), and the eval split is served THROUGH the pointer. Rebuild-on-survivors ≡
     * tombstone-filtered serving, so the oracle is dedup_serve_deleted's
     * cross-split text verbatim — a pointer resolving to a stale or
     * half-built dir diverges or fails loudly. */
@@ -761,11 +590,12 @@ object StreamingDedup {
           ()
         }
       }
-      cutoverIndex(spark, a, rebuilt)
+      layout.cutover(spark, a, rebuilt)
     }
     val out = graft.TempDirs.scoped("graft_tcut_out")
     MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      serveTextBatch(docs.filter(isEval), resolveServing(alias), out, 0L,
+      serveTextBatch(docs.filter(isEval), IndexFiles.resolveServing(alias),
+        out, 0L,
         Dedup.JaccardThreshold, DefaultBucketCap)
     }
     spark.read.parquet(s"$out/b0")
@@ -792,8 +622,7 @@ object StreamingDedup {
     // the as-of serve's EXACT lifecycle — one shared build, the diff
     // readout runs per invocation against the built slices
     val state = trainAsOfState(spark, dir)
-    def liveAt(asOf: Long) = graft.operators.IndexFiles
-      .readLive(spark, s"$state/bands", s"$state/tombstones", "rec_id", asOf)
+    def liveAt(asOf: Long) = layout.live(spark, state, asOf)
       .select(col("rec_id")).distinct()
     val snap = liveAt(0L)
     val head = liveAt(Long.MaxValue)
@@ -820,19 +649,22 @@ object StreamingDedup {
   def textIndexStatsQuery(spark: SparkSession, dir: String): DataFrame = {
     // the delete serve's EXACT lifecycle — one shared build, the
     // manifest readout observes the real dirs per invocation
-    val state = textTrainDeletedState(spark, dir)
-    val bands = s"$state/bands"
-    val tombs = s"$state/tombstones"
-    val nData = listSlices(spark, bands).size
-    val nTomb = listSlices(spark, tombs).size
-    graft.operators.IndexFiles
-      .readLiveFrom(spark, listSlices(spark, bands), tombs, "rec_id")
-      .agg(count_distinct(col("rec_id")).as("n_live_docs"))
-      .crossJoin(graft.operators.IndexFiles.readSlices(spark, tombs)
+    lshIndexStats(spark, textTrainDeletedState(spark, dir), "n_live_docs")
+  }
+
+  /** The manifest row over an LSH state: slice counts, live ids (named
+    * `liveName`) and tombstoned ids. */
+  private def lshIndexStats(spark: SparkSession, state: String,
+      liveName: String): DataFrame = {
+    val nData = layout.slices(spark, state, Bands).size
+    val nTomb = layout.slices(spark, state, layout.tombs).size
+    layout.live(spark, state)
+      .agg(count_distinct(col("rec_id")).as(liveName))
+      .crossJoin(layout.dead(spark, state)
         .agg(count_distinct(col("rec_id")).as("n_dead_ids")))
       .select(lit(nData.toLong).as("n_data_slices"),
         lit(nTomb.toLong).as("n_tombstone_slices"),
-        col("n_live_docs"), col("n_dead_ids"))
+        col(liveName), col("n_dead_ids"))
   }
 
   /** Declared query — the MEDIA index manifest, [[textIndexStatsQuery]]'s
@@ -849,19 +681,9 @@ object StreamingDedup {
   def mediaIndexStatsQuery(spark: SparkSession, dir: String): DataFrame = {
     // the media delete serve's EXACT lifecycle — one shared build, the
     // manifest readout observes the real dirs per invocation
-    val state = graft.operators.Multimodal.mediaTrainDeletedState(spark, dir)
-    val bands = s"$state/bands"
-    val tombs = s"$state/tombstones"
-    val nData = listSlices(spark, bands).size
-    val nTomb = listSlices(spark, tombs).size
-    graft.operators.IndexFiles
-      .readLiveFrom(spark, listSlices(spark, bands), tombs, "rec_id")
-      .agg(count_distinct(col("rec_id")).as("n_live_assets"))
-      .crossJoin(graft.operators.IndexFiles.readSlices(spark, tombs)
-        .agg(count_distinct(col("rec_id")).as("n_dead_ids")))
-      .select(lit(nData.toLong).as("n_data_slices"),
-        lit(nTomb.toLong).as("n_tombstone_slices"),
-        col("n_live_assets"), col("n_dead_ids"))
+    lshIndexStats(spark,
+      graft.operators.Multimodal.mediaTrainDeletedState(spark, dir),
+      "n_live_assets")
   }
 
   /** The declared-query form: stream the documents table through the
@@ -903,7 +725,7 @@ object StreamingDedup {
         appendBatch(docs.filter(col("doc_id") <= cut1), state, out)
         appendBatch(docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
           state, out)
-        compactState(spark, state, 1)
+        layout.compact(spark, state, 1)
         appendBatch(docs.filter(col("doc_id") > cut2), state, out)
       }
     }
@@ -939,7 +761,7 @@ object StreamingDedup {
         appendEmbeddingBatch(
           emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), state, out,
           bucketCap = bucketCap)
-        compactState(spark, state, 1)
+        layout.compact(spark, state, 1)
         appendEmbeddingBatch(emb.filter(col("vec_id") > cut2), state, out,
           bucketCap = bucketCap)
       }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ClusterIndex, Similarity}
+import graft.operators.{ClusterIndex, IndexFiles, Similarity}
 
 /** Pins for the incremental semantic-cluster maintenance (VERDICT r11
   * ask #5): the append path must be ROW-IDENTICAL to the rebuild — that
@@ -303,7 +303,7 @@ class ClusterIndexSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
       assert(after == before)
       for (sub <- Seq("emb", "pairs", "knn", "labels")) {
-        val slices = streaming.StreamingDedup.listSlices(spark, s"$state/$sub")
+        val slices = IndexFiles.listSlices(spark, s"$state/$sub")
         assert(slices.map(_.split('/').last) == Seq("c1"), s"$sub: $slices")
       }
       // an as-of read whose snapshot predates the fold refuses loudly
@@ -352,16 +352,18 @@ class ClusterIndexSpec extends SparkSpec {
       ClusterIndex.rebucketIndex(spark, stateA, stateB,
         graft.operators.Similarity.widenedBits(41L, 2))
       val alias = TempDirs.scoped("graft_cl_cut_alias")
-      intercept[Exception] { ClusterIndex.resolveServing(alias) }
-      ClusterIndex.cutover(spark, alias, stateA)
-      assert(ClusterIndex.resolveServing(alias) == stateA)
+      intercept[Exception] { IndexFiles.resolveServing(alias) }
+      ClusterIndex.layout.cutoverProbed(spark, alias, stateA)(
+        ClusterIndex.checkGeometry(spark, stateA))
+      assert(IndexFiles.resolveServing(alias) == stateA)
       val servedA = ClusterIndex.clusters(spark,
-        ClusterIndex.resolveServing(alias)).collect().map(_.toString).toSeq
+        IndexFiles.resolveServing(alias)).collect().map(_.toString).toSeq
       assert(servedA == ClusterIndex.clusters(spark, stateA)
         .collect().map(_.toString).toSeq)
       // re-point at the remedy output; the pointer file holds the full path
-      ClusterIndex.cutover(spark, alias, stateB)
-      assert(ClusterIndex.resolveServing(alias) == stateB)
+      ClusterIndex.layout.cutoverProbed(spark, alias, stateB)(
+        ClusterIndex.checkGeometry(spark, stateB))
+      assert(IndexFiles.resolveServing(alias) == stateB)
       assert(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(alias, "current")),
         java.nio.charset.StandardCharsets.UTF_8) == stateB)
@@ -369,19 +371,22 @@ class ClusterIndexSpec extends SparkSpec {
         java.nio.file.Paths.get(alias, ".current.tmp")))
       // half-built target (no slices) refuses and leaves the pointer alone
       val half = TempDirs.scoped("graft_cl_cut_half")
-      intercept[Exception] { ClusterIndex.cutover(spark, alias, half) }
-      assert(ClusterIndex.resolveServing(alias) == stateB)
+      intercept[Exception] {
+        ClusterIndex.layout.cutoverProbed(spark, alias, half)(
+          ClusterIndex.checkGeometry(spark, half))
+      }
+      assert(IndexFiles.resolveServing(alias) == stateB)
       // retire: refuses the live target, refuses a non-cluster dir, then
       // deletes the replaced state without disturbing the served one
-      intercept[Exception] { ClusterIndex.retire(alias, stateB) }
+      intercept[Exception] { ClusterIndex.layout.retire(alias, stateB) }
       val notState = TempDirs.scoped("graft_cl_cut_notstate")
       val stray = java.nio.file.Paths.get(notState, "unrelated.txt")
       java.nio.file.Files.write(stray, "not graft state".getBytes)
-      intercept[Exception] { ClusterIndex.retire(alias, notState) }
+      intercept[Exception] { ClusterIndex.layout.retire(alias, notState) }
       assert(java.nio.file.Files.exists(stray))
-      ClusterIndex.retire(alias, stateA)
+      ClusterIndex.layout.retire(alias, stateA)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(stateA)))
-      assert(ClusterIndex.clusters(spark, ClusterIndex.resolveServing(alias))
+      assert(ClusterIndex.clusters(spark, IndexFiles.resolveServing(alias))
         .collect().nonEmpty)
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import graft.operators.{IvfIndex, Similarity}
+import graft.operators.{IndexFiles, IvfIndex, Similarity}
 
 class IvfIndexSpec extends SparkSpec {
 
@@ -36,14 +36,14 @@ class IvfIndexSpec extends SparkSpec {
     val inc = TempDirs.scoped("graft_ivf_inc")
     IvfIndex.build(emb.filter(col("vec_id") <= cut1), inc)
     IvfIndex.append(emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), inc)
-    IvfIndex.compact(spark, inc, 1)
+    IvfIndex.layout.compact(spark, inc, 1)
     IvfIndex.append(emb.filter(col("vec_id") > cut2), inc)
 
     // Rebuild: one slice over the full corpus under the SAME centroids
     // (appends never retrain, so equality is over the frozen geometry).
     val full = TempDirs.scoped("graft_ivf_full")
     IvfIndex.build(emb, full,
-      centroids = Some(IvfIndex.loadCentroids(spark, inc)))
+      centroids = Some(IndexFiles.loadCentroids(spark, inc)))
 
     val q = queriesOf(sf)
     assert(keyOf(IvfIndex.topK(spark, inc, q)) ==
@@ -80,10 +80,10 @@ class IvfIndexSpec extends SparkSpec {
     // forget every 6th even id on shard A only
     val dropped = emb.filter(col("vec_id") % 6 === 0)
       .select(col("vec_id"))
-    IvfIndex.delete(dropped, a)
+    IvfIndex.layout.delete(dropped, a)
     val dst = TempDirs.scoped("graft_ivf_tomb_dst")
     IvfIndex.merge(spark, dst, Seq(a, b))
-    val live = IvfIndex.postings(spark, dst)
+    val live = IvfIndex.layout.live(spark, dst)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     val droppedIds = dropped.collect().map(_.getLong(0)).toSet
     assert(droppedIds.nonEmpty)
@@ -91,15 +91,15 @@ class IvfIndexSpec extends SparkSpec {
     // everything not dropped survives the merge exactly once
     val all = emb.select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(live == all.diff(droppedIds))
-    val liveCount = IvfIndex.postings(spark, dst).count()
+    val liveCount = IvfIndex.layout.live(spark, dst).count()
     assert(liveCount == live.size) // no duplicated postings across shards
 
     // a FULLY tombstoned shard contributes nothing (its empty slice is
     // skipped — a part-less parquet dir would break every later read)
-    IvfIndex.delete(emb.filter(col("vec_id") % 2 === 0).select(col("vec_id")), a)
+    IvfIndex.layout.delete(emb.filter(col("vec_id") % 2 === 0).select(col("vec_id")), a)
     val dst2 = TempDirs.scoped("graft_ivf_tomb_dst2")
     IvfIndex.merge(spark, dst2, Seq(a, b))
-    val live2 = IvfIndex.postings(spark, dst2)
+    val live2 = IvfIndex.layout.live(spark, dst2)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(live2 == all.filter(_ % 2 == 1))
   }
@@ -112,9 +112,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.append(emb.filter(col("vec_id") > top / 2), idx)
     val q = queriesOf(sf)
     val before = keyOf(IvfIndex.topK(spark, idx, q))
-    IvfIndex.compact(spark, idx, 1)
-    val slices = graft.streaming.StreamingDedup
-      .listSlices(spark, s"$idx/postings").map(_.split('/').last)
+    IvfIndex.layout.compact(spark, idx, 1)
+    val slices = IndexFiles.listSlices(spark, s"$idx/postings")
+      .map(_.split('/').last)
     assert(slices == Seq("c1"), s"expected one compacted slice, got $slices")
     assert(keyOf(IvfIndex.topK(spark, idx, q)) == before)
   }
@@ -125,9 +125,9 @@ class IvfIndexSpec extends SparkSpec {
     val idx = TempDirs.scoped("graft_ivf_replay")
     IvfIndex.build(emb.filter(col("vec_id") <= top / 2), idx)
     val id = IvfIndex.append(emb.filter(col("vec_id") > top / 2), idx)
-    val n = IvfIndex.postings(spark, idx).count()
+    val n = IvfIndex.layout.live(spark, idx).count()
     IvfIndex.append(emb.filter(col("vec_id") > top / 2), idx, sliceId = id)
-    assert(IvfIndex.postings(spark, idx).count() == n)
+    assert(IvfIndex.layout.live(spark, idx).count() == n)
   }
 
   test("query scan is pruned to the probed cells (partition pruning)") {
@@ -255,19 +255,19 @@ class IvfIndexSpec extends SparkSpec {
       "left_anti"), idxB)
     val alias = TempDirs.scoped("graft_ivf_cut_alias")
     // unpointed alias fails loudly, not silently empty
-    intercept[Exception] { IvfIndex.resolveServing(alias) }
+    intercept[Exception] { IndexFiles.resolveServing(alias) }
     // point at A; serve through the pointer == serve A directly
-    IvfIndex.cutover(spark, alias, idxA)
-    assert(IvfIndex.resolveServing(alias) == idxA)
-    val servedA = IvfIndex.topK(spark, IvfIndex.resolveServing(alias), q)
+    IvfIndex.layout.cutover(spark, alias, idxA)
+    assert(IndexFiles.resolveServing(alias) == idxA)
+    val servedA = IvfIndex.topK(spark, IndexFiles.resolveServing(alias), q)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(servedA == IvfIndex.topK(spark, idxA, q)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     // RE-POINT at B (the retrain cutover): the swap replaces atomically,
     // serves follow, and no temp residue is left behind
-    IvfIndex.cutover(spark, alias, idxB)
-    assert(IvfIndex.resolveServing(alias) == idxB)
-    val servedB = IvfIndex.topK(spark, IvfIndex.resolveServing(alias), q)
+    IvfIndex.layout.cutover(spark, alias, idxB)
+    assert(IndexFiles.resolveServing(alias) == idxB)
+    val servedB = IvfIndex.topK(spark, IndexFiles.resolveServing(alias), q)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(servedB != servedA)
     assert(!java.nio.file.Files.exists(
@@ -285,19 +285,19 @@ class IvfIndexSpec extends SparkSpec {
     // half-built targets are refused: centroids but no postings slice
     val half = TempDirs.scoped("graft_ivf_cut_half")
     IvfIndex.init(emb, half)
-    intercept[Exception] { IvfIndex.cutover(spark, alias, half) }
+    intercept[Exception] { IvfIndex.layout.cutover(spark, alias, half) }
     // ...and a refused cutover leaves the pointer on the live index
-    assert(IvfIndex.resolveServing(alias) == idxB)
+    assert(IndexFiles.resolveServing(alias) == idxB)
     // retirement: the replaced dir deletes once the alias moved on, but
     // the one catastrophic mistake — retiring the dir the alias STILL
     // serves — is refused and leaves the live index untouched
-    intercept[Exception] { IvfIndex.retire(alias, idxB) }
-    assert(IvfIndex.topK(spark, IvfIndex.resolveServing(alias), q)
+    intercept[Exception] { IvfIndex.layout.retire(alias, idxB) }
+    assert(IvfIndex.topK(spark, IndexFiles.resolveServing(alias), q)
       .collect().nonEmpty)
-    IvfIndex.retire(alias, idxA)
+    IvfIndex.layout.retire(alias, idxA)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idxA)))
     // serving through the alias is unaffected by the retirement
-    assert(IvfIndex.topK(spark, IvfIndex.resolveServing(alias), q)
+    assert(IvfIndex.topK(spark, IndexFiles.resolveServing(alias), q)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSeq == servedB)
   }
@@ -307,14 +307,14 @@ class IvfIndexSpec extends SparkSpec {
     val idxA = TempDirs.scoped("graft_ivf_rg_a")
     IvfIndex.build(emb, idxA)
     val alias = TempDirs.scoped("graft_ivf_rg_alias")
-    IvfIndex.cutover(spark, alias, idxA)
+    IvfIndex.layout.cutover(spark, alias, idxA)
     // a dir that is not an index (no centroids/, no completion marker) is
     // refused and left untouched — a transposed or mistyped argument must
     // never delete unrelated data (ADVICE r19)
     val notIndex = TempDirs.scoped("graft_ivf_rg_notidx")
     val stray = java.nio.file.Paths.get(notIndex, "unrelated.txt")
     java.nio.file.Files.write(stray, "not graft state".getBytes)
-    intercept[Exception] { IvfIndex.retire(alias, notIndex) }
+    intercept[Exception] { IvfIndex.layout.retire(alias, notIndex) }
     assert(java.nio.file.Files.exists(stray))
     // retire-then-as-of (VERDICT r19 #6): a reader holding a recorded
     // snapshot id of a RETIRED dir fails with the loud no-slices refusal,
@@ -322,11 +322,11 @@ class IvfIndexSpec extends SparkSpec {
     // contract's failure mode is observable, not quiet corruption
     val idxB = TempDirs.scoped("graft_ivf_rg_b")
     IvfIndex.build(emb, idxB)
-    IvfIndex.cutover(spark, alias, idxB)
-    IvfIndex.retire(alias, idxA)
+    IvfIndex.layout.cutover(spark, alias, idxB)
+    IvfIndex.layout.retire(alias, idxA)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idxA)))
     val e = intercept[Exception] {
-      IvfIndex.postings(spark, idxA, asOf = 0L).count()
+      IvfIndex.layout.live(spark, idxA, asOf = 0L).count()
     }
     assert(e.getMessage.contains("no index slices"),
       s"expected the loud no-slices refusal, got: ${e.getMessage}")
@@ -379,13 +379,13 @@ class IvfIndexSpec extends SparkSpec {
     // a forget request lands before the retrain — the rebuild must not
     // resurrect it
     val dead = orig.filter(col("vec_id") % 10 === 4).select(col("vec_id"))
-    IvfIndex.delete(dead, idx)
+    IvfIndex.layout.delete(dead, idx)
     // ...and a deleted-then-RE-APPENDED set is live (its append slice
     // postdates the tombstone) — the retrain must neither drop it nor
     // carry its id into the new trail (a blind tombstone carry would
     // kill it, since the carried slice postdates the rebuilt b0)
     val revived = orig.filter(col("vec_id") % 10 === 6)
-    IvfIndex.delete(revived.select(col("vec_id")), idx)
+    IvfIndex.layout.delete(revived.select(col("vec_id")), idx)
     IvfIndex.append(revived, idx)
     val before = IvfIndex.cellBalanceOf(spark, idx).collect().head
     info(s"drifted imbalance = ${before.getDouble(4)}")
@@ -402,16 +402,16 @@ class IvfIndexSpec extends SparkSpec {
     assert(after.getLong(5) == 0L)
     assert(after.getDouble(4) < before.getDouble(4))
     // same live set: nothing lost, nothing resurrected
-    val liveOld = IvfIndex.postings(spark, idx)
+    val liveOld = IvfIndex.layout.live(spark, idx)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    val liveNew = IvfIndex.postings(spark, fresh)
+    val liveNew = IvfIndex.layout.live(spark, fresh)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(liveNew == liveOld)
     val deadIds = dead.collect().map(_.getLong(0)).toSet
     assert(deadIds.nonEmpty && liveNew.toSet.intersect(deadIds).isEmpty)
     // the forget trail carried: the retrained index still records the
     // tombstoned ids (the forget audit's n_dead evidence survives)
-    val carried = operators.IndexFiles.readSlices(spark,
+    val carried = IndexFiles.readSlices(spark,
         s"$fresh/tombstones").select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(carried == deadIds)
@@ -421,7 +421,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(carried.intersect(revivedIds).isEmpty)
     // the old index is untouched — its pre-delete snapshot stays
     // addressable for as-of reads
-    assert(IvfIndex.postings(spark, idx, asOf = 1L).count() ==
+    assert(IvfIndex.layout.live(spark, idx, asOf = 1L).count() ==
       orig.count() + drifted.count())
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import graft.operators.{IvfPqIndex, Similarity}
+import graft.operators.{IndexFiles, IvfPqIndex, Similarity}
 
 class IvfPqIndexSpec extends SparkSpec {
 
@@ -35,13 +35,13 @@ class IvfPqIndexSpec extends SparkSpec {
     IvfPqIndex.build(emb.filter(col("vec_id") <= cut1), inc)
     IvfPqIndex.append(
       emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), inc)
-    IvfPqIndex.compact(spark, inc, 1)
+    IvfPqIndex.layout.compact(spark, inc, 1)
     IvfPqIndex.append(emb.filter(col("vec_id") > cut2), inc)
 
     val full = TempDirs.scoped("graft_ivfpq_full")
     IvfPqIndex.build(emb, full,
-      centroids = Some(IvfPqIndex.loadCentroids(spark, inc)),
-      codebooks = Some(IvfPqIndex.loadCodebooks(spark, inc)))
+      centroids = Some(IndexFiles.loadCentroids(spark, inc)),
+      codebooks = Some(IndexFiles.loadCodebooks(spark, inc)))
 
     val q = queriesOf(sf)
     assert(keyOf(IvfPqIndex.topK(spark, inc, q, emb)) ==
@@ -76,14 +76,14 @@ class IvfPqIndexSpec extends SparkSpec {
 
     val del = TempDirs.scoped("graft_ivfpq_del")
     IvfPqIndex.build(emb, del)
-    IvfPqIndex.delete(forget, del)
+    IvfPqIndex.layout.delete(forget, del)
 
     // survivors-only index under the SAME centroids+codebooks: the delete
     // verb must be indistinguishable from never having indexed those ids
     val surv = TempDirs.scoped("graft_ivfpq_surv")
     IvfPqIndex.build(emb.join(forget, Seq("vec_id"), "left_anti"), surv,
-      centroids = Some(IvfPqIndex.loadCentroids(spark, del)),
-      codebooks = Some(IvfPqIndex.loadCodebooks(spark, del)))
+      centroids = Some(IndexFiles.loadCentroids(spark, del)),
+      codebooks = Some(IndexFiles.loadCodebooks(spark, del)))
 
     val q = queriesOf(sf)
     val served = IvfPqIndex.topK(spark, del, q, emb)
@@ -99,7 +99,7 @@ class IvfPqIndexSpec extends SparkSpec {
     val idx = TempDirs.scoped("graft_ivfpq_asof")
     IvfPqIndex.build(emb, idx)
     val before = keyOf(IvfPqIndex.topK(spark, idx, queriesOf(sf), emb))
-    IvfPqIndex.delete(IvfIndex.deleteSet(emb), idx)
+    IvfPqIndex.layout.delete(IvfIndex.deleteSet(emb), idx)
     val snap = keyOf(IvfPqIndex.topK(spark, idx, queriesOf(sf), emb, asOf = 0L))
     assert(snap == before)
     // and the live read has actually moved on
@@ -149,9 +149,9 @@ class IvfPqIndexSpec extends SparkSpec {
     // retrain — the rebuild must neither resurrect the dead nor kill the
     // revived (the IvfIndexSpec re-append edge case, compressed twin)
     val dead = orig.filter(col("vec_id") % 10 === 4).select(col("vec_id"))
-    IvfPqIndex.delete(dead, idx)
+    IvfPqIndex.layout.delete(dead, idx)
     val revived = orig.filter(col("vec_id") % 10 === 6)
-    IvfPqIndex.delete(revived.select(col("vec_id")), idx)
+    IvfPqIndex.layout.delete(revived.select(col("vec_id")), idx)
     IvfPqIndex.append(revived, idx)
 
     val before = IvfIndex.cellBalanceOf(spark, idx).collect().head
@@ -184,10 +184,10 @@ class IvfPqIndexSpec extends SparkSpec {
     }
     def reconError(dir: String): Double = {
       val nc = Similarity.l2NormalizedCentroids(
-        IvfPqIndex.loadCentroids(spark, dir))
-      val cbs = IvfPqIndex.loadCodebooks(spark, dir)
+        IndexFiles.loadCentroids(spark, dir))
+      val cbs = IndexFiles.loadCodebooks(spark, dir)
       val subDim = dim / Similarity.PqSubspaces
-      val posts = IvfPqIndex.postings(spark, dir)
+      val posts = IvfPqIndex.layout.live(spark, dir)
         .select(col("vec_id"), col("codes"), col("cell")).collect()
       val errs = posts.map { r =>
         val v = l2n(vecs(r.getLong(0)))
@@ -211,14 +211,14 @@ class IvfPqIndexSpec extends SparkSpec {
         s"$errOld -> $errNew")
 
     // 3) same live set: nothing lost, nothing resurrected; trail carried
-    val liveOld = IvfPqIndex.postings(spark, idx)
+    val liveOld = IvfPqIndex.layout.live(spark, idx)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    val liveNew = IvfPqIndex.postings(spark, fresh)
+    val liveNew = IvfPqIndex.layout.live(spark, fresh)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(liveNew == liveOld)
     val deadIds = dead.collect().map(_.getLong(0)).toSet
     assert(deadIds.nonEmpty && liveNew.toSet.intersect(deadIds).isEmpty)
-    val carried = operators.IndexFiles.readSlices(spark,
+    val carried = IndexFiles.readSlices(spark,
         s"$fresh/tombstones").select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(carried == deadIds)
@@ -226,7 +226,7 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(revivedIds.nonEmpty && revivedIds.subsetOf(liveNew.toSet))
     assert(carried.intersect(revivedIds).isEmpty)
     // 4) the old index is untouched — pre-delete snapshot still addressable
-    assert(IvfPqIndex.postings(spark, idx, asOf = 1L).count() ==
+    assert(IvfPqIndex.layout.live(spark, idx, asOf = 1L).count() ==
       orig.count() + drifted.count())
   }
 
@@ -293,27 +293,25 @@ class IvfPqIndexSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val alias = TempDirs.scoped("graft_ivfpq_cb_alias")
-    // (a) codebooks/ absent entirely: a plain-IVF dir passes the generic
-    // probe by design, but the compressed verb requires the table
+    // (a) codebooks/ absent entirely: a plain-IVF dir is a complete IVF
+    // layout, but the compressed layout declares the codebooks table
     val plainIvf = TempDirs.scoped("graft_ivfpq_cb_plain")
     IvfIndex.build(emb, plainIvf)
-    intercept[Exception] { IvfPqIndex.cutover(spark, alias, plainIvf) }
-    intercept[Exception] { IvfIndex.resolveServing(alias) } // still unpointed
-    // (b) codebooks/ present but gutted: now even the GENERIC verb
-    // refuses (the conditional codebooks probe), and a refused cutover
-    // leaves the pointer where it was
+    intercept[Exception] { IvfPqIndex.layout.cutover(spark, alias, plainIvf) }
+    intercept[Exception] { IndexFiles.resolveServing(alias) } // still unpointed
+    // (b) codebooks/ present but gutted: the compressed layout's frozen
+    // probe refuses, and a refused cutover leaves the pointer where it was
     val full = TempDirs.scoped("graft_ivfpq_cb_full")
     IvfPqIndex.build(emb, full)
-    IvfPqIndex.cutover(spark, alias, full) // complete index: accepted
-    assert(IvfIndex.resolveServing(alias) == full)
+    IvfPqIndex.layout.cutover(spark, alias, full) // complete index: accepted
+    assert(IndexFiles.resolveServing(alias) == full)
     val gutted = TempDirs.scoped("graft_ivfpq_cb_gut")
     IvfPqIndex.build(emb, gutted)
     val cbDir = java.nio.file.Paths.get(gutted, "codebooks")
     java.nio.file.Files.list(cbDir)
       .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    intercept[Exception] { IvfIndex.cutover(spark, alias, gutted) }
-    intercept[Exception] { IvfPqIndex.cutover(spark, alias, gutted) }
-    assert(IvfIndex.resolveServing(alias) == full)
+    intercept[Exception] { IvfPqIndex.layout.cutover(spark, alias, gutted) }
+    assert(IndexFiles.resolveServing(alias) == full)
   }
 
   test("recall@k vs exact top-k is measured and above the floor") {

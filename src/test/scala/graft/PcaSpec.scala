@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Pca
+import graft.operators.{IndexFiles, Pca}
 
 class PcaSpec extends SparkSpec {
 
@@ -176,17 +176,19 @@ class PcaSpec extends SparkSpec {
     // shape at this family's layout)
     val alias = TempDirs.scoped("graft_pca_spec_alias")
     val half = TempDirs.scoped("graft_pca_spec_half")
-    intercept[Exception] { Pca.cutover(spark, alias, half) }
-    intercept[Exception] { Pca.resolveServing(alias) } // refusal left it unpointed
+    intercept[Exception] {
+      Pca.layout.cutoverProbed(spark, alias, half)(Pca.checkModel(spark, half))
+    }
+    intercept[Exception] { IndexFiles.resolveServing(alias) } // refusal left it unpointed
     val idx = Pca.pcaIndex(spark, sf)
-    Pca.cutover(spark, alias, idx)
-    assert(Pca.resolveServing(alias) == idx)
+    Pca.layout.cutoverProbed(spark, alias, idx)(Pca.checkModel(spark, idx))
+    assert(IndexFiles.resolveServing(alias) == idx)
     // retire refuses the live target and refuses non-PCA dirs
-    intercept[Exception] { Pca.retire(alias, idx) }
+    intercept[Exception] { Pca.layout.retire(alias, idx) }
     val notIdx = TempDirs.scoped("graft_pca_spec_notidx")
     val stray = java.nio.file.Paths.get(notIdx, "unrelated.txt")
     java.nio.file.Files.write(stray, "not graft state".getBytes)
-    intercept[Exception] { Pca.retire(alias, notIdx) }
+    intercept[Exception] { Pca.layout.retire(alias, notIdx) }
     assert(java.nio.file.Files.exists(stray))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{PqIndex, Similarity}
+import graft.operators.{IndexFiles, PqIndex, Similarity}
 
 class PqIndexSpec extends SparkSpec {
 
@@ -33,12 +33,12 @@ class PqIndexSpec extends SparkSpec {
     val inc = TempDirs.scoped("graft_pq_inc")
     PqIndex.build(emb.filter(col("vec_id") <= cut1), inc)
     PqIndex.append(emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), inc)
-    PqIndex.compact(spark, inc, 1)
+    PqIndex.layout.compact(spark, inc, 1)
     PqIndex.append(emb.filter(col("vec_id") > cut2), inc)
 
     val full = TempDirs.scoped("graft_pq_full")
     PqIndex.build(emb, full,
-      codebooks = Some(PqIndex.loadCodebooks(spark, inc)))
+      codebooks = Some(IndexFiles.loadCodebooks(spark, inc)))
 
     val q = queriesOf(sf)
     assert(keyOf(PqIndex.topK(spark, inc, q, emb)) ==
@@ -51,21 +51,21 @@ class PqIndexSpec extends SparkSpec {
     val idx = TempDirs.scoped("graft_pq_replay")
     PqIndex.build(emb.filter(col("vec_id") <= top / 2), idx)
     val id = PqIndex.append(emb.filter(col("vec_id") > top / 2), idx)
-    val n = PqIndex.codes(spark, idx).count()
+    val n = PqIndex.layout.live(spark, idx).count()
     PqIndex.append(emb.filter(col("vec_id") > top / 2), idx, sliceId = id)
-    assert(PqIndex.codes(spark, idx).count() == n)
+    assert(PqIndex.layout.live(spark, idx).count() == n)
   }
 
   test("persisted codes match the codegen encoder against frozen codebooks") {
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val idx = TempDirs.scoped("graft_pq_codes")
     PqIndex.build(emb, idx)
-    val cbs = PqIndex.loadCodebooks(spark, idx)
+    val cbs = IndexFiles.loadCodebooks(spark, idx)
     val fresh = emb.select(col("vec_id"),
         graft.functions.GraftExpressions.pqEncode(col("embedding"), cbs,
           Similarity.PqSubspaces, Similarity.PqCodebookSize).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val stored = PqIndex.codes(spark, idx)
+    val stored = PqIndex.layout.live(spark, idx)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(stored == fresh)
     assert(stored.nonEmpty)

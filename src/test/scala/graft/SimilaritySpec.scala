@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
-import graft.operators.Similarity
+import graft.operators.{IndexFiles, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -743,7 +743,7 @@ class SimilaritySpec extends SparkSpec {
       graft.operators.TextAnalysis.ragChunksOf(
         docs.filter(col("doc_id") < Similarity.NumQueryVectors)))
     val split = rows(Similarity.liServeOver(qf,
-      graft.operators.IndexFiles.readSlices(spark, s"$st/feats")))
+      IndexFiles.readSlices(spark, s"$st/feats")))
     assert(split == batch)
   }
 

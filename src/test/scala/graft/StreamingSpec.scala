@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.operators.IndexFiles
 import graft.streaming.{MicroBatchPipeline, StreamQueries}
 
 class StreamingSpec extends SparkSpec {
@@ -20,6 +21,49 @@ class StreamingSpec extends SparkSpec {
         .find(_.getFileName.toString.endsWith(".parquet")).get
       finally listing.close()
     Files.move(part, landing.resolve(name))
+  }
+
+  test("events readers leave the caller's SQLConf as they found it") {
+    val s = spark.newSession()
+    assert(!s.conf.getAll.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    val before = s.conf.getAll
+    assert(Tables.events(s, sf).count() > 0)
+    assert(MicroBatchPipeline.eventsStream(s, sf).isStreaming)
+    assert(s.conf.getAll == before)
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads with micros-exact ts") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = TempDirs.scoped("graft_nanos_events")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val nanos = Seq(1700000000123456789L, 1700003600000000999L, 0L)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema)
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    nanos.zipWithIndex.foreach { case (n, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", n))
+    }
+    writer.close()
+    val s = spark.newSession()
+    // a plain read rejects the encoding: the loaders are what make it load
+    intercept[Exception] { s.read.parquet(s"$dir/events.parquet").collect() }
+    def micros(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select(col("event_id"), unix_micros(col("ts"))).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    val expected = nanos.zipWithIndex.map { case (n, i) => (i.toLong, n / 1000) }
+    assert(micros(Tables.events(s, dir)) == expected)
+    val streamed = MicroBatchPipeline.runToResult(s,
+      MicroBatchPipeline.eventsStream(s, dir).select(col("event_id"), col("ts")),
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    assert(micros(streamed) == expected)
+    assert(!s.conf.getAll.contains("spark.sql.legacy.parquet.nanosAsLong"))
   }
 
   test("hourly agg over the stream equals the same aggregation in batch") {
@@ -411,7 +455,7 @@ class StreamingSpec extends SparkSpec {
       docs.filter(col("doc_id") <= third), s2, o2))
     val bIds = ids(StreamingDedup.appendBatch(
       docs.filter(col("doc_id") > third && col("doc_id") <= mid), s2, o2))
-    StreamingDedup.compactState(spark, s2, 1)
+    StreamingDedup.layout.compact(spark, s2, 1)
     // post-compaction the only band slice is c1 -> next id must be 2
     val cIds = ids(StreamingDedup.appendBatch(
       docs.filter(col("doc_id") > mid), s2, o2))
@@ -476,11 +520,11 @@ class StreamingSpec extends SparkSpec {
     runOnce() // batch 1
     assert(survivorIds == Set(0L, 1L, 11L))
     assert(sliceCount("bands") == 2)
-    StreamingDedup.compactState(spark, state, upToBatchId = 1)
+    StreamingDedup.layout.compact(spark, state, 1)
     assert(sliceCount("bands") == 1)
     assert(sliceCount("sets") == 1)
     // compaction is idempotent (re-run = no-op on a single slice)
-    StreamingDedup.compactState(spark, state, upToBatchId = 1)
+    StreamingDedup.layout.compact(spark, state, 1)
     assert(sliceCount("bands") == 1)
     // dups arriving after compaction are still caught from the merged index
     landFile(landing, "c.parquet",
@@ -642,7 +686,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     StreamingDedup.appendBatch(docs.filter(!isEval), state, sink).count()
-    val slicesBefore = StreamingDedup.listSlices(spark, s"$state/bands").sorted
+    val slicesBefore = IndexFiles.listSlices(spark, s"$state/bands").sorted
 
     def serve(splits: Seq[org.apache.spark.sql.DataFrame]): Seq[(Long, Long)] = {
       val out = graft.TempDirs.scoped("test_tserve_out")
@@ -662,7 +706,7 @@ class StreamingSpec extends SparkSpec {
     assert(oneBatch == twoBatches) // fixed index => boundaries cannot matter
     assert(oneBatch.nonEmpty)
     // read-only: serving wrote nothing into the index
-    assert(StreamingDedup.listSlices(spark, s"$state/bands").sorted == slicesBefore)
+    assert(IndexFiles.listSlices(spark, s"$state/bands").sorted == slicesBefore)
   }
 
   test("late audit: conservation and a genuine drop set") {

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, IvfIndex, IvfPqIndex, PqIndex, Similarity}
+import graft.operators.{Dedup, IndexFiles, IvfIndex, IvfPqIndex, PqIndex,
+  Similarity}
 import graft.streaming.StreamingDedup
 
 /** The persisted indexes' DELETE/tombstone lifecycle (the reference's O15
@@ -29,7 +30,7 @@ class TombstoneSpec extends SparkSpec {
   test("IVF: delete-then-query equals rebuild-without-deleted") {
     val idx = TempDirs.scoped("graft_tomb_ivf")
     IvfIndex.build(emb, idx)
-    IvfIndex.delete(IvfIndex.deleteSet(emb), idx)
+    IvfIndex.layout.delete(IvfIndex.deleteSet(emb), idx)
     val afterDelete = keyOf(IvfIndex.topK(spark, idx, queries))
 
     // Rebuild over the filtered corpus under the SAME frozen centroids:
@@ -38,7 +39,7 @@ class TombstoneSpec extends SparkSpec {
     val dead = deletedIds
     val rebuilt = TempDirs.scoped("graft_tomb_ivf_rebuild")
     IvfIndex.build(emb.filter(!col("vec_id").isin(dead.toSeq.map(Long.box): _*)),
-      rebuilt, centroids = Some(IvfIndex.loadCentroids(spark, idx)))
+      rebuilt, centroids = Some(IndexFiles.loadCentroids(spark, idx)))
     assert(afterDelete == keyOf(IvfIndex.topK(spark, rebuilt, queries)))
     assert(afterDelete.nonEmpty)
     assert(afterDelete.forall { case (_, _, v) => !dead.contains(v) })
@@ -49,12 +50,12 @@ class TombstoneSpec extends SparkSpec {
   test("IVF: compaction folds tombstones physically and removes them") {
     val idx = TempDirs.scoped("graft_tomb_fold")
     IvfIndex.build(emb, idx)
-    val tombId = IvfIndex.delete(IvfIndex.deleteSet(emb), idx)
+    val tombId = IvfIndex.layout.delete(IvfIndex.deleteSet(emb), idx)
     val before = keyOf(IvfIndex.topK(spark, idx, queries))
-    IvfIndex.compact(spark, idx, tombId)
+    IvfIndex.layout.compact(spark, idx, tombId)
     // Tombstones consumed; the surviving slice physically lacks the ids.
-    assert(StreamingDedup.listSlices(spark, s"$idx/tombstones").isEmpty)
-    val slices = StreamingDedup.listSlices(spark, s"$idx/postings")
+    assert(IndexFiles.listSlices(spark, s"$idx/tombstones").isEmpty)
+    val slices = IndexFiles.listSlices(spark, s"$idx/postings")
       .map(_.split('/').last)
     assert(slices == Seq(s"c$tombId"), s"unexpected slices $slices")
     val dead = deletedIds
@@ -71,7 +72,7 @@ class TombstoneSpec extends SparkSpec {
     // Vacuity guard: the forget-set must actually appear in the pre-delete
     // top-k, or the snapshot comparison proves nothing.
     assert(before.exists { case (_, _, v) => deletedIds.contains(v) })
-    IvfIndex.delete(IvfIndex.deleteSet(emb), idx)
+    IvfIndex.layout.delete(IvfIndex.deleteSet(emb), idx)
     assert(keyOf(IvfIndex.topK(spark, idx, queries, asOf = 0L)) == before)
     // The declared query is exactly this lifecycle (deterministic build).
     assert(keyOf(IvfIndex.topKIvfAsOf(spark, sf)) == before)
@@ -87,7 +88,7 @@ class TombstoneSpec extends SparkSpec {
     assert(keyOf(IvfIndex.topK(spark, idx, queries, asOf = 0L)) == pre)
     // Compaction past the snapshot coarsens history: the snapshot read
     // must refuse, not silently serve the merged state.
-    IvfIndex.compact(spark, idx, 1L)
+    IvfIndex.layout.compact(spark, idx, 1L)
     val e = intercept[IllegalArgumentException] {
       IvfIndex.topK(spark, idx, queries, asOf = 0L)
     }
@@ -99,10 +100,10 @@ class TombstoneSpec extends SparkSpec {
     // covers no slice: compaction must remove it, or an index that only
     // ever received deletes pays the tagged anti-join read forever.
     val only = TempDirs.scoped("graft_tomb_only_delete")
-    val t0 = IvfIndex.delete(IvfIndex.deleteSet(emb), only)
+    val t0 = IvfIndex.layout.delete(IvfIndex.deleteSet(emb), only)
     assert(t0 == 0L)
-    IvfIndex.compact(spark, only, t0)
-    assert(StreamingDedup.listSlices(spark, s"$only/tombstones").isEmpty,
+    IvfIndex.layout.compact(spark, only, t0)
+    assert(IndexFiles.listSlices(spark, s"$only/tombstones").isEmpty,
       "tombstone with no data slice at or below it must be purged")
   }
 
@@ -110,16 +111,16 @@ class TombstoneSpec extends SparkSpec {
     val idx = TempDirs.scoped("graft_tomb_replay")
     IvfIndex.build(emb, idx)
     val ids = IvfIndex.deleteSet(emb)
-    val tombId = IvfIndex.delete(ids, idx)
+    val tombId = IvfIndex.layout.delete(ids, idx)
     val once = keyOf(IvfIndex.topK(spark, idx, queries))
-    IvfIndex.delete(ids, idx, sliceId = tombId) // retry replaces its slice
+    IvfIndex.layout.delete(ids, idx, sliceId = tombId) // retry replaces its slice
     assert(keyOf(IvfIndex.topK(spark, idx, queries)) == once)
 
     // Re-appending the forgotten vectors (a NEWER slice than the
     // tombstone) brings them back: the index equals the never-deleted one.
     val fullBefore = TempDirs.scoped("graft_tomb_full")
     IvfIndex.build(emb, fullBefore,
-      centroids = Some(IvfIndex.loadCentroids(spark, idx)))
+      centroids = Some(IndexFiles.loadCentroids(spark, idx)))
     val dead = deletedIds
     val reAddId = IvfIndex.append(
       emb.filter(col("vec_id").isin(dead.toSeq.map(Long.box): _*)), idx)
@@ -128,7 +129,7 @@ class TombstoneSpec extends SparkSpec {
     // Slice-precise folding: compacting over b0 + tombstone + the re-add
     // must kill only the PRE-tombstone copies — the re-added rows (newer
     // than the tombstone) survive the fold.
-    IvfIndex.compact(spark, idx, reAddId)
+    IvfIndex.layout.compact(spark, idx, reAddId)
     assert(keyOf(IvfIndex.topK(spark, idx, queries)) == resurrected)
   }
 
@@ -139,23 +140,23 @@ class TombstoneSpec extends SparkSpec {
     val pq = TempDirs.scoped("graft_tomb_pq")
     PqIndex.build(emb, pq)
     val preDelete = keyOf(PqIndex.topK(spark, pq, queries, emb))
-    val tombId = PqIndex.delete(IvfIndex.deleteSet(emb), pq)
+    val tombId = PqIndex.layout.delete(IvfIndex.deleteSet(emb), pq)
     val afterDelete = keyOf(PqIndex.topK(spark, pq, queries, emb))
     // The shared as-of verb holds on the PQ layout too.
     assert(keyOf(PqIndex.topK(spark, pq, queries, emb, asOf = 0L)) == preDelete)
     val pqRebuilt = TempDirs.scoped("graft_tomb_pq_rebuild")
     PqIndex.build(emb.filter(!deadCol), pqRebuilt,
-      codebooks = Some(PqIndex.loadCodebooks(spark, pq)))
+      codebooks = Some(IndexFiles.loadCodebooks(spark, pq)))
     assert(afterDelete ==
       keyOf(PqIndex.topK(spark, pqRebuilt, queries, emb.filter(!deadCol))))
-    PqIndex.compact(spark, pq, tombId)
-    assert(StreamingDedup.listSlices(spark, s"$pq/tombstones").isEmpty)
+    PqIndex.layout.compact(spark, pq, tombId)
+    assert(IndexFiles.listSlices(spark, s"$pq/tombstones").isEmpty)
     assert(keyOf(PqIndex.topK(spark, pq, queries, emb)) == afterDelete)
 
     val ivfpq = TempDirs.scoped("graft_tomb_ivfpq")
     IvfPqIndex.build(emb, ivfpq)
     val ivfpqPre = keyOf(IvfPqIndex.topK(spark, ivfpq, queries, emb))
-    IvfPqIndex.delete(IvfIndex.deleteSet(emb), ivfpq)
+    IvfPqIndex.layout.delete(IvfIndex.deleteSet(emb), ivfpq)
     val got = keyOf(IvfPqIndex.topK(spark, ivfpq, queries, emb))
     assert(got.nonEmpty)
     assert(got.forall { case (_, _, v) => !dead.contains(v) })
@@ -199,9 +200,9 @@ class TombstoneSpec extends SparkSpec {
       state, sink).count()
     StreamingDedup.appendBatch(train.filter(col("doc_id") > cut),
       state, sink).count()
-    StreamingDedup.deleteFromIndex(spark, state,
+    StreamingDedup.layout.delete(
       train.filter(col("doc_id").isin(dead.toSeq.map(Long.box): _*))
-        .select(col("doc_id")))
+        .select(col("doc_id")), state)
     assert(serve(state, 0L) == snapshot)
     val live = serve(state, Long.MaxValue)
     assert(live.forall { case (_, m) => !dead.contains(m) })
@@ -209,7 +210,7 @@ class TombstoneSpec extends SparkSpec {
       "live serve must see the later delete or the pin is vacuous")
 
     // Compaction past the snapshot coarsens history: refuse loudly.
-    StreamingDedup.compactState(spark, state, 2L)
+    StreamingDedup.layout.compact(spark, state, 2L)
     val e = intercept[IllegalArgumentException] { serve(state, 0L) }
     assert(e.getMessage.contains("snapshot"))
   }
@@ -236,7 +237,7 @@ class TombstoneSpec extends SparkSpec {
     val state = TempDirs.scoped("graft_tomb_lsh")
     val sink = TempDirs.scoped("graft_tomb_lsh_sink")
     StreamingDedup.appendBatch(train, state, sink).count()
-    val tombId = StreamingDedup.deleteFromIndex(spark, state, delIds)
+    val tombId = StreamingDedup.layout.delete(delIds, state)
     val served = serveAgainst(state)
 
     val cleanState = TempDirs.scoped("graft_tomb_lsh_clean")
@@ -247,10 +248,10 @@ class TombstoneSpec extends SparkSpec {
 
     // Compaction folds: tombstones purged, band rows physically gone,
     // serving unchanged.
-    StreamingDedup.compactState(spark, state, tombId)
-    assert(StreamingDedup.listSlices(spark, s"$state/tombstones").isEmpty)
+    StreamingDedup.layout.compact(spark, state, tombId)
+    assert(IndexFiles.listSlices(spark, s"$state/tombstones").isEmpty)
     val bandIds = spark.read
-      .parquet(StreamingDedup.listSlices(spark, s"$state/bands"): _*)
+      .parquet(IndexFiles.listSlices(spark, s"$state/bands"): _*)
       .select("rec_id").collect().map(_.getLong(0)).toSet
     assert(bandIds.intersect(dead).isEmpty)
     assert(serveAgainst(state) == served)
@@ -262,7 +263,7 @@ class TombstoneSpec extends SparkSpec {
     val stateW = TempDirs.scoped("graft_tomb_lsh_w")
     val sinkW = TempDirs.scoped("graft_tomb_lsh_w_sink")
     StreamingDedup.appendBatch(train, stateW, sinkW).count()
-    StreamingDedup.deleteFromIndex(spark, stateW, delIds)
+    StreamingDedup.layout.delete(delIds, stateW)
     val survA = StreamingDedup.appendBatch(eval, stateW, sinkW)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val survB = StreamingDedup.appendBatch(eval, cleanState, cleanSink)
