@@ -100,12 +100,20 @@ object BpiPipeline {
       .withColumn("bpi_idr_rate_float", col("bpi_usd_rate_float") * col("fx_rate"))
       .drop("fx_rate")
 
+  /** O11 surrogate key: a random UUID string per row, in the format of
+    * Spark's `uuid()`. `uuid()` writes its random seed into the generated
+    * Java, so every plan holding it compiles a class of its own; this
+    * nondeterministic UDF is reached through the generated code's
+    * references, so the code stays the same from one batch to the next. */
+  val randomJobId: Column =
+    udf(() => java.util.UUID.randomUUID().toString).asNondeterministic()()
+
   /** O11 surrogate key + the injected clock for last_updated
     * (bpi_crawler.py:118,171). Both are injectable: production uses
-    * uuid()/current_timestamp(), tests and oracle runs pass deterministic
-    * expressions (SURVEY.md §7.4 non-determinism note). */
+    * [[randomJobId]]/current_timestamp(), tests and oracle runs pass
+    * deterministic expressions (SURVEY.md §7.4 non-determinism note). */
   def withAuditColumns(df: DataFrame,
-      jobId: Column = expr("uuid()"),
+      jobId: Column = randomJobId,
       clock: Column = current_timestamp()): DataFrame =
     df.withColumn("job_id", jobId)
       .withColumn("last_updated", formatTs(clock))
@@ -136,7 +144,7 @@ object BpiPipeline {
 
   /** The whole reference DAG (O1→O13) as one composed, typed plan. */
   def run(raw: DataFrame, rates: DataFrame,
-      jobId: Column = expr("uuid()"),
+      jobId: Column = randomJobId,
       clock: Column = current_timestamp()): Dataset[BpiSchema.EnrichedBpi] = {
     val spark = raw.sparkSession
     import spark.implicits._
@@ -148,9 +156,9 @@ object BpiPipeline {
 
   /** Streaming mode (reference entry points 2+3, SURVEY.md §3.2-3.3): a
     * landing directory of payload JSON files consumed exactly-once via
-    * checkpointed offsets, the same flatten/enrich/audit transforms, and a
-    * foreachBatch warehouse append — the accumulate/flush split without
-    * the reference's find-then-drop data-loss race. The gate runs
+    * checkpointed offsets, the same flatten/enrich/audit transforms as
+    * [[run]], and a foreachBatch warehouse append — the accumulate/flush
+    * split without the reference's find-then-drop data-loss race. The gate runs
     * per micro-batch inside foreachBatch (it needs an action). */
   def runStream(spark: SparkSession, landingDir: String, rates: DataFrame,
       warehouseDir: String, checkpoint: String,
@@ -185,7 +193,18 @@ object BpiPipeline {
     * caller's SQLConf is never written. The plan is then rebound to the
     * caller's session (`ofRows(spark, …)`) before `writeStream`: the
     * query starts on `spark`, so it registers with `spark.streams` and
-    * its listeners, and its batches run under the caller's conf. */
+    * its listeners, and its batches run under the caller's conf.
+    *
+    * The streaming plan ends at the FX join. The audit columns and the
+    * warehouse projection go on each micro-batch once it is rebound to
+    * `spark` ([[graft.streaming.MicroBatchPipeline.batchOn]]), which keeps
+    * per-batch values out of the generated code: in a streaming plan
+    * `current_timestamp()` is the batch time, written into the Java (as
+    * `uuid()` writes its seed), so every live batch compiled its largest
+    * class again. Over the rebound batch the clock folds to a string
+    * literal the code only references, and [[randomJobId]]'s code does not
+    * change. `last_updated` is therefore the time of the action that
+    * stores the row, as in the reference (bpi_crawler.py:118). */
   def startStreamWith(spark: SparkSession, landingDir: String, rates: DataFrame,
       checkpoint: String, clock: Column = current_timestamp(),
       trigger: org.apache.spark.sql.streaming.Trigger =
@@ -201,15 +220,13 @@ object BpiPipeline {
     // The analyzed plan: the reader's unresolved source is bound to a
     // session only by analysis, and it must be the clone.
     val raw = GraftColumnBridge.ofRows(spark, landed.queryExecution.analyzed)
-    val enriched = orderedSelect(
-      withAuditColumns(enrichIdr(flatten(raw), rates), expr("uuid()"), clock))
-    enriched.writeStream
+    enrichIdr(flatten(raw), rates).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(batch.toDF(), batchId)
-        ()
+        sink(orderedSelect(withAuditColumns(
+          graft.streaming.MicroBatchPipeline.batchOn(spark, batch), clock = clock)), batchId)
       }
       .start()
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -147,18 +147,34 @@ object MicroBatchPipeline {
 
   /** [[drain]] against a caller-owned checkpoint: a later drain over the
     * same checkpoint resumes after the last committed batch (a restart),
-    * so only files that arrived since are processed. */
+    * so only files that arrived since are processed. The sink gets each
+    * batch on the stream's own session ([[batchOn]]). */
   private[streaming] def drainAt(stream: DataFrame, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit): Unit =
-    withBatchSizedShuffle(stream.sparkSession) {
+      sink: (DataFrame, Long) => Unit): Unit = {
+    val spark = stream.sparkSession
+    withBatchSizedShuffle(spark) {
       stream.writeStream
         .outputMode(OutputMode.Append())
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch((batch: Dataset[Row], batchId: Long) => sink(batch, batchId))
+        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+          sink(batchOn(spark, batch), batchId))
         .start()
         .awaitTermination()
     }
+  }
+
+  /** A foreachBatch frame rebound to `spark`, the session that started
+    * the query. Spark hands the body a frame on the query's private clone
+    * of that session, and in Spark 4 every clone has its own artifact
+    * state, so the body's tasks load generated classes through a fresh
+    * executor class loader at every stream start. The codegen cache is
+    * keyed by class loader, so each new drain recompiled every class its
+    * body ran. On `spark` the jobs of every drain share one loader, so
+    * identical code hits the cache. The plan is the batch's analyzed one:
+    * a scan of the micro-batch's already planned RDD. */
+  private[graft] def batchOn(spark: SparkSession, batch: Dataset[Row]): DataFrame =
+    GraftColumnBridge.ofRows(spark, batch.queryExecution.analyzed)
 
   /** [[drain]] whose micro-batch result `f(batch)` lands as the
     * overwrite-mode slice `b<batchId>` of a fresh session-scoped dir (a
@@ -178,24 +194,28 @@ object MicroBatchPipeline {
     * policy for every streaming drain), restoring the session value
     * after. */
   private[graft] def withBatchSizedShuffle[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // 8, not cores: these lifecycle stages move a few thousand rows each —
-    // measured at sf0.1, 4 and 32 partitions are both ~20-40% slower than 8
-    // (scheduling overhead vs per-task startup), so 8 is the tuned value.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE off for the same reason the partition count is fixed: micro-batch
-    // volumes are bounded by trigger admission, so there is nothing for AQE
-    // to adapt — but each AQE stage materialization is its own Spark job,
-    // and a warm serve was measured as ~21 jobs totalling 0.8 s of task
-    // time plus ~0.5 s of inter-job driver rounds (guide §7.3, planning
-    // time as the bottleneck). With the fixed 8-partition layout the same
-    // write runs as a handful of pipelined jobs. The session default (AQE
-    // on) is restored for everything corpus-sized.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val policy = Seq(
+      // 8, not cores: these lifecycle stages move a few thousand rows each —
+      // measured at sf0.1, 4 and 32 partitions are both ~20-40% slower than
+      // 8 (scheduling overhead vs per-task startup), so 8 is the tuned value.
+      "spark.sql.shuffle.partitions" -> "8",
+      // AQE off for the same reason the partition count is fixed: micro-batch
+      // volumes are bounded by trigger admission, so there is nothing for AQE
+      // to adapt — but each AQE stage materialization is its own Spark job,
+      // and a warm serve was measured as ~21 jobs totalling 0.8 s of task
+      // time plus ~0.5 s of inter-job driver rounds (guide §7.3, planning
+      // time as the bottleneck). With the fixed 8-partition layout the same
+      // write runs as a handful of pipelined jobs. The session default (AQE
+      // on) is restored for everything corpus-sized.
+      "spark.sql.adaptive.enabled" -> "false")
+    // A key the caller never set is unset again, not set to its default:
+    // `conf.get` reads the default, and setting it back adds an entry.
+    val set = spark.conf.getAll
+    val prev = policy.map { case (k, _) => k -> set.get(k) }
+    policy.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

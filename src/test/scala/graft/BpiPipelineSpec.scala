@@ -24,6 +24,15 @@ class BpiPipelineSpec extends SparkSpec {
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Generated classes compiled while `body` runs, JVM-wide (local-mode
+    * tasks compile in this JVM too). */
+  private def compiles(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
   /** Spark jobs started and stages completed while `body` runs, counted
     * once the listener bus has delivered every event. */
   private def jobsAndStages(body: => Unit): (Int, Int) = {
@@ -417,5 +426,92 @@ class BpiPipelineSpec extends SparkSpec {
       // the load's), so only its presence is pinned here
       assert(mine.exists(_.progress.numInputRows > 0))
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("streaming mode: live batches after the first compile no classes") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = java.nio.file.Files.createTempDirectory("bpi_live_landing")
+    val warehouse = tempDir("bpi_live_wh")
+    // a hidden name then a rename: the source never lists a partial file
+    def land(i: Int): Unit = {
+      val hidden = dir.resolve(s".p$i.tmp")
+      java.nio.file.Files.writeString(hidden, BpiQueries.goldenPayloads(i))
+      java.nio.file.Files.move(hidden, dir.resolve(s"p$i.json"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    val done = new java.util.concurrent.atomic.AtomicInteger
+    def awaitBatches(n: Int): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (done.get < n && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done.get == n)
+    }
+    land(0)
+    val q = BpiPipeline.startStreamWith(spark, dir.toString, BpiQueries.ratesDf(spark),
+        tempDir("bpi_live_ckpt"), trigger = Trigger.ProcessingTime(0L)) { (batch, _) =>
+      BpiPipeline.appendParquet(BpiPipeline.validationGate(batch), warehouse)
+      done.incrementAndGet()
+    }
+    val perBatch = try {
+      awaitBatches(1)
+      (1 to 2).map(i => compiles { land(i); awaitBatches(i + 1) })
+    } finally q.stop()
+    assert(spark.read.parquet(warehouse).count() == 3)
+    info(s"classes compiled by live batches 2 and 3: $perBatch")
+    assert(perBatch == Seq(0L, 0L))
+  }
+
+  test("streaming mode: a second drain of same-shaped payloads compiles at most one class") {
+    def drain(): Long = {
+      val warehouse = tempDir("bpi_warm_wh")
+      val n = compiles {
+        BpiPipeline.runStream(spark, landing(BpiQueries.goldenPayloads),
+          BpiQueries.ratesDf(spark), warehouse, tempDir("bpi_warm_ckpt"))
+      }
+      assert(spark.read.parquet(warehouse).count() == 3)
+      n
+    }
+    drain()
+    val warm = drain()
+    info(s"classes compiled by the second drain: $warm")
+    assert(warm <= 1, s"$warm classes compiled")
+  }
+
+  test("streaming mode: job_id is a fresh UUID per row, last_updated the load time") {
+    val uuid = "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$"
+    val fmt = java.time.format.DateTimeFormatter.ofPattern(BpiPipeline.tsFormat)
+    def epochMs(ts: String): Long = java.time.LocalDateTime.parse(ts, fmt)
+      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+    def stored(warehouse: String): Seq[(String, String)] =
+      spark.read.parquet(warehouse).select("job_id", "last_updated").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+    val dir = java.nio.file.Paths.get(landing(BpiQueries.goldenPayloads))
+    val warehouse = tempDir("bpi_audit_wh")
+    val ckpt = tempDir("bpi_audit_ckpt")
+    // the rows one drain stores, and its wall-clock window; the start is
+    // floored to the second, since `last_updated` drops the millis
+    def drain(): (Seq[(String, String)], Long, Long) = {
+      val before = if (new java.io.File(warehouse).list().isEmpty) Nil else stored(warehouse)
+      val t0 = System.currentTimeMillis() / 1000 * 1000
+      BpiPipeline.runStream(spark, dir.toString, BpiQueries.ratesDf(spark), warehouse, ckpt)
+      val t1 = System.currentTimeMillis()
+      (stored(warehouse).diff(before), t0, t1)
+    }
+    val first = drain()
+    java.nio.file.Files.writeString(dir.resolve("payload_late.json"),
+      BpiQueries.goldenPayloads.head)
+    val second = drain()
+    assert(first._1.length == 3 && second._1.length == 1)
+    val ids = (first._1 ++ second._1).map(_._1)
+    assert(ids.forall(_.matches(uuid)), ids)
+    assert(ids.distinct.length == ids.length, ids)
+    Seq(first, second).foreach { case (rows, t0, t1) =>
+      rows.foreach { case (_, ts) =>
+        assert(epochMs(ts) >= t0 && epochMs(ts) <= t1, s"$ts outside [$t0, $t1]")
+      }
+    }
+    val fixed = tempDir("bpi_audit_fixed_wh")
+    BpiPipeline.runStream(spark, dir.toString, BpiQueries.ratesDf(spark), fixed,
+      tempDir("bpi_audit_fixed_ckpt"), clock = fixedClock)
+    assert(stored(fixed).map(_._2).distinct == Seq("2023-01-10 00:00:00"))
   }
 }

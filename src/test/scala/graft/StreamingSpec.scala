@@ -135,6 +135,27 @@ class StreamingSpec extends SparkSpec {
     } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("a drain hands its body each batch on the stream's own session") {
+    val sessions = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.SparkSession]
+    MicroBatchPipeline.drain(Tables.stream(spark, sf, "documents"), "session") {
+      (b, _) => sessions += b.sparkSession
+    }
+    assert(sessions.nonEmpty)
+    assert(sessions.forall(_ eq spark))
+  }
+
+  test("a drain leaves a fresh session's SQLConf as it found it") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(!before.contains("spark.sql.adaptive.enabled"))
+    var rows = 0L
+    MicroBatchPipeline.drain(Tables.stream(s, sf, "documents"), "conf") {
+      (b, _) => rows += b.count()
+    }
+    assert(rows > 0)
+    assert(s.conf.getAll == before)
+  }
+
   test("a failing memory-sink drain leaves no temporary checkpoint behind") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.OutputMode
