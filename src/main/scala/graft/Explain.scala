@@ -3,7 +3,7 @@ package graft
 /** Plan-audit main: prints formatted physical plans for representative
   * queries so pushdown (PushedFilters), column pruning (ReadSchema),
   * broadcast joins and WholeStageCodegen spans can be eyeballed.
-  * Usage: runMain graft.Explain [sfDir] [queryName...]
+  * Usage: runMain graft.Explain [sfDir] [query...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DoubleType
 
 /** The reference pipeline (SURVEY.md §2.1 O1-O13) as ONE lazily-composed
@@ -191,13 +192,15 @@ object BpiPipeline {
     * for 100 listing tasks before reading a row. The file source takes its
     * session from the reader, so the clone lists on the driver while the
     * caller's SQLConf is never written. The plan is then rebound to the
-    * caller's session (`ofRows(spark, …)`) before `writeStream`: the
-    * query starts on `spark`, so it registers with `spark.streams` and
-    * its listeners, and its batches run under the caller's conf.
+    * caller's session (`ofRows(spark, …)`) and started by the shared
+    * [[graft.streaming.MicroBatchPipeline.start]]: the query starts on
+    * `spark`, so it registers with `spark.streams` and its listeners, and
+    * its batches run under the caller's conf.
     *
     * The streaming plan ends at the FX join. The audit columns and the
-    * warehouse projection go on each micro-batch once it is rebound to
-    * `spark` ([[graft.streaming.MicroBatchPipeline.batchOn]]), which keeps
+    * warehouse projection go on each micro-batch `start` hands the sink,
+    * rebound to `spark` ([[graft.streaming.MicroBatchPipeline.batchOn]]),
+    * which keeps
     * per-batch values out of the generated code: in a streaming plan
     * `current_timestamp()` is the batch time, written into the Java (as
     * `uuid()` writes its seed), so every live batch compiled its largest
@@ -207,9 +210,8 @@ object BpiPipeline {
     * stores the row, as in the reference (bpi_crawler.py:118). */
   def startStreamWith(spark: SparkSession, landingDir: String, rates: DataFrame,
       checkpoint: String, clock: Column = current_timestamp(),
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val reader = GraftColumnBridge.cloneSession(spark)
     reader.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, Int.MaxValue.toString)
     val landed = reader.readStream
@@ -220,15 +222,10 @@ object BpiPipeline {
     // The analyzed plan: the reader's unresolved source is bound to a
     // session only by analysis, and it must be the clone.
     val raw = GraftColumnBridge.ofRows(spark, landed.queryExecution.analyzed)
-    enrichIdr(flatten(raw), rates).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(orderedSelect(withAuditColumns(
-          graft.streaming.MicroBatchPipeline.batchOn(spark, batch), clock = clock)), batchId)
-      }
-      .start()
+    graft.streaming.MicroBatchPipeline.start(enrichIdr(flatten(raw), rates),
+        checkpoint, OutputMode.Append(), trigger) { (batch, batchId) =>
+      sink(orderedSelect(withAuditColumns(batch, clock = clock)), batchId)
+    }
   }
 
   /** O13: warehouse append. Parquet for tests/local; the JDBC path is the

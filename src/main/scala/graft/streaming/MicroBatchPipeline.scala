@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming tier — the reference's accumulate/flush micro-batch
@@ -104,35 +103,22 @@ object MicroBatchPipeline {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("n_events"), (col("value_cents") / 100.0).as("sum_value"))
 
-  /** Drain a streaming DataFrame synchronously (AvailableNow + memory
-    * sink) and return the final result — bounded-input semantics used by
-    * the declared queries and tests. */
-  def runToResult(spark: SparkSession, streamed: DataFrame,
+  /** Drain a streaming DataFrame synchronously and return the final
+    * result (bounded-input semantics for the declared queries and tests):
+    * a [[drainAt]] whose body collects each batch to the driver by batch
+    * id, so a replayed batch replaces its own rows. Complete mode keeps
+    * the latest batch, Append and Update mode every batch in order. The
+    * result is a local frame on the stream's session, empty if no batch ran. */
+  def runToResult(streamed: DataFrame,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
-    // Stateful operators keep one state store per shuffle partition per
-    // micro-batch; at this state volume 8 partitions cut store maintenance
-    // overhead ~4x versus the batch-side default of 32 while still keeping
-    // every core busy (the stateful exchange is not the scan). The setting
-    // is baked into the query at start; restore the session value after.
-    // The checkpoint is scoped like every drain's: without one Spark makes
-    // a /tmp/temporary-<uuid> dir per drain and leaves it behind on failure.
-    withBatchSizedShuffle(spark) {
-      val q = streamed.writeStream
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", graft.TempDirs.scoped("graft_stream_ckpt"))
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    import scala.jdk.CollectionConverters._
+    val batches = scala.collection.mutable.SortedMap.empty[Long, Array[Row]]
+    drainAt(streamed, graft.TempDirs.scoped("graft_stream_ckpt"), mode) { (batch, id) =>
+      if (mode == OutputMode.Complete()) batches.clear()
+      batches(id) = batch.collect()
     }
-    // The memory sink registers its result as a session temp view. The
-    // resolved frame holds the sink itself, so the view can go at once;
-    // kept, a long-lived session would gain one view per drain.
-    val result = spark.table(name)
-    spark.catalog.dropTempView(name)
-    result
+    streamed.sparkSession.createDataFrame(
+      batches.values.flatten.toSeq.asJava, streamed.schema)
   }
 
   /** Drain `stream` to exhaustion (AvailableNow), handing each micro-batch
@@ -147,21 +133,33 @@ object MicroBatchPipeline {
 
   /** [[drain]] against a caller-owned checkpoint: a later drain over the
     * same checkpoint resumes after the last committed batch (a restart),
-    * so only files that arrived since are processed. The sink gets each
-    * batch on the stream's own session ([[batchOn]]). */
-  private[streaming] def drainAt(stream: DataFrame, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit): Unit = {
-    val spark = stream.sparkSession
-    withBatchSizedShuffle(spark) {
-      stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          sink(batchOn(spark, batch), batchId))
-        .start()
+    * so only files that arrived since are processed. The query runs to
+    * exhaustion ([[start]] with AvailableNow) under the batch-sized
+    * shuffle policy. */
+  private[streaming] def drainAt(stream: DataFrame, checkpoint: String,
+      mode: OutputMode = OutputMode.Append())(
+      sink: (DataFrame, Long) => Unit): Unit =
+    withBatchSizedShuffle(stream.sparkSession) {
+      start(stream, checkpoint, mode, Trigger.AvailableNow())(sink)
         .awaitTermination()
     }
+
+  /** Start `stream` as a foreachBatch query — the one place a streaming
+    * query is started. Every sink is a function of (batch, batchId) over
+    * a replayable source with a checkpointed offset log, so one primitive
+    * serves the drains and the long-running BPI service alike. The sink
+    * gets each batch on the stream's own session ([[batchOn]]). */
+  private[graft] def start(stream: DataFrame, checkpoint: String,
+      mode: OutputMode, trigger: Trigger)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = stream.sparkSession
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        sink(batchOn(spark, batch), batchId))
+      .start()
   }
 
   /** A foreachBatch frame rebound to `spark`, the session that started

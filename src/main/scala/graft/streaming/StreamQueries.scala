@@ -11,10 +11,10 @@ import graft.QuerySpec
   */
 object StreamQueries {
 
-  /** Event-time tumbling windows through a checkpoint-less AvailableNow
-    * run into a memory sink. */
+  /** Event-time tumbling windows through a Complete-mode AvailableNow
+    * drain of the events stream ([[MicroBatchPipeline.runToResult]]). */
   def hourlyAggQuery(s: SparkSession, dir: String): DataFrame =
-    MicroBatchPipeline.runToResult(s,
+    MicroBatchPipeline.runToResult(
         MicroBatchPipeline.hourlyAgg(MicroBatchPipeline.eventsStream(s, dir)))
       .orderBy(col("window_start"), col("event_type"))
 
@@ -116,7 +116,7 @@ object StreamQueries {
       Future(writeOne(flagged.filter(col("straggler")).drop("straggler"),
         "c.parquet", 3000000L)))), Duration.Inf)
     flagged.unpersist()
-    val drained = MicroBatchPipeline.runToResult(spark,
+    val drained = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.hourlyAgg(MicroBatchPipeline.eventsStreamFrom(
         spark, landing, maxFilesPerTrigger = Some(1))),
       OutputMode.Append())
@@ -152,7 +152,7 @@ object StreamQueries {
 
   /** Sliding event-time windows (2 h / 1 h) through the streaming path. */
   def slidingAggQuery(s: SparkSession, dir: String): DataFrame =
-    MicroBatchPipeline.runToResult(s,
+    MicroBatchPipeline.runToResult(
         MicroBatchPipeline.slidingAgg(MicroBatchPipeline.eventsStream(s, dir)))
       .orderBy(col("window_start"))
 
@@ -168,7 +168,7 @@ object StreamQueries {
     val twice = MicroBatchPipeline.eventsStream(s, dir)
       .withColumn("delivery", explode(array(lit(1), lit(2))))
       .drop("delivery")
-    MicroBatchPipeline.runToResult(s,
+    MicroBatchPipeline.runToResult(
         MicroBatchPipeline.dedupWithinWatermark(twice)
           .select(col("event_id"), col("event_type"), col("value")),
         org.apache.spark.sql.streaming.OutputMode.Append())
@@ -191,7 +191,7 @@ object StreamQueries {
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss")
           .as("session_end"),
         col("n_events"))
-    MicroBatchPipeline.runToResult(s, agg)
+    MicroBatchPipeline.runToResult(agg)
       .orderBy(col("user_id"), col("session_start"))
   }
 
@@ -221,7 +221,7 @@ object StreamQueries {
           .as("bar_ts"),
         col("open"), col("high"), col("low"), col("close"),
         col("n_trades"), (col("volume_c") / 100.0).as("volume"))
-    MicroBatchPipeline.runToResult(s, agg).orderBy(col("bar_ts"))
+    MicroBatchPipeline.runToResult(agg).orderBy(col("bar_ts"))
   }
 
   /** STREAMING gap-filled candles — the live twin of
@@ -245,10 +245,13 @@ object StreamQueries {
           .getField("value").as("close"),
         count(lit(1)).as("n_trades"))
       .select(col("window.start").as("bar_ts"), col("close"), col("n_trades"))
-    val bars = MicroBatchPipeline.runToResult(s, agg)
+    val bars = MicroBatchPipeline.runToResult(agg)
     val spine = bars.agg(min(col("bar_ts")).as("lo"), max(col("bar_ts")).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"),
         expr("interval 1 hour"))).as("bar_ts"))
+    // One partition on purpose: the input is the driver-collected drain
+    // result, one row per hour of the event span (a year is 8,760 rows),
+    // bounded by the calendar, not by the trade volume.
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("bar_ts"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
@@ -271,7 +274,7 @@ object StreamQueries {
   def eventFunnelStreamQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = MicroBatchPipeline.eventsStream(s, dir)
-    val drained = MicroBatchPipeline.runToResult(s,
+    val drained = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.funnelDepths(s, ev).toDF(),
       org.apache.spark.sql.streaming.OutputMode.Update())
     // depth is monotone per user, so the final state is the max emission
@@ -304,7 +307,7 @@ object StreamQueries {
     val agg = st.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(round(col("value") * 100).cast("long")).as("value_c"))
-    MicroBatchPipeline.runToResult(s, agg)
+    MicroBatchPipeline.runToResult(agg)
       .select(col("event_type"), col("n_events"),
         (col("value_c") / 100.0).as("sum_value"))
       .orderBy(col("event_type"))
@@ -328,7 +331,7 @@ object StreamQueries {
     // NULLS FIRST pinned on both sides: events whose user_id misses the
     // dimension produce a NULL segment group, and Spark (NULLS FIRST) and
     // DuckDB (NULLS LAST) disagree on default null ordering.
-    MicroBatchPipeline.runToResult(s, joined)
+    MicroBatchPipeline.runToResult(joined)
       .orderBy(col("c_mktsegment").asc_nulls_first)
   }
 
@@ -361,7 +364,7 @@ object StreamQueries {
   }
 
   def streamStreamJoinQuery(s: SparkSession, dir: String): DataFrame =
-    MicroBatchPipeline.runToResult(s,
+    MicroBatchPipeline.runToResult(
         attributionJoin(
           MicroBatchPipeline.eventsStream(s, dir),
           MicroBatchPipeline.eventsStream(s, dir)),
@@ -378,7 +381,8 @@ object StreamQueries {
     * at start; the session value is restored afterwards. */
   def streamStreamJoinRocksDbQuery(s: SparkSession, dir: String): DataFrame = {
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
+    // getAll: getOption reads a registered key's default, never None
+    val prev = s.conf.getAll.get(key)
     s.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // runToResult drains the stream before returning, so the provider

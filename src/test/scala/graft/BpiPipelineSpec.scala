@@ -24,15 +24,6 @@ class BpiPipelineSpec extends SparkSpec {
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Generated classes compiled while `body` runs, JVM-wide (local-mode
-    * tasks compile in this JVM too). */
-  private def compiles(body: => Unit): Long = {
-    import org.apache.spark.metrics.source.CodegenMetrics
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
   /** Spark jobs started and stages completed while `body` runs, counted
     * once the listener bus has delivered every event. */
   private def jobsAndStages(body: => Unit): (Int, Int) = {

@@ -39,4 +39,13 @@ abstract class SparkSpec extends AnyFunSuite {
     }
     p +: inner.flatMap(flattenPlan)
   }
+
+  /** Generated classes compiled while `body` runs, JVM-wide (local-mode
+    * tasks compile in this JVM too). */
+  protected def compiles(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 }

@@ -59,7 +59,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
     val expected = nanos.zipWithIndex.map { case (n, i) => (i.toLong, n / 1000) }
     assert(micros(Tables.events(s, dir)) == expected)
-    val streamed = MicroBatchPipeline.runToResult(s,
+    val streamed = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.eventsStream(s, dir).select(col("event_id"), col("ts")),
       org.apache.spark.sql.streaming.OutputMode.Append())
     assert(micros(streamed) == expected)
@@ -156,6 +156,21 @@ class StreamingSpec extends SparkSpec {
     assert(s.conf.getAll == before)
   }
 
+  test("the RocksDB stream join leaves a fresh session's SQLConf as it found it") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(!before.contains("spark.sql.streaming.stateStore.providerClass"))
+    StreamQueries.streamStreamJoinRocksDbQuery(s, sf).collect()
+    assert(s.conf.getAll == before)
+  }
+
+  test("a second hourly agg drain compiles no classes") {
+    StreamQueries.hourlyAggQuery(spark, sf).collect()
+    val warm = compiles { StreamQueries.hourlyAggQuery(spark, sf).collect() }
+    info(s"classes compiled by the second drain: $warm")
+    assert(warm == 0L)
+  }
+
   test("a failing memory-sink drain leaves no temporary checkpoint behind") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.OutputMode
@@ -171,7 +186,7 @@ class StreamingSpec extends SparkSpec {
     val failing = Tables.stream(spark, sf, "documents")
       .select(raise_error(lit("projection failed")).as("x"))
     val err = intercept[Exception](
-      MicroBatchPipeline.runToResult(spark, failing, OutputMode.Append()))
+      MicroBatchPipeline.runToResult(failing, OutputMode.Append()))
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
     assert(chain.exists(e => String.valueOf(e.getMessage).contains("projection failed")), err)
     assert(temporaries -- before == Set.empty)
@@ -182,7 +197,7 @@ class StreamingSpec extends SparkSpec {
     val src = MicroBatchPipeline.eventsStream(spark, sf)
     // duplicate every event by unioning the stream with itself
     val doubled = src.union(MicroBatchPipeline.eventsStream(spark, sf))
-    val deduped = MicroBatchPipeline.runToResult(spark,
+    val deduped = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.dedupWithinWatermark(doubled), OutputMode.Append())
     assert(deduped.count() == Tables.events(spark, sf).count())
   }
@@ -199,9 +214,30 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(src, landing.resolve("b.parquet"))
     val stream = MicroBatchPipeline.eventsStreamFrom(
       spark, landing.toString, maxFilesPerTrigger = Some(1))
-    val deduped = MicroBatchPipeline.runToResult(spark,
+    val deduped = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.dedupWithinWatermark(stream), OutputMode.Append())
     assert(deduped.count() == Tables.events(spark, sf).count())
+  }
+
+  test("a Complete-mode drain returns the last result table, not every emission") {
+    // two copies of the events file + maxFilesPerTrigger=1: two batches,
+    // each emitting the whole table so far
+    val landing = Files.createTempDirectory("graft_complete_landing")
+    val src = java.nio.file.Paths.get(s"$sf/events.parquet")
+    Files.copy(src, landing.resolve("a.parquet"))
+    Files.copy(src, landing.resolve("b.parquet"))
+    def stream() = MicroBatchPipeline.eventsStreamFrom(
+      spark, landing.toString, maxFilesPerTrigger = Some(1))
+    val batchIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    MicroBatchPipeline.drain(stream(), "complete") { (_, id) => batchIds += id }
+    assert(batchIds == Seq(0L, 1L))
+    val drained = MicroBatchPipeline.runToResult(MicroBatchPipeline.hourlyAgg(stream()))
+    val ev = Tables.events(spark, sf)
+    val batch = MicroBatchPipeline.hourlyAgg(ev.unionByName(ev))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(drained).nonEmpty)
+    assert(rows(drained) == rows(batch))
   }
 
   test("LM scoring is batch-boundary invariant (stream_lm_score's contract)") {
@@ -337,7 +373,7 @@ class StreamingSpec extends SparkSpec {
       spark, empty.toString, schema = Some(schema))
     val src = java.nio.file.Paths.get(s"$sf/events.parquet")
     java.nio.file.Files.copy(src, empty.resolve("events.parquet"))
-    val drained = MicroBatchPipeline.runToResult(spark, stream, OutputMode.Append())
+    val drained = MicroBatchPipeline.runToResult(stream, OutputMode.Append())
     assert(drained.count() == Tables.events(spark, sf).count())
     assert(drained.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
@@ -373,7 +409,7 @@ class StreamingSpec extends SparkSpec {
       Seq(ev(2, 5, 7, "click"), ev(3, 9, 7, "purchase")).toDF(cols: _*))
     val stream = MicroBatchPipeline.eventsStreamFrom(
       spark, landing.toString, maxFilesPerTrigger = Some(1))
-    val drained = MicroBatchPipeline.runToResult(spark,
+    val drained = MicroBatchPipeline.runToResult(
       MicroBatchPipeline.funnelDepths(spark, stream).toDF(), OutputMode.Update())
     val finalDepth = drained.groupBy(col("user_id"))
       .agg(max(col("depth")).as("depth")).collect()
@@ -401,7 +437,7 @@ class StreamingSpec extends SparkSpec {
       Seq(ev(2, 10, 7, "purchase"), ev(3, 40, 7, "purchase")).toDF(cols: _*))
     def side() = MicroBatchPipeline.eventsStreamFrom(
       spark, landing.toString, maxFilesPerTrigger = Some(1))
-    val out = MicroBatchPipeline.runToResult(spark,
+    val out = MicroBatchPipeline.runToResult(
         StreamQueries.attributionJoin(side(), side()), OutputMode.Append())
       .select("purchase_id", "click_id", "user_id", "gap_sec")
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -636,7 +672,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val src = MicroBatchPipeline.eventsStream(spark, sf)
       val doubled = src.union(MicroBatchPipeline.eventsStream(spark, sf))
-      val deduped = MicroBatchPipeline.runToResult(spark,
+      val deduped = MicroBatchPipeline.runToResult(
         MicroBatchPipeline.dedupWithinWatermark(doubled), OutputMode.Append())
       assert(deduped.count() == Tables.events(spark, sf).count())
     } finally {

@@ -13,6 +13,14 @@ cd "$(dirname "$0")/.."
 
 echo "== 1/4 compile =="
 sbt --client compile
+# Every streaming query starts through MicroBatchPipeline.start; a
+# hand-written stream start anywhere else fails the gate.
+stray="$(grep -rln '\.writeStream' src/main | grep -v '/MicroBatchPipeline\.scala$' || true)"
+if [[ -n "$stray" ]]; then
+  echo "writeStream outside MicroBatchPipeline.scala:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 
 if [[ "${1:-}" == "--fast" ]]; then
   echo "== fast mode: compile green, skipping test/verify =="
