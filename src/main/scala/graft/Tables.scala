@@ -83,18 +83,17 @@ object Tables {
     normalizeEventTs(resolved.computeIfAbsent((s, s"$dir/events.parquet#nanos"),
       key => withNanosAsLong(key._1)(_.read.parquet(s"$dir/events.parquet"))))
 
-  /** `read` run on a clone of `spark` with
+  /** `read` run on [[Sessions.derived]] of `spark` with
     * `spark.sql.legacy.parquet.nanosAsLong=true`, its analyzed plan
     * rebound to `spark`: the parquet scan takes the conf from the
-    * relation's session (the clone), so TIMESTAMP(NANOS) files load while
-    * the caller's SQLConf is never written. The analyzed plan, because a
-    * reader's source is bound to a session only by analysis. */
+    * relation's session (the derived one), so TIMESTAMP(NANOS) files load
+    * while the caller's SQLConf is never written. The analyzed plan,
+    * because a reader's source is bound to a session only by analysis.
+    * The derived session is memoized, so repeated reads share one. */
   private[graft] def withNanosAsLong(spark: SparkSession)(
-      read: SparkSession => DataFrame): DataFrame = {
-    val clone = GraftColumnBridge.cloneSession(spark)
-    clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    GraftColumnBridge.ofRows(spark, read(clone).queryExecution.analyzed)
-  }
+      read: SparkSession => DataFrame): DataFrame =
+    GraftColumnBridge.ofRows(spark, read(Sessions.derived(spark,
+      Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))).queryExecution.analyzed)
 
   /** The ONE ts-normalization shared by the batch loader and the streaming
     * reader (MicroBatchPipeline.eventsStream) — the two paths diverging is

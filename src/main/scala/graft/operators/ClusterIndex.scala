@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.MicroBatchPipeline
+import graft.streaming.MicroBatchPipeline.batchSized
 
 /** INCREMENTAL maintenance for the mutual-kNN semantic clusters
   * (Similarity.semanticClusters) — the `appendBatch` and `deleteIds`
@@ -483,7 +484,7 @@ object ClusterIndex {
   def incrementalClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app3",
         "graft_incclusters_state") { state =>
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = graft.Tables.embeddings(batchSized(spark), dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
@@ -492,12 +493,10 @@ object ClusterIndex {
       // space from COUNT(embeddings), and the equality contract needs the
       // index built at exactly that width
       val geo = Some(Similarity.corpusBits(spark, dir))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(emb.filter(col("vec_id") <= cut1), state, geo)
-        appendBatch(emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2),
-          state, geo)
-        appendBatch(emb.filter(col("vec_id") > cut2), state, geo)
-      }
+      appendBatch(emb.filter(col("vec_id") <= cut1), state, geo)
+      appendBatch(emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2),
+        state, geo)
+      appendBatch(emb.filter(col("vec_id") > cut2), state, geo)
     }
     clusters(spark, state)
   }
@@ -517,17 +516,15 @@ object ClusterIndex {
   private def deletedState(spark: SparkSession, dir: String): String =
     graft.StateCache.stateDir(dir, "clusters/app2_del7",
         "graft_delclusters_state") { state =>
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = graft.Tables.embeddings(batchSized(spark), dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val cut = top / 2
       val geo = Some(Similarity.corpusBits(spark, dir))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(emb.filter(col("vec_id") <= cut), state, geo)
-        appendBatch(emb.filter(col("vec_id") > cut), state, geo)
-        deleteIds(emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
-          state)
-      }
+      appendBatch(emb.filter(col("vec_id") <= cut), state, geo)
+      appendBatch(emb.filter(col("vec_id") > cut), state, geo)
+      deleteIds(emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
+        state)
     }
 
   /** The rebuild oracle over a restricted corpus: the shared text
@@ -565,9 +562,8 @@ object ClusterIndex {
       // this verb widens from)
       val state = deletedState(spark, dir)
       val n = graft.Tables.embeddings(spark, dir).count()
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        rebucketIndex(spark, state, wider, Similarity.widenedBits(n, 2))
-      }
+      rebucketIndex(batchSized(spark), state, wider,
+        Similarity.widenedBits(n, 2))
     }
 
   /** Declared query — the CUTOVER lifecycle on the cluster index
@@ -599,17 +595,15 @@ object ClusterIndex {
   def asofClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app2_del5",
         "graft_asofclusters_state") { state =>
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = graft.Tables.embeddings(batchSized(spark), dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val cut = top / 2
       val geo = Some(Similarity.corpusBits(spark, dir))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(emb.filter(col("vec_id") <= cut), state, geo)   // op 0
-        appendBatch(emb.filter(col("vec_id") > cut), state, geo)    // op 1
-        deleteIds(emb.filter(col("vec_id") % 5 === 2)
-          .select(col("vec_id")), state)                            // op 2
-      }
+      appendBatch(emb.filter(col("vec_id") <= cut), state, geo)   // op 0
+      appendBatch(emb.filter(col("vec_id") > cut), state, geo)    // op 1
+      deleteIds(emb.filter(col("vec_id") % 5 === 2)
+        .select(col("vec_id")), state)                            // op 2
     }
     clusters(spark, state, asOf = Some(0L))
   }
@@ -679,14 +673,12 @@ object ClusterIndex {
   def compactedClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app1_del7_compact",
         "graft_cptclusters_state") { state =>
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = graft.Tables.embeddings(batchSized(spark), dir)
         .select(col("vec_id"), col("embedding"))
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(emb, state)                                       // op 0
-        deleteIds(emb.filter(col("vec_id") % 7 === 3)
-          .select(col("vec_id")), state)                              // op 1
-        compactOps(spark, state, 1L)
-      }
+      appendBatch(emb, state)                                       // op 0
+      deleteIds(emb.filter(col("vec_id") % 7 === 3)
+        .select(col("vec_id")), state)                              // op 1
+      compactOps(emb.sparkSession, state, 1L)
     }
     clusters(spark, state)
   }

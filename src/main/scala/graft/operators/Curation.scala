@@ -803,12 +803,11 @@ object Curation {
       substring(md5(col("media_id").cast("string")), 1, 1) =!= "0")
     val ivfIdx = graft.StateCache.stateDir(dir, "ivf/build_del5",
         "graft_forget_ivf") { ivfIdx =>
-      MicroBatchPipeline.withBatchSizedShuffle(s) {
-        IvfIndex.build(emb, ivfIdx)
-        IvfIndex.layout.delete(
-          emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), ivfIdx)
-        ()
-      }
+      val built = MicroBatchPipeline.batchOn(MicroBatchPipeline.batchSized(s), emb)
+      IvfIndex.build(built, ivfIdx)
+      IvfIndex.layout.delete(
+        built.filter(col("vec_id") % 5 === 2).select(col("vec_id")), ivfIdx)
+      ()
     }
     def auditRow(name: String, universe: DataFrame, idCol: String,
         live: DataFrame, liveCol: String,

@@ -190,9 +190,8 @@ private[graft] object IndexFiles {
     val tmp = new org.apache.hadoop.fs.Path(base, s".c$upTo.tmp")
     // batch-sized shuffle: the merge must not fragment the compacted
     // slice into session-default-many part files.
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      write(merged, tmp.toString)
-    }
+    import graft.streaming.MicroBatchPipeline.{batchOn, batchSized}
+    write(batchOn(batchSized(spark), merged), tmp.toString)
     val dst = new org.apache.hadoop.fs.Path(base, s"c$upTo")
     fs.delete(dst, true)
     // An unchecked false here would leave the merge hidden in the

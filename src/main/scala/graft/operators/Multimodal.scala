@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QuerySpec, Tables}
+import graft.streaming.MicroBatchPipeline.batchSized
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with
   * typed metadata, plus the decode / feature-extract / frame-sample
@@ -698,19 +699,17 @@ object Multimodal {
         "graft_incmm") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val hashes = phashTable(s, dir)
+      val hashes = phashTable(batchSized(s), dir)
       val top = hashes.agg(max(col("media_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-        graft.streaming.StreamingDedup.appendMediaBatch(
-          hashes.filter(col("media_id") <= cut1), state, out)
-        graft.streaming.StreamingDedup.appendMediaBatch(
-          hashes.filter(col("media_id") > cut1 && col("media_id") <= cut2),
-          state, out)
-        graft.streaming.StreamingDedup.layout.compact(s, state, 1)
-        graft.streaming.StreamingDedup.appendMediaBatch(
-          hashes.filter(col("media_id") > cut2), state, out)
-      }
+      graft.streaming.StreamingDedup.appendMediaBatch(
+        hashes.filter(col("media_id") <= cut1), state, out)
+      graft.streaming.StreamingDedup.appendMediaBatch(
+        hashes.filter(col("media_id") > cut1 && col("media_id") <= cut2),
+        state, out)
+      graft.streaming.StreamingDedup.layout.compact(hashes.sparkSession, state, 1)
+      graft.streaming.StreamingDedup.appendMediaBatch(
+        hashes.filter(col("media_id") > cut2), state, out)
     }
     graft.streaming.StreamingDedup.survivors(s, s"$root/out")
       .select(col("media_id")).orderBy(col("media_id"))
@@ -737,13 +736,11 @@ object Multimodal {
       val sink = graft.TempDirs.scoped("graft_mmserve_sink")
       val isEvalMedia =
         substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-        graft.streaming.StreamingDedup
-          .appendMediaBatch(phashTable(s, dir).filter(!isEvalMedia), state,
-            sink)
-          .count()
-        ()
-      }
+      graft.streaming.StreamingDedup
+        .appendMediaBatch(phashTable(batchSized(s), dir).filter(!isEvalMedia),
+          state, sink)
+        .count()
+      ()
     }
     val out = graft.TempDirs.scoped("graft_mmserve_out")
     val queries = Tables.stream(s, dir, "documents")
@@ -769,11 +766,9 @@ object Multimodal {
     val state = mediaTrainDeletedState(s, dir)
     val out = graft.TempDirs.scoped("graft_mmsdel_out")
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-    val hashes = phashTable(s, dir)
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-      graft.streaming.StreamingDedup
-        .serveMediaBatch(hashes.filter(isEval), state, out, 0L)
-    }
+    graft.streaming.StreamingDedup
+      .serveMediaBatch(phashTable(batchSized(s), dir).filter(isEval), state,
+        out, 0L)
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
   }
@@ -788,14 +783,12 @@ object Multimodal {
         "graft_mmsdel_state") { state =>
       val sink = graft.TempDirs.scoped("graft_mmsdel_sink")
       val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-      val hashes = phashTable(s, dir)
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-        graft.streaming.StreamingDedup
-          .appendMediaBatch(hashes.filter(!isEval), state, sink).count()
-        graft.streaming.StreamingDedup.layout.delete(
-          hashes.filter(!isEval && col("media_id") % 5 === 2)
-            .select(col("media_id")), state)
-      }
+      val hashes = phashTable(batchSized(s), dir)
+      graft.streaming.StreamingDedup
+        .appendMediaBatch(hashes.filter(!isEval), state, sink).count()
+      graft.streaming.StreamingDedup.layout.delete(
+        hashes.filter(!isEval && col("media_id") % 5 === 2)
+          .select(col("media_id")), state)
       ()
     }
 
@@ -809,26 +802,22 @@ object Multimodal {
     * mm_serve_deleted's cross-split text verbatim. */
   def mmServeCutoverQuery(s: SparkSession, dir: String): DataFrame = {
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-    val hashes = phashTable(s, dir)
+    val hashes = phashTable(batchSized(s), dir)
     val alias = graft.StateCache.stateDir(dir, "mmidx/cutover_alias",
         "graft_mmcut_alias") { a =>
       val rebuilt = graft.StateCache.stateDir(dir, "mmidx/rebuilt_live",
           "graft_mmcut_idx") { idx =>
         val sink = graft.TempDirs.scoped("graft_mmcut_sink")
-        graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-          graft.streaming.StreamingDedup.appendMediaBatch(
-            hashes.filter(!isEval && col("media_id") % 5 =!= 2), idx, sink)
-            .count()
-          ()
-        }
+        graft.streaming.StreamingDedup.appendMediaBatch(
+          hashes.filter(!isEval && col("media_id") % 5 =!= 2), idx, sink)
+          .count()
+        ()
       }
       graft.streaming.StreamingDedup.layout.cutover(s, a, rebuilt)
     }
     val out = graft.TempDirs.scoped("graft_mmcut_out")
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-      graft.streaming.StreamingDedup.serveMediaBatch(hashes.filter(isEval),
-        IndexFiles.resolveServing(alias), out, 0L)
-    }
+    graft.streaming.StreamingDedup.serveMediaBatch(hashes.filter(isEval),
+      IndexFiles.resolveServing(alias), out, 0L)
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
   }
@@ -847,29 +836,25 @@ object Multimodal {
         "graft_mmsasof_state") { state =>
       val sink = graft.TempDirs.scoped("graft_mmsasof_sink")
       val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-      val hashes = phashTable(s, dir)
+      val hashes = phashTable(batchSized(s), dir)
       val train = hashes.filter(!isEval)
       val cut = hashes.agg(max(col("media_id"))).head().getLong(0) / 2
-      graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-        graft.streaming.StreamingDedup
-          .appendMediaBatch(train.filter(col("media_id") <= cut), state, sink)
-          .count()
-        graft.streaming.StreamingDedup
-          .appendMediaBatch(train.filter(col("media_id") > cut), state, sink)
-          .count()
-        graft.streaming.StreamingDedup.layout.delete(
-          train.filter(col("media_id") % 5 === 2).select(col("media_id")),
-          state)
-      }
+      graft.streaming.StreamingDedup
+        .appendMediaBatch(train.filter(col("media_id") <= cut), state, sink)
+        .count()
+      graft.streaming.StreamingDedup
+        .appendMediaBatch(train.filter(col("media_id") > cut), state, sink)
+        .count()
+      graft.streaming.StreamingDedup.layout.delete(
+        train.filter(col("media_id") % 5 === 2).select(col("media_id")),
+        state)
       ()
     }
     val out = graft.TempDirs.scoped("graft_mmsasof_out")
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-    val hashes = phashTable(s, dir)
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(s) {
-      graft.streaming.StreamingDedup
-        .serveMediaBatch(hashes.filter(isEval), state, out, 0L, asOf = 0L)
-    }
+    graft.streaming.StreamingDedup
+      .serveMediaBatch(phashTable(batchSized(s), dir).filter(isEval), state,
+        out, 0L, asOf = 0L)
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
   }

@@ -184,13 +184,14 @@ object BpiPipeline {
     * landing dir every interval). Same plan, same checkpoint either way —
     * switching trigger mid-life is safe.
     *
-    * The landing-dir reader is built on a private clone of `spark` whose
-    * `parallelPartitionDiscovery.threshold` is `Int.MaxValue`. Each
+    * The landing-dir reader is built on [[graft.Sessions.derived]] of
+    * `spark` with `parallelPartitionDiscovery.threshold` at `Int.MaxValue`
+    * (memoized, so every stream start reads through the same one). Each
     * micro-batch re-lists its own files (FileStreamSource.getBatch), and
     * past the threshold (32 paths by default) Spark does that as a job
     * with one task per file — so a 100-payload backlog flush would pay
     * for 100 listing tasks before reading a row. The file source takes its
-    * session from the reader, so the clone lists on the driver while the
+    * session from the reader, so it lists on the driver while the
     * caller's SQLConf is never written. The plan is then rebound to the
     * caller's session (`ofRows(spark, …)`) and started by the shared
     * [[graft.streaming.MicroBatchPipeline.start]]: the query starts on
@@ -212,15 +213,15 @@ object BpiPipeline {
       checkpoint: String, clock: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow())(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val reader = GraftColumnBridge.cloneSession(spark)
-    reader.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, Int.MaxValue.toString)
+    val reader = graft.Sessions.derived(spark,
+      Map(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key -> Int.MaxValue.toString))
     val landed = reader.readStream
       .schema(BpiSchema.raw)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(landingDir)
     // The analyzed plan: the reader's unresolved source is bound to a
-    // session only by analysis, and it must be the clone.
+    // session only by analysis, and it must be the reader's.
     val raw = GraftColumnBridge.ofRows(spark, landed.queryExecution.analyzed)
     graft.streaming.MicroBatchPipeline.start(enrichIdr(flatten(raw), rates),
         checkpoint, OutputMode.Append(), trigger) { (batch, batchId) =>

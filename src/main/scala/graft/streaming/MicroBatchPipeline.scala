@@ -108,7 +108,8 @@ object MicroBatchPipeline {
     * a [[drainAt]] whose body collects each batch to the driver by batch
     * id, so a replayed batch replaces its own rows. Complete mode keeps
     * the latest batch, Append and Update mode every batch in order. The
-    * result is a local frame on the stream's session, empty if no batch ran. */
+    * result is a local frame on the caller's session (`streamed`'s, not
+    * the drain's), empty if no batch ran. */
   def runToResult(streamed: DataFrame,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -133,22 +134,26 @@ object MicroBatchPipeline {
 
   /** [[drain]] against a caller-owned checkpoint: a later drain over the
     * same checkpoint resumes after the last committed batch (a restart),
-    * so only files that arrived since are processed. The query runs to
-    * exhaustion ([[start]] with AvailableNow) under the batch-sized
-    * shuffle policy. */
+    * so only files that arrived since are processed. The stream's
+    * analyzed plan is rebound ([[batchOn]]) to [[batchSized]] of its
+    * session and started there ([[start]] with AvailableNow), so the
+    * query, its state and every batch the sink gets run under the
+    * batch-sized shuffle policy while the caller's SQLConf is never
+    * written. The source keeps the session it was read on: a reader's
+    * source is bound to a session only by analysis. */
   private[streaming] def drainAt(stream: DataFrame, checkpoint: String,
       mode: OutputMode = OutputMode.Append())(
       sink: (DataFrame, Long) => Unit): Unit =
-    withBatchSizedShuffle(stream.sparkSession) {
-      start(stream, checkpoint, mode, Trigger.AvailableNow())(sink)
-        .awaitTermination()
-    }
+    start(batchOn(batchSized(stream.sparkSession), stream), checkpoint, mode,
+      Trigger.AvailableNow())(sink).awaitTermination()
 
   /** Start `stream` as a foreachBatch query — the one place a streaming
     * query is started. Every sink is a function of (batch, batchId) over
     * a replayable source with a checkpointed offset log, so one primitive
-    * serves the drains and the long-running BPI service alike. The sink
-    * gets each batch on the stream's own session ([[batchOn]]). */
+    * serves the drains and the long-running BPI service alike. The query
+    * starts on the stream's own session (a drain's is [[batchSized]]'s,
+    * BPI's the caller's), registers with that session's `streams`, and
+    * the sink gets each batch on that session ([[batchOn]]). */
   private[graft] def start(stream: DataFrame, checkpoint: String,
       mode: OutputMode, trigger: Trigger)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
@@ -162,17 +167,20 @@ object MicroBatchPipeline {
       .start()
   }
 
-  /** A foreachBatch frame rebound to `spark`, the session that started
-    * the query. Spark hands the body a frame on the query's private clone
-    * of that session, and in Spark 4 every clone has its own artifact
-    * state, so the body's tasks load generated classes through a fresh
-    * executor class loader at every stream start. The codegen cache is
-    * keyed by class loader, so each new drain recompiled every class its
-    * body ran. On `spark` the jobs of every drain share one loader, so
-    * identical code hits the cache. The plan is the batch's analyzed one:
-    * a scan of the micro-batch's already planned RDD. */
-  private[graft] def batchOn(spark: SparkSession, batch: Dataset[Row]): DataFrame =
-    GraftColumnBridge.ofRows(spark, batch.queryExecution.analyzed)
+  /** `df`'s analyzed plan as a frame on `spark`: its jobs then run under
+    * `spark`'s conf and class loader. [[start]] rebinds each foreachBatch
+    * frame to the session that started the query. Spark hands the body a
+    * frame on the query's private clone of that session, and in Spark 4
+    * every clone has its own artifact state, so the body's tasks would
+    * load generated classes through a fresh executor class loader at
+    * every stream start. The codegen cache is keyed by class loader, so
+    * each new drain recompiled every class its body ran; on `spark` the
+    * jobs of every drain share one loader, so identical code hits the
+    * cache. The plan is the analyzed one: a micro-batch's is a scan of its
+    * already planned RDD, and a reader's source stays bound to the
+    * session it was read on. */
+  private[graft] def batchOn(spark: SparkSession, df: Dataset[Row]): DataFrame =
+    GraftColumnBridge.ofRows(spark, df.queryExecution.analyzed)
 
   /** [[drain]] whose micro-batch result `f(batch)` lands as the
     * overwrite-mode slice `b<batchId>` of a fresh session-scoped dir (a
@@ -187,35 +195,30 @@ object MicroBatchPipeline {
     stream.sparkSession.read.parquet(s"$out/b*")
   }
 
-  /** Micro-batch volumes are bounded by trigger cadence, not corpus size
-    * — run a bounded drain with shuffles sized to the batch (one shared
-    * policy for every streaming drain), restoring the session value
-    * after. */
-  private[graft] def withBatchSizedShuffle[A](spark: SparkSession)(body: => A): A = {
-    val policy = Seq(
-      // 8, not cores: these lifecycle stages move a few thousand rows each —
-      // measured at sf0.1, 4 and 32 partitions are both ~20-40% slower than
-      // 8 (scheduling overhead vs per-task startup), so 8 is the tuned value.
-      "spark.sql.shuffle.partitions" -> "8",
-      // AQE off for the same reason the partition count is fixed: micro-batch
-      // volumes are bounded by trigger admission, so there is nothing for AQE
-      // to adapt — but each AQE stage materialization is its own Spark job,
-      // and a warm serve was measured as ~21 jobs totalling 0.8 s of task
-      // time plus ~0.5 s of inter-job driver rounds (guide §7.3, planning
-      // time as the bottleneck). With the fixed 8-partition layout the same
-      // write runs as a handful of pipelined jobs. The session default (AQE
-      // on) is restored for everything corpus-sized.
-      "spark.sql.adaptive.enabled" -> "false")
-    // A key the caller never set is unset again, not set to its default:
-    // `conf.get` reads the default, and setting it back adds an entry.
-    val set = spark.conf.getAll
-    val prev = policy.map { case (k, _) => k -> set.get(k) }
-    policy.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  /** The batch-sized shuffle policy. Micro-batch volumes are bounded by
+    * trigger cadence, not corpus size, so bounded drains and the index
+    * lifecycle's appends, deletes, compactions and serves run with
+    * shuffles sized to the batch (one shared policy). */
+  private[graft] val BatchSized = Map(
+    // 8, not cores: these lifecycle stages move a few thousand rows each —
+    // measured at sf0.1, 4 and 32 partitions are both ~20-40% slower than
+    // 8 (scheduling overhead vs per-task startup), so 8 is the tuned value.
+    "spark.sql.shuffle.partitions" -> "8",
+    // AQE off for the same reason the partition count is fixed: micro-batch
+    // volumes are bounded by trigger admission, so there is nothing for AQE
+    // to adapt — but each AQE stage materialization is its own Spark job,
+    // and a warm serve was measured as ~21 jobs totalling 0.8 s of task
+    // time plus ~0.5 s of inter-job driver rounds (guide §7.3, planning
+    // time as the bottleneck). With the fixed 8-partition layout the same
+    // write runs as a handful of pipelined jobs. The caller's session
+    // keeps its AQE for everything corpus-sized.
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** `spark` under [[BatchSized]]: the memoized [[graft.Sessions.derived]]
+    * session the drains start on and the lifecycle state builds and
+    * serves build their inputs on. */
+  private[graft] def batchSized(spark: SparkSession): SparkSession =
+    graft.Sessions.derived(spark, BatchSized)
 
   /** Micro-batch flush to parquet via foreachBatch — the reference's
     * hourly "batch store" DAG without its data-loss race. The checkpoint

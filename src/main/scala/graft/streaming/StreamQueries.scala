@@ -377,22 +377,14 @@ object StreamQueries {
     * official record: the driver's oracle proves the provider switch is
     * result-identical on the heaviest stateful query (symmetric join
     * state), and the bench artifact carries a measured RocksDB timing
-    * next to the HDFS-backed twin. The provider is baked into the stream
-    * at start; the session value is restored afterwards. */
-  def streamStreamJoinRocksDbQuery(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // getAll: getOption reads a registered key's default, never None
-    val prev = s.conf.getAll.get(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // runToResult drains the stream before returning, so the provider
-    // conf can be restored here without racing the query.
-    try streamStreamJoinQuery(s, dir)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+    * next to the HDFS-backed twin. The provider is set on a
+    * [[graft.Sessions.derived]] session the stream is read and drained on,
+    * never on `s`; the result is rebound to `s`. */
+  def streamStreamJoinRocksDbQuery(s: SparkSession, dir: String): DataFrame =
+    MicroBatchPipeline.batchOn(s, streamStreamJoinQuery(graft.Sessions.derived(s,
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")),
+      dir))
 
   import graft.QuerySpec.{rowsOnly, withOracle}
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, IndexFiles, Similarity}
+import MicroBatchPipeline.batchSized
 
 /** Streaming near-duplicate dedup — the batch LSH tiers made incremental,
   * with FIRST-SEEN-WINS semantics: a record is dropped iff an LSH bucket
@@ -373,16 +374,14 @@ object StreamingDedup {
     * exact pair set on this corpus (the batch tier's pinned property),
     * so the output is exactly the cross-split exact-Jaccard pairs. */
   def streamTextServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.documents(spark, dir)
+    val docs = graft.Tables.documents(batchSized(spark), dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     // index built once per corpus (graft.StateCache); the QUERY STREAM —
     // the thing this query measures — drains per invocation
     val state = graft.StateCache.stateDir(dir, "txtidx/train",
         "graft_tserve_state") { state =>
       val sink = graft.TempDirs.scoped("graft_tserve_sink")
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(docs.filter(!isEval), state, sink).count()
-      }
+      appendBatch(docs.filter(!isEval), state, sink).count()
     }
     val out = graft.TempDirs.scoped("graft_tserve_out")
     val queries = graft.Tables.stream(spark, dir, "documents")
@@ -408,12 +407,10 @@ object StreamingDedup {
   def serveDeletedQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = textTrainDeletedState(spark, dir)
     val out = graft.TempDirs.scoped("graft_servedel_out")
-    val docs = graft.Tables.documents(spark, dir)
+    val docs = graft.Tables.documents(batchSized(spark), dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
-    MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
-        Dedup.JaccardThreshold, DefaultBucketCap)
-    }
+    serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
+      Dedup.JaccardThreshold, DefaultBucketCap)
     spark.read.parquet(s"$out/b0")
       .orderBy(col("query_doc"), col("match_doc"))
   }
@@ -427,13 +424,11 @@ object StreamingDedup {
     graft.StateCache.stateDir(dir, "txtidx/train_del5",
         "graft_servedel_state") { state =>
       val sink = graft.TempDirs.scoped("graft_servedel_sink")
-      val docs = graft.Tables.documents(spark, dir)
+      val docs = graft.Tables.documents(batchSized(spark), dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(docs.filter(!isEval), state, sink).count()
-        layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
-          .select(col("doc_id")), state)
-      }
+      appendBatch(docs.filter(!isEval), state, sink).count()
+      layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
+        .select(col("doc_id")), state)
     }
 
   /** The 2-append(train, id-ordered) + forget-%5 state shared by the
@@ -442,16 +437,14 @@ object StreamingDedup {
     graft.StateCache.stateDir(dir, "txtidx/train2_del5",
         "graft_serveasof_state") { state =>
       val sink = graft.TempDirs.scoped("graft_serveasof_sink")
-      val docs = graft.Tables.documents(spark, dir)
+      val docs = graft.Tables.documents(batchSized(spark), dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       val train = docs.filter(!isEval)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(train.filter(col("doc_id") <= cut), state, sink).count()
-        appendBatch(train.filter(col("doc_id") > cut), state, sink).count()
-        layout.delete(train.filter(col("doc_id") % 5 === 2)
-          .select(col("doc_id")), state)
-      }
+      appendBatch(train.filter(col("doc_id") <= cut), state, sink).count()
+      appendBatch(train.filter(col("doc_id") > cut), state, sink).count()
+      layout.delete(train.filter(col("doc_id") % 5 === 2)
+        .select(col("doc_id")), state)
     }
 
   /** Declared query — AS-OF snapshot serving on the text index, the LSH
@@ -471,12 +464,10 @@ object StreamingDedup {
   def serveAsOfQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = trainAsOfState(spark, dir)
     val out = graft.TempDirs.scoped("graft_serveasof_out")
-    val docs = graft.Tables.documents(spark, dir)
+    val docs = graft.Tables.documents(batchSized(spark), dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
-    MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
-        Dedup.JaccardThreshold, DefaultBucketCap, asOf = 0L)
-    }
+    serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
+      Dedup.JaccardThreshold, DefaultBucketCap, asOf = 0L)
     spark.read.parquet(s"$out/b0")
       .orderBy(col("query_doc"), col("match_doc"))
   }
@@ -496,15 +487,13 @@ object StreamingDedup {
     val state = graft.StateCache.stateDir(dir, "txtidx/full2_del5_compact",
         "graft_cstats_state") { state =>
       val sink = graft.TempDirs.scoped("graft_cstats_sink")
-      val docs = graft.Tables.documents(spark, dir)
+      val docs = graft.Tables.documents(batchSized(spark), dir)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(docs.filter(col("doc_id") <= cut), state, sink).count()
-        appendBatch(docs.filter(col("doc_id") > cut), state, sink).count()
-        layout.delete(docs.filter(col("doc_id") % 5 === 2)
-          .select(col("doc_id")), state)
-        layout.compact(spark, state, 2L)
-      }
+      appendBatch(docs.filter(col("doc_id") <= cut), state, sink).count()
+      appendBatch(docs.filter(col("doc_id") > cut), state, sink).count()
+      layout.delete(docs.filter(col("doc_id") % 5 === 2)
+        .select(col("doc_id")), state)
+      layout.compact(docs.sparkSession, state, 2L)
     }
     val nBandSlices = layout.slices(spark, state, Bands).size
     val nSetSlices = layout.slices(spark, state, Sets).size
@@ -543,18 +532,16 @@ object StreamingDedup {
       val state = s"$root/state"
       val sink = s"$root/sink"
       val out = s"$root/out"
-      val docs = graft.Tables.documents(spark, dir)
+      val docs = graft.Tables.documents(batchSized(spark), dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       val inBatch0 = substring(md5(col("doc_id").cast("string")), 2, 1) < "8"
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(docs.filter(!isEval), state, sink).count()
-        serveTextBatch(docs.filter(isEval && inBatch0), state, out, 0L,
-          Dedup.JaccardThreshold, DefaultBucketCap)
-        layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
-          .select(col("doc_id")), state)
-        serveTextBatch(docs.filter(isEval && !inBatch0), state, out, 1L,
-          Dedup.JaccardThreshold, DefaultBucketCap)
-      }
+      appendBatch(docs.filter(!isEval), state, sink).count()
+      serveTextBatch(docs.filter(isEval && inBatch0), state, out, 0L,
+        Dedup.JaccardThreshold, DefaultBucketCap)
+      layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
+        .select(col("doc_id")), state)
+      serveTextBatch(docs.filter(isEval && !inBatch0), state, out, 1L,
+        Dedup.JaccardThreshold, DefaultBucketCap)
     }
     val out = s"$root/out"
     spark.read.parquet(s"$out/b0").withColumn("served_batch", lit(0L))
@@ -577,27 +564,22 @@ object StreamingDedup {
     * cross-split text verbatim — a pointer resolving to a stale or
     * half-built dir diverges or fails loudly. */
   def serveCutoverQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.documents(spark, dir)
+    val docs = graft.Tables.documents(batchSized(spark), dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     val alias = graft.StateCache.stateDir(dir, "txtidx/cutover_alias",
         "graft_tcut_alias") { a =>
       val rebuilt = graft.StateCache.stateDir(dir, "txtidx/rebuilt_live",
           "graft_tcut_idx") { idx =>
         val sink = graft.TempDirs.scoped("graft_tcut_sink")
-        MicroBatchPipeline.withBatchSizedShuffle(spark) {
-          appendBatch(docs.filter(!isEval && col("doc_id") % 5 =!= 2), idx,
-            sink).count()
-          ()
-        }
+        appendBatch(docs.filter(!isEval && col("doc_id") % 5 =!= 2), idx,
+          sink).count()
+        ()
       }
       layout.cutover(spark, a, rebuilt)
     }
     val out = graft.TempDirs.scoped("graft_tcut_out")
-    MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      serveTextBatch(docs.filter(isEval), IndexFiles.resolveServing(alias),
-        out, 0L,
-        Dedup.JaccardThreshold, DefaultBucketCap)
-    }
+    serveTextBatch(docs.filter(isEval), IndexFiles.resolveServing(alias),
+      out, 0L, Dedup.JaccardThreshold, DefaultBucketCap)
     spark.read.parquet(s"$out/b0")
       .orderBy(col("query_doc"), col("match_doc"))
   }
@@ -718,16 +700,14 @@ object StreamingDedup {
         "graft_incdedup") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val docs = graft.Tables.documents(spark, dir)
+      val docs = graft.Tables.documents(batchSized(spark), dir)
       val top = docs.agg(max(col("doc_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendBatch(docs.filter(col("doc_id") <= cut1), state, out)
-        appendBatch(docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
-          state, out)
-        layout.compact(spark, state, 1)
-        appendBatch(docs.filter(col("doc_id") > cut2), state, out)
-      }
+      appendBatch(docs.filter(col("doc_id") <= cut1), state, out)
+      appendBatch(docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
+        state, out)
+      layout.compact(docs.sparkSession, state, 1)
+      appendBatch(docs.filter(col("doc_id") > cut2), state, out)
     }
     survivors(spark, s"$root/out").select(col("doc_id")).orderBy(col("doc_id"))
   }
@@ -751,20 +731,18 @@ object StreamingDedup {
         "graft_incededup") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = graft.Tables.embeddings(batchSized(spark), dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
-      MicroBatchPipeline.withBatchSizedShuffle(spark) {
-        appendEmbeddingBatch(emb.filter(col("vec_id") <= cut1), state, out,
-          bucketCap = bucketCap)
-        appendEmbeddingBatch(
-          emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), state, out,
-          bucketCap = bucketCap)
-        layout.compact(spark, state, 1)
-        appendEmbeddingBatch(emb.filter(col("vec_id") > cut2), state, out,
-          bucketCap = bucketCap)
-      }
+      appendEmbeddingBatch(emb.filter(col("vec_id") <= cut1), state, out,
+        bucketCap = bucketCap)
+      appendEmbeddingBatch(
+        emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), state, out,
+        bucketCap = bucketCap)
+      layout.compact(emb.sparkSession, state, 1)
+      appendEmbeddingBatch(emb.filter(col("vec_id") > cut2), state, out,
+        bucketCap = bucketCap)
     }
     survivors(spark, s"$root/out").select(col("vec_id")).orderBy(col("vec_id"))
   }

@@ -342,12 +342,11 @@ class MultimodalSpec extends SparkSpec {
     // side is fingerprinted fresh instead of read from state
     val state = Multimodal.mediaTrainDeletedState(spark, sf)
     val out = graft.TempDirs.scoped("graft_mmsdel_pin_out")
-    graft.streaming.MicroBatchPipeline.withBatchSizedShuffle(spark) {
-      graft.streaming.StreamingDedup.serveMediaBatch(
-        Multimodal.phashTableOf(
-          Tables.documents(spark, sf).filter(isEvalDoc)),
-        state, out, 0L)
-    }
+    graft.streaming.StreamingDedup.serveMediaBatch(
+      Multimodal.phashTableOf(Tables.documents(
+        graft.streaming.MicroBatchPipeline.batchSized(spark), sf)
+        .filter(isEvalDoc)),
+      state, out, 0L)
     val freshServe = spark.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
       .collect().map(_.toSeq).toSeq

@@ -136,12 +136,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a drain hands its body each batch on the stream's own session") {
-    val sessions = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.SparkSession]
-    MicroBatchPipeline.drain(Tables.stream(spark, sf, "documents"), "session") {
-      (b, _) => sessions += b.sparkSession
+    // the stream's own session is the memoized batch-sized one, so two
+    // drains hand their batches the same derived session
+    def batchSessions(name: String) = {
+      val sessions = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.SparkSession]
+      MicroBatchPipeline.drain(Tables.stream(spark, sf, "documents"), name) {
+        (b, _) => sessions += b.sparkSession
+      }
+      assert(sessions.nonEmpty)
+      sessions.toSeq
     }
-    assert(sessions.nonEmpty)
-    assert(sessions.forall(_ eq spark))
+    val sessions = batchSessions("session") ++ batchSessions("session_again")
+    assert(sessions.forall(_ eq MicroBatchPipeline.batchSized(spark)))
+    assert(!(sessions.head eq spark))
   }
 
   test("a drain leaves a fresh session's SQLConf as it found it") {

@@ -21,6 +21,15 @@ if [[ -n "$stray" ]]; then
   echo "$stray" >&2
   exit 1
 fi
+# Every conf override runs on a Sessions.derived session; no other file
+# writes a session's SQLConf or clones a session.
+confw="$(grep -rlnE 'conf\.(set|unset)\(|cloneSession\(' src/main \
+  | grep -vE '/(Sessions|GraftColumnBridge)\.scala$' || true)"
+if [[ -n "$confw" ]]; then
+  echo "SQLConf write or session clone outside Sessions.scala:" >&2
+  echo "$confw" >&2
+  exit 1
+fi
 
 if [[ "${1:-}" == "--fast" ]]; then
   echo "== fast mode: compile green, skipping test/verify =="
