@@ -33,28 +33,26 @@ object Prof {
     // (triggerExecution, queryPlanning, walCommit, addBatch, ...) so the
     // micro-batch ENGINE floor can be split into its components.
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // drains start on the batch-sized session, BPI on the caller's
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        progress.add(f"  stream ${e.id.toString.take(8)} STARTED at ${System.nanoTime() / 1e9}%.3f")
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        import scala.jdk.CollectionConverters._
-        val dur = p.durationMs.asScala.toSeq.sortBy(-_._2)
-          .map { case (k, v) => s"$k=$v" }.mkString(" ")
-        progress.add(s"  stream ${p.id.toString.take(8)} batch ${p.batchId} rows=${p.numInputRows} $dur")
-        p.stateOperators.foreach { so =>
-          progress.add(s"    state ${so.operatorName} rows=${so.numRowsTotal} " +
-            s"updated=${so.numRowsUpdated} updateMs=${so.allUpdatesTimeMs} " +
-            s"removeMs=${so.allRemovalsTimeMs} commitMs=${so.commitTimeMs}")
+    spark.streams.addListener(
+      new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit =
+          progress.add(f"  stream ${e.id.toString.take(8)} STARTED at ${System.nanoTime() / 1e9}%.3f")
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val p = e.progress
+          import scala.jdk.CollectionConverters._
+          val dur = p.durationMs.asScala.toSeq.sortBy(-_._2)
+            .map { case (k, v) => s"$k=$v" }.mkString(" ")
+          progress.add(s"  stream ${p.id.toString.take(8)} batch ${p.batchId} rows=${p.numInputRows} $dur")
+          p.stateOperators.foreach { so =>
+            progress.add(s"    state ${so.operatorName} rows=${so.numRowsTotal} " +
+              s"updated=${so.numRowsUpdated} updateMs=${so.allUpdatesTimeMs} " +
+              s"removeMs=${so.allRemovalsTimeMs} commitMs=${so.commitTimeMs}")
+          }
         }
-      }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        progress.add(f"  stream ${e.id.toString.take(8)} TERMINATED at ${System.nanoTime() / 1e9}%.3f")
-    }
-    Seq(spark, graft.streaming.MicroBatchPipeline.batchSized(spark))
-      .foreach(_.streams.addListener(listener))
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+          progress.add(f"  stream ${e.id.toString.take(8)} TERMINATED at ${System.nanoTime() / 1e9}%.3f")
+      })
     (1 to reps).foreach { r =>
       rows.clear()
       progress.clear()

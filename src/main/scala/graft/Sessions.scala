@@ -6,10 +6,7 @@ import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
   * Prof) run on, so a plan printed by Explain is the plan Bench times:
   * `local[cpus]` with `spark.sql.shuffle.partitions` = cpus, AQE on, UTC
   * session time (the NTZ event-time cast is exact only under UTC), no UI,
-  * WARN logging. `cpus` is `SPARK_GRAFT_CPUS`, else `defaultCpus`.
-  *
-  * [[derived]] is the one way the engine runs work under other SQLConf
-  * settings: never by writing the caller's conf. */
+  * WARN logging. `cpus` is `SPARK_GRAFT_CPUS`, else `defaultCpus`. */
 object Sessions {
   def local(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -37,7 +34,8 @@ object Sessions {
     * copies the caller's SQLConf, temp views and functions as they are
     * when the clone is made, and shares its SparkContext, cache manager
     * and catalog. The overrides are set on the clone once, when it is
-    * made.
+    * made. A streaming query started on the clone is reported to the
+    * caller's `streams` listeners as well as the clone's.
     *
     * Memoized: one clone per (caller, overrides), made again only when
     * the caller's conf has changed since, so a setting the caller makes
@@ -54,6 +52,7 @@ object Sessions {
       else base -> {
         val clone = GraftColumnBridge.cloneSession(spark)
         overrides.foreach { case (k, v) => clone.conf.set(k, v) }
+        GraftColumnBridge.reportStreamsTo(clone, spark)
         clone
       })._2
   }

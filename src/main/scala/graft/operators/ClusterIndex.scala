@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.MicroBatchPipeline
-import graft.streaming.MicroBatchPipeline.batchSized
+import graft.streaming.MicroBatchPipeline.{batchOn, batchSized}
 
 /** INCREMENTAL maintenance for the mutual-kNN semantic clusters
   * (Similarity.semanticClusters) — the `appendBatch` and `deleteIds`
@@ -203,11 +203,13 @@ object ClusterIndex {
   /** Append one batch of NEW vectors to the cluster state. Re-appending
     * an existing vec_id is refused loudly — the pair-accumulation
     * invariant (slice union == rebuild pair set) assumes ids arrive
-    * once; updates are delete-then-append territory, not silent merge. */
+    * once; updates are delete-then-append territory, not silent merge.
+    * Runs on [[MicroBatchPipeline.batchSized]] of the batch's session. */
   def appendBatch(batch0: DataFrame, state: String,
       bits: Option[Int] = None): Unit = {
-    val spark = batch0.sparkSession
-    val batch = batch0.select(col("vec_id"), col("embedding")).persist()
+    val batch = batchOn(batchSized(batch0.sparkSession), batch0)
+      .select(col("vec_id"), col("embedding")).persist()
+    val spark = batch.sparkSession
     val sliceId = layout.nextSliceId(spark, state)
 
     if (sliceId == 0L) {
@@ -390,11 +392,13 @@ object ClusterIndex {
     * Contract (pinned in ClusterIndexSpec): delete-then-cluster ==
     * cluster state built from only the remaining vectors. Deletes are
     * permanent — appendBatch refuses re-appends, so there is no
-    * resurrection ordering to maintain. */
+    * resurrection ordering to maintain. Runs on
+    * [[MicroBatchPipeline.batchSized]] of the ids' session. */
   def deleteIds(ids0: DataFrame, state: String): Unit = {
-    val spark = ids0.sparkSession
+    val ids = batchOn(batchSized(ids0.sparkSession), ids0)
+    val spark = ids.sparkSession
     val prevDead = deadAll(spark, state)
-    val dead = ids0.select(col("vec_id")).distinct()
+    val dead = ids.select(col("vec_id")).distinct()
       .join(prevDead, Seq("vec_id"), "left_anti")   // replayed delete: no-op ids
       .localCheckpoint(true)
     val sliceId = layout.nextSliceId(spark, state)
@@ -484,7 +488,7 @@ object ClusterIndex {
   def incrementalClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app3",
         "graft_incclusters_state") { state =>
-      val emb = graft.Tables.embeddings(batchSized(spark), dir)
+      val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
@@ -516,7 +520,7 @@ object ClusterIndex {
   private def deletedState(spark: SparkSession, dir: String): String =
     graft.StateCache.stateDir(dir, "clusters/app2_del7",
         "graft_delclusters_state") { state =>
-      val emb = graft.Tables.embeddings(batchSized(spark), dir)
+      val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val cut = top / 2
@@ -562,8 +566,7 @@ object ClusterIndex {
       // this verb widens from)
       val state = deletedState(spark, dir)
       val n = graft.Tables.embeddings(spark, dir).count()
-      rebucketIndex(batchSized(spark), state, wider,
-        Similarity.widenedBits(n, 2))
+      rebucketIndex(spark, state, wider, Similarity.widenedBits(n, 2))
     }
 
   /** Declared query — the CUTOVER lifecycle on the cluster index
@@ -595,7 +598,7 @@ object ClusterIndex {
   def asofClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app2_del5",
         "graft_asofclusters_state") { state =>
-      val emb = graft.Tables.embeddings(batchSized(spark), dir)
+      val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val cut = top / 2
@@ -673,12 +676,12 @@ object ClusterIndex {
   def compactedClustersQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = graft.StateCache.stateDir(dir, "clusters/app1_del7_compact",
         "graft_cptclusters_state") { state =>
-      val emb = graft.Tables.embeddings(batchSized(spark), dir)
+      val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       appendBatch(emb, state)                                       // op 0
       deleteIds(emb.filter(col("vec_id") % 7 === 3)
         .select(col("vec_id")), state)                              // op 1
-      compactOps(emb.sparkSession, state, 1L)
+      compactOps(spark, state, 1L)
     }
     clusters(spark, state)
   }

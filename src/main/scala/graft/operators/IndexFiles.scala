@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import graft.streaming.MicroBatchPipeline.{batchOn, batchSized}
 
 /** The on-disk layout of every persisted index ([[IvfIndex]], [[PqIndex]],
   * [[IvfPqIndex]], the binary codes in [[EmbeddingOps]], the
@@ -190,7 +191,6 @@ private[graft] object IndexFiles {
     val tmp = new org.apache.hadoop.fs.Path(base, s".c$upTo.tmp")
     // batch-sized shuffle: the merge must not fragment the compacted
     // slice into session-default-many part files.
-    import graft.streaming.MicroBatchPipeline.{batchOn, batchSized}
     write(batchOn(batchSized(spark), merged), tmp.toString)
     val dst = new org.apache.hadoop.fs.Path(base, s"c$upTo")
     fs.delete(dst, true)
@@ -291,10 +291,12 @@ private[graft] object IndexFiles {
       * unspecified `sliceId` kills exactly the state that exists NOW; an
       * explicit one replays idempotently (overwrite mode). Readers
       * anti-join the (usually tiny) tombstone set; [[compact]] folds it
-      * into the physical rows. Returns the slice id. */
+      * into the physical rows. Returns the slice id. Runs batch-sized,
+      * as every lifecycle verb does. */
     def delete(ids: DataFrame, dir: String, sliceId: Long = -1L): Long = {
       val id = sliceIdOr(ids.sparkSession, dir, sliceId)
-      ids.toDF(idCol).distinct().coalesce(1)
+      batchOn(batchSized(ids.sparkSession), ids)
+        .toDF(idCol).distinct().coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/$tombs/b$id")
       id
     }

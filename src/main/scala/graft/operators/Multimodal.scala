@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QuerySpec, Tables}
-import graft.streaming.MicroBatchPipeline.batchSized
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with
   * typed metadata, plus the decode / feature-extract / frame-sample
@@ -699,7 +698,7 @@ object Multimodal {
         "graft_incmm") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val hashes = phashTable(batchSized(s), dir)
+      val hashes = phashTable(s, dir)
       val top = hashes.agg(max(col("media_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
       graft.streaming.StreamingDedup.appendMediaBatch(
@@ -707,7 +706,7 @@ object Multimodal {
       graft.streaming.StreamingDedup.appendMediaBatch(
         hashes.filter(col("media_id") > cut1 && col("media_id") <= cut2),
         state, out)
-      graft.streaming.StreamingDedup.layout.compact(hashes.sparkSession, state, 1)
+      graft.streaming.StreamingDedup.layout.compact(s, state, 1)
       graft.streaming.StreamingDedup.appendMediaBatch(
         hashes.filter(col("media_id") > cut2), state, out)
     }
@@ -737,8 +736,8 @@ object Multimodal {
       val isEvalMedia =
         substring(md5(col("media_id").cast("string")), 1, 1) === "0"
       graft.streaming.StreamingDedup
-        .appendMediaBatch(phashTable(batchSized(s), dir).filter(!isEvalMedia),
-          state, sink)
+        .appendMediaBatch(phashTable(s, dir).filter(!isEvalMedia), state,
+          sink)
         .count()
       ()
     }
@@ -766,9 +765,9 @@ object Multimodal {
     val state = mediaTrainDeletedState(s, dir)
     val out = graft.TempDirs.scoped("graft_mmsdel_out")
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
+    val hashes = phashTable(s, dir)
     graft.streaming.StreamingDedup
-      .serveMediaBatch(phashTable(batchSized(s), dir).filter(isEval), state,
-        out, 0L)
+      .serveMediaBatch(hashes.filter(isEval), state, out, 0L)
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
   }
@@ -783,7 +782,7 @@ object Multimodal {
         "graft_mmsdel_state") { state =>
       val sink = graft.TempDirs.scoped("graft_mmsdel_sink")
       val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-      val hashes = phashTable(batchSized(s), dir)
+      val hashes = phashTable(s, dir)
       graft.streaming.StreamingDedup
         .appendMediaBatch(hashes.filter(!isEval), state, sink).count()
       graft.streaming.StreamingDedup.layout.delete(
@@ -802,7 +801,7 @@ object Multimodal {
     * mm_serve_deleted's cross-split text verbatim. */
   def mmServeCutoverQuery(s: SparkSession, dir: String): DataFrame = {
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-    val hashes = phashTable(batchSized(s), dir)
+    val hashes = phashTable(s, dir)
     val alias = graft.StateCache.stateDir(dir, "mmidx/cutover_alias",
         "graft_mmcut_alias") { a =>
       val rebuilt = graft.StateCache.stateDir(dir, "mmidx/rebuilt_live",
@@ -836,7 +835,7 @@ object Multimodal {
         "graft_mmsasof_state") { state =>
       val sink = graft.TempDirs.scoped("graft_mmsasof_sink")
       val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
-      val hashes = phashTable(batchSized(s), dir)
+      val hashes = phashTable(s, dir)
       val train = hashes.filter(!isEval)
       val cut = hashes.agg(max(col("media_id"))).head().getLong(0) / 2
       graft.streaming.StreamingDedup
@@ -852,9 +851,9 @@ object Multimodal {
     }
     val out = graft.TempDirs.scoped("graft_mmsasof_out")
     val isEval = substring(md5(col("media_id").cast("string")), 1, 1) === "0"
+    val hashes = phashTable(s, dir)
     graft.streaming.StreamingDedup
-      .serveMediaBatch(phashTable(batchSized(s), dir).filter(isEval), state,
-        out, 0L, asOf = 0L)
+      .serveMediaBatch(hashes.filter(isEval), state, out, 0L, asOf = 0L)
     s.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))
   }

@@ -134,13 +134,11 @@ object MicroBatchPipeline {
 
   /** [[drain]] against a caller-owned checkpoint: a later drain over the
     * same checkpoint resumes after the last committed batch (a restart),
-    * so only files that arrived since are processed. The stream's
-    * analyzed plan is rebound ([[batchOn]]) to [[batchSized]] of its
-    * session and started there ([[start]] with AvailableNow), so the
-    * query, its state and every batch the sink gets run under the
-    * batch-sized shuffle policy while the caller's SQLConf is never
-    * written. The source keeps the session it was read on: a reader's
-    * source is bound to a session only by analysis. */
+    * so only files that arrived since are processed. The stream is
+    * rebound ([[batchOn]]) to [[batchSized]] of its session and run to
+    * exhaustion there ([[start]] with AvailableNow): the query, its state
+    * and the sink's batches run under the batch-sized policy, and the
+    * caller's SQLConf is never written. */
   private[streaming] def drainAt(stream: DataFrame, checkpoint: String,
       mode: OutputMode = OutputMode.Append())(
       sink: (DataFrame, Long) => Unit): Unit =
@@ -167,18 +165,14 @@ object MicroBatchPipeline {
       .start()
   }
 
-  /** `df`'s analyzed plan as a frame on `spark`: its jobs then run under
+  /** `df`'s analyzed plan as a frame on `spark`, so its jobs run under
     * `spark`'s conf and class loader. [[start]] rebinds each foreachBatch
-    * frame to the session that started the query. Spark hands the body a
-    * frame on the query's private clone of that session, and in Spark 4
-    * every clone has its own artifact state, so the body's tasks would
-    * load generated classes through a fresh executor class loader at
-    * every stream start. The codegen cache is keyed by class loader, so
-    * each new drain recompiled every class its body ran; on `spark` the
-    * jobs of every drain share one loader, so identical code hits the
-    * cache. The plan is the analyzed one: a micro-batch's is a scan of its
-    * already planned RDD, and a reader's source stays bound to the
-    * session it was read on. */
+    * frame to the session that started the query: Spark hands the body a
+    * frame on the query's private clone, and each Spark 4 clone has its
+    * own executor class loader, which the codegen cache is keyed by, so
+    * every stream start recompiled every class its body ran. The plan is
+    * the analyzed one: a micro-batch's is a scan of its planned RDD, and
+    * a reader's source stays bound to the session it was read on. */
   private[graft] def batchOn(spark: SparkSession, df: Dataset[Row]): DataFrame =
     GraftColumnBridge.ofRows(spark, df.queryExecution.analyzed)
 
@@ -206,17 +200,15 @@ object MicroBatchPipeline {
     "spark.sql.shuffle.partitions" -> "8",
     // AQE off for the same reason the partition count is fixed: micro-batch
     // volumes are bounded by trigger admission, so there is nothing for AQE
-    // to adapt — but each AQE stage materialization is its own Spark job,
-    // and a warm serve was measured as ~21 jobs totalling 0.8 s of task
-    // time plus ~0.5 s of inter-job driver rounds (guide §7.3, planning
-    // time as the bottleneck). With the fixed 8-partition layout the same
-    // write runs as a handful of pipelined jobs. The caller's session
-    // keeps its AQE for everything corpus-sized.
+    // to adapt — but each AQE stage materialization is its own Spark job:
+    // a warm `stream_mm_serve` serve runs 7 jobs here, 15 with AQE on
+    // (sf0.01, local[4]). The caller keeps its AQE for corpus-sized work.
     "spark.sql.adaptive.enabled" -> "false")
 
   /** `spark` under [[BatchSized]]: the memoized [[graft.Sessions.derived]]
-    * session the drains start on and the lifecycle state builds and
-    * serves build their inputs on. */
+    * session the drains start on and the index lifecycle verbs (appends,
+    * deletes, compactions, serves) rebind their input to ([[batchOn]]),
+    * so callers never name it. `spark` itself when it already is one. */
   private[graft] def batchSized(spark: SparkSession): SparkSession =
     graft.Sessions.derived(spark, BatchSized)
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, IndexFiles, Similarity}
-import MicroBatchPipeline.batchSized
+import MicroBatchPipeline.{batchOn, batchSized}
 
 /** Streaming near-duplicate dedup — the batch LSH tiers made incremental,
   * with FIRST-SEEN-WINS semantics: a record is dropped iff an LSH bucket
@@ -169,14 +169,16 @@ object StreamingDedup {
       batchId)
 
   /** The batch-side append behind the three tiers: draw the slice id from
-    * the layout's clock (an explicit id replays), index the slice, return
-    * its survivors. */
+    * the layout's clock (an explicit id replays), index the slice on
+    * [[MicroBatchPipeline.batchSized]] of its session, return its
+    * survivors. */
   private def appendWith(slice: DataFrame, spec: LshDedupSpec,
       stateDir: String, outDir: String, bucketCap: Int,
       batchId: Long): DataFrame = {
     val spark = slice.sparkSession
     val id = layout.sliceIdOr(spark, stateDir, batchId)
-    processBatch(slice, id, spec, stateDir, outDir, bucketCap)
+    processBatch(batchOn(batchSized(spark), slice), id, spec, stateDir,
+      outDir, bucketCap)
     spark.read.parquet(s"$outDir/b$id")
   }
 
@@ -317,11 +319,13 @@ object StreamingDedup {
     * same [[LshDedupSpec]] the write path indexes with, so serve and
     * index cannot disagree on the candidate scheme; `score` renders the
     * emitted match strength (jaccard, hamming, cosine) from the two
-    * signatures. */
-  private[graft] def serveBatchWith(batch: DataFrame, spec: LshDedupSpec,
+    * signatures. The serve runs on [[MicroBatchPipeline.batchSized]] of
+    * the queries' session. */
+  private[graft] def serveBatchWith(queries: DataFrame, spec: LshDedupSpec,
       score: (Column, Column) => Column, scoreName: String,
       qName: String, mName: String, stateDir: String, outDir: String,
       batchId: Long, bucketCap: Int, asOf: Long = Long.MaxValue): Unit = {
+    val batch = batchOn(batchSized(queries.sparkSession), queries)
     val spark = batch.sparkSession
     val withSigs = batch.select(col(spec.idCol).as("q_id"),
         spec.sig.as("sig_q"))
@@ -374,7 +378,7 @@ object StreamingDedup {
     * exact pair set on this corpus (the batch tier's pinned property),
     * so the output is exactly the cross-split exact-Jaccard pairs. */
   def streamTextServeQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.documents(batchSized(spark), dir)
+    val docs = graft.Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     // index built once per corpus (graft.StateCache); the QUERY STREAM —
     // the thing this query measures — drains per invocation
@@ -407,7 +411,7 @@ object StreamingDedup {
   def serveDeletedQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = textTrainDeletedState(spark, dir)
     val out = graft.TempDirs.scoped("graft_servedel_out")
-    val docs = graft.Tables.documents(batchSized(spark), dir)
+    val docs = graft.Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
       Dedup.JaccardThreshold, DefaultBucketCap)
@@ -424,7 +428,7 @@ object StreamingDedup {
     graft.StateCache.stateDir(dir, "txtidx/train_del5",
         "graft_servedel_state") { state =>
       val sink = graft.TempDirs.scoped("graft_servedel_sink")
-      val docs = graft.Tables.documents(batchSized(spark), dir)
+      val docs = graft.Tables.documents(spark, dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       appendBatch(docs.filter(!isEval), state, sink).count()
       layout.delete(docs.filter(!isEval && col("doc_id") % 5 === 2)
@@ -437,7 +441,7 @@ object StreamingDedup {
     graft.StateCache.stateDir(dir, "txtidx/train2_del5",
         "graft_serveasof_state") { state =>
       val sink = graft.TempDirs.scoped("graft_serveasof_sink")
-      val docs = graft.Tables.documents(batchSized(spark), dir)
+      val docs = graft.Tables.documents(spark, dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       val train = docs.filter(!isEval)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
@@ -464,7 +468,7 @@ object StreamingDedup {
   def serveAsOfQuery(spark: SparkSession, dir: String): DataFrame = {
     val state = trainAsOfState(spark, dir)
     val out = graft.TempDirs.scoped("graft_serveasof_out")
-    val docs = graft.Tables.documents(batchSized(spark), dir)
+    val docs = graft.Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     serveTextBatch(docs.filter(isEval), state, out, batchId = 0L,
       Dedup.JaccardThreshold, DefaultBucketCap, asOf = 0L)
@@ -487,13 +491,13 @@ object StreamingDedup {
     val state = graft.StateCache.stateDir(dir, "txtidx/full2_del5_compact",
         "graft_cstats_state") { state =>
       val sink = graft.TempDirs.scoped("graft_cstats_sink")
-      val docs = graft.Tables.documents(batchSized(spark), dir)
+      val docs = graft.Tables.documents(spark, dir)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       appendBatch(docs.filter(col("doc_id") <= cut), state, sink).count()
       appendBatch(docs.filter(col("doc_id") > cut), state, sink).count()
       layout.delete(docs.filter(col("doc_id") % 5 === 2)
         .select(col("doc_id")), state)
-      layout.compact(docs.sparkSession, state, 2L)
+      layout.compact(spark, state, 2L)
     }
     val nBandSlices = layout.slices(spark, state, Bands).size
     val nSetSlices = layout.slices(spark, state, Sets).size
@@ -532,7 +536,7 @@ object StreamingDedup {
       val state = s"$root/state"
       val sink = s"$root/sink"
       val out = s"$root/out"
-      val docs = graft.Tables.documents(batchSized(spark), dir)
+      val docs = graft.Tables.documents(spark, dir)
       val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
       val inBatch0 = substring(md5(col("doc_id").cast("string")), 2, 1) < "8"
       appendBatch(docs.filter(!isEval), state, sink).count()
@@ -564,7 +568,7 @@ object StreamingDedup {
     * cross-split text verbatim — a pointer resolving to a stale or
     * half-built dir diverges or fails loudly. */
   def serveCutoverQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.documents(batchSized(spark), dir)
+    val docs = graft.Tables.documents(spark, dir)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
     val alias = graft.StateCache.stateDir(dir, "txtidx/cutover_alias",
         "graft_tcut_alias") { a =>
@@ -700,13 +704,13 @@ object StreamingDedup {
         "graft_incdedup") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val docs = graft.Tables.documents(batchSized(spark), dir)
+      val docs = graft.Tables.documents(spark, dir)
       val top = docs.agg(max(col("doc_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
       appendBatch(docs.filter(col("doc_id") <= cut1), state, out)
       appendBatch(docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
         state, out)
-      layout.compact(docs.sparkSession, state, 1)
+      layout.compact(spark, state, 1)
       appendBatch(docs.filter(col("doc_id") > cut2), state, out)
     }
     survivors(spark, s"$root/out").select(col("doc_id")).orderBy(col("doc_id"))
@@ -731,7 +735,7 @@ object StreamingDedup {
         "graft_incededup") { root =>
       val state = s"$root/state"
       val out = s"$root/out"
-      val emb = graft.Tables.embeddings(batchSized(spark), dir)
+      val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val top = emb.agg(max(col("vec_id"))).head().getLong(0)
       val (cut1, cut2) = (top / 3, 2 * top / 3)
@@ -740,7 +744,7 @@ object StreamingDedup {
       appendEmbeddingBatch(
         emb.filter(col("vec_id") > cut1 && col("vec_id") <= cut2), state, out,
         bucketCap = bucketCap)
-      layout.compact(emb.sparkSession, state, 1)
+      layout.compact(spark, state, 1)
       appendEmbeddingBatch(emb.filter(col("vec_id") > cut2), state, out,
         bucketCap = bucketCap)
     }

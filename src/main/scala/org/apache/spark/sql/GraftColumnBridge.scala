@@ -24,6 +24,18 @@ object GraftColumnBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Report every stream started on `from` to `to`'s listeners too: a
+    * session's listener bus passes on the events of the runs it saw start,
+    * so re-posting the start event through `to`'s manager enrolls the run. */
+  def reportStreamsTo(from: SparkSession, to: SparkSession): Unit =
+    from.streams.addListener(new streaming.StreamingQueryListener {
+      import streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        to.streams.asInstanceOf[classic.StreamingQueryManager].postListenerEvent(e)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    })
+
   /** Idempotently add a planner strategy to the session (the programmatic
     * twin of SparkSessionExtensions.injectPlannerStrategy). */
   def addStrategy(spark: SparkSession,

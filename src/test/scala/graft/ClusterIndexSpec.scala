@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{ClusterIndex, IndexFiles, Similarity}
-import graft.streaming.MicroBatchPipeline.batchSized
 
 /** Pins for the incremental semantic-cluster maintenance (VERDICT r11
   * ask #5): the append path must be ROW-IDENTICAL to the rebuild — that
@@ -25,7 +24,7 @@ class ClusterIndexSpec extends SparkSpec {
   test("frozen geometry: wider-built index equals the wider rebuild; " +
       "mismatched append bits are refused") {
     import spark.implicits._
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val cut = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
     val wide = Similarity.AnnBits + 2
@@ -57,8 +56,7 @@ class ClusterIndexSpec extends SparkSpec {
     * realistic shape; appending new members of ONE cluster must re-rank
     * and relabel only that cluster, leaving the other nine untouched. */
   test("an append into one cluster relabels only that cluster") {
-    val bs = batchSized(spark)
-    import bs.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(42)
     def unit(): Array[Float] = {
       val v = Array.fill(operators.Similarity.Dim)(rnd.nextGaussian().toFloat)
@@ -101,7 +99,7 @@ class ClusterIndexSpec extends SparkSpec {
 
   test("re-bucket: wider frozen geometry, tombstones carried, old state intact") {
     import spark.implicits._
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val n = emb.count()
     val narrow = Similarity.adaptiveBits(n)
@@ -114,7 +112,7 @@ class ClusterIndexSpec extends SparkSpec {
       emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), a)
     val before = ClusterIndex.clusters(spark, a)
       .collect().map(_.toString).toSeq
-    ClusterIndex.rebucketIndex(emb.sparkSession, a, b, wide)
+    ClusterIndex.rebucketIndex(spark, a, b, wide)
     // the source state is untouched — still serving as-of reads
     val after = ClusterIndex.clusters(spark, a)
       .collect().map(_.toString).toSeq
@@ -152,7 +150,7 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("delete-then-cluster equals a build from only the survivors") {
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val survivors = emb.filter(col("vec_id") % 7 =!= 3)
     // deleted path: append in two slices, then tombstone the subset
@@ -174,8 +172,7 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("deleting members of one cluster relabels only that cluster") {
-    val bs = batchSized(spark)
-    import bs.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     def unit(): Array[Float] = {
       val v = Array.fill(operators.Similarity.Dim)(rnd.nextGaussian().toFloat)
@@ -204,8 +201,7 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("a vector whose every candidate died becomes a live singleton") {
-    val bs = batchSized(spark)
-    import bs.implicits._
+    import spark.implicits._
     // two near-identical vectors: the pair set is exactly {(0,1)}
     val v = Array.fill(operators.Similarity.Dim)(0.1f)
     val corpus = Seq((0L, v), (1L, v.map(x => x + 0.001f)))
@@ -222,7 +218,7 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("as-of snapshot ignores the later append AND the later delete") {
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val top = emb.agg(max(col("vec_id"))).head().getLong(0)
     val cut = top / 2
@@ -247,7 +243,7 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("append AFTER delete composes: dead ids pair with nothing") {
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val top = emb.agg(max(col("vec_id"))).head().getLong(0)
     val cut = top / 2
@@ -273,7 +269,7 @@ class ClusterIndexSpec extends SparkSpec {
 
   test("compaction is result-invariant, composes with later appends, " +
       "and guards the as-of and re-append contracts") {
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val top = emb.agg(max(col("vec_id"))).head().getLong(0)
     val cut = top / 2
@@ -284,7 +280,7 @@ class ClusterIndexSpec extends SparkSpec {
         .select(col("vec_id")), state)
     val before = ClusterIndex.clusters(spark, state)
       .collect().map(_.toString).toSeq
-    ClusterIndex.compactOps(emb.sparkSession, state, 1L)
+    ClusterIndex.compactOps(spark, state, 1L)
     // bit-identical results; physically one c-slice per data subdir
     val after = ClusterIndex.clusters(spark, state)
       .collect().map(_.toString).toSeq
@@ -316,7 +312,7 @@ class ClusterIndexSpec extends SparkSpec {
 
   test("re-appending an existing vec_id is refused loudly") {
     val state = TempDirs.scoped("graft_incclusters_reappend")
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     ClusterIndex.appendBatch(emb.filter(col("vec_id") <= 10), state)
     val e = intercept[IllegalArgumentException](
@@ -326,13 +322,13 @@ class ClusterIndexSpec extends SparkSpec {
 
   test("cutover: atomic alias swap, half-built refusal, retire guards — " +
       "the IvfIndexSpec pins at this family's layout") {
-    val emb = Tables.embeddings(batchSized(spark), sf)
+    val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val stateA = TempDirs.scoped("graft_cl_cut_a")
     val stateB = TempDirs.scoped("graft_cl_cut_b")
     ClusterIndex.appendBatch(emb.filter(col("vec_id") <= 40), stateA)
     // B = the re-bucket remedy's output (a wider rebuild of A's live set)
-    ClusterIndex.rebucketIndex(emb.sparkSession, stateA, stateB,
+    ClusterIndex.rebucketIndex(spark, stateA, stateB,
       graft.operators.Similarity.widenedBits(41L, 2))
     val alias = TempDirs.scoped("graft_cl_cut_alias")
     intercept[Exception] { IndexFiles.resolveServing(alias) }

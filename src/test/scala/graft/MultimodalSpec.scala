@@ -343,9 +343,8 @@ class MultimodalSpec extends SparkSpec {
     val state = Multimodal.mediaTrainDeletedState(spark, sf)
     val out = graft.TempDirs.scoped("graft_mmsdel_pin_out")
     graft.streaming.StreamingDedup.serveMediaBatch(
-      Multimodal.phashTableOf(Tables.documents(
-        graft.streaming.MicroBatchPipeline.batchSized(spark), sf)
-        .filter(isEvalDoc)),
+      Multimodal.phashTableOf(
+        Tables.documents(spark, sf).filter(isEvalDoc)),
       state, out, 0L)
     val freshServe = spark.read.parquet(s"$out/b0")
       .orderBy(col("query_media"), col("match_media"))

@@ -8,6 +8,8 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.streaming.{MicroBatchPipeline, StreamingDedup}
 
 /** [[Sessions.derived]]: every conf override the engine makes runs on a
@@ -37,6 +39,29 @@ class SessionsSpec extends SparkSpec {
     assert(!(again eq d))
     assert(again.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
     assert(again.conf.get("spark.sql.shuffle.partitions") == "3")
+  }
+
+  test("a listener on the caller sees every batch of a drain") {
+    val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val rows = new java.util.concurrent.atomic.AtomicLong()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = runs.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (runs.contains(e.progress.runId)) rows.addAndGet(e.progress.numInputRows)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (runs.contains(e.runId)) ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      MicroBatchPipeline.drain(Tables.stream(spark, sf, "documents"), "seen") {
+        (b, _) => b.collect(); ()
+      }
+      // progress and termination reach the listener through the async bus
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.streams.removeListener(listener)
+    assert(runs.size == 1)
+    assert(rows.get == Tables.documents(spark, sf).count())
   }
 
   test("drain sinks and lifecycle state builds leave the caller's shuffle " +
