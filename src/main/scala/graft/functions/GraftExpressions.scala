@@ -3,18 +3,18 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for the operators whose inner loops Spark's
   * built-ins can't run fast: higher-order functions (`transform`,
   * `aggregate`, `zip_with`) are evaluated interpretively per element, which
   * turns the 128-permutation MinHash reduction and the N² cosine kernel
-  * into expression-tree walks. These expressions implement the same math
-  * with `doGenCode` emitting tight Java loops, so the hot paths stay inside
-  * whole-stage codegen. Interpreted `eval` mirrors the generated code
-  * exactly (same fold order => bit-identical results, which the DuckDB
-  * oracle relies on).
+  * into expression-tree walks. Each kernel's loop is one function in
+  * [[VectorKernels]] or [[ShingleUtil]]: interpreted `eval` calls it, and
+  * `doGenCode` emits one static call to it (its arrays passed as reference
+  * objects), so the hot paths stay inside whole-stage codegen and both
+  * paths give bit-identical results, which the DuckDB oracle relies on.
   */
 object GraftExpressions {
 
@@ -26,37 +26,12 @@ object GraftExpressions {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "cosine_similarity"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val xi = x.getFloat(i).toDouble
-        val yi = y.getFloat(i).toDouble
-        d += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-      }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      VectorKernels.cosineSimilarity(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val d = ctx.freshName("d")
-        val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $d = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double xi = (double) $a.getFloat($i);
-           |  double yi = (double) $b.getFloat($i);
-           |  $d += xi * yi; $na += xi * xi; $nb += yi * yi;
-           |}
-           |${ev.value} = $d / (Math.sqrt($na) * Math.sqrt($nb));
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = graft.functions.VectorKernels.cosineSimilarity($a, $b);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -64,75 +39,22 @@ object GraftExpressions {
   }
 
   /** LSH band-bucket hashes from an array of base shingle hashes: reduce
-    * each base hash into [0,p), apply `numPerm` affine permutations
+    * each base hash into [0,p), apply `as.length` affine permutations
     * keeping per-permutation minima, then fold each band of mins (+ band
-    * index) into one bucket hash. One generated loop nest per row. */
+    * index) into one bucket hash. p is [[VectorKernels.MinhashPrime]]. */
   case class MinhashBands(child: Expression, as: Array[Long], bs: Array[Long],
-      prime: Long, bands: Int) extends UnaryExpression {
-    private val numPerm = as.length
-    private val rowsPerBand = numPerm / bands
+      bands: Int) extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_bands"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val mins = Array.fill(numPerm)(Long.MaxValue)
-      var j = 0
-      while (j < n) {
-        val hm = java.lang.Math.floorMod(arr.getLong(j), prime)
-        var i = 0
-        while (i < numPerm) {
-          val v = (as(i) * hm + bs(i)) % prime
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-        j += 1
-      }
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var h = 1125899906842597L
-        var r = 0
-        while (r < rowsPerBand) { h = h * 31 + mins(b * rowsPerBand + r); r += 1 }
-        out(b) = h * 31 + b
-        b += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.minhashBands(input.asInstanceOf[ArrayData], as, bs, bands)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c => {
         val asRef = ctx.addReferenceObj("minhashAs", as, "long[]")
         val bsRef = ctx.addReferenceObj("minhashBs", bs, "long[]")
-        val mins = ctx.freshName("mins")
-        val out = ctx.freshName("out")
-        val j = ctx.freshName("j")
-        val i = ctx.freshName("i")
-        val b = ctx.freshName("b")
-        val r = ctx.freshName("r")
-        val hm = ctx.freshName("hm")
-        val h = ctx.freshName("h")
-        s"""
-           |long[] $mins = new long[$numPerm];
-           |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-           |for (int $j = 0; $j < $c.numElements(); $j++) {
-           |  long $hm = Math.floorMod($c.getLong($j), ${prime}L);
-           |  for (int $i = 0; $i < $numPerm; $i++) {
-           |    long v = ($asRef[$i] * $hm + $bsRef[$i]) % ${prime}L;
-           |    if (v < $mins[$i]) $mins[$i] = v;
-           |  }
-           |}
-           |long[] $out = new long[$bands];
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $h = 1125899906842597L;
-           |  for (int $r = 0; $r < $rowsPerBand; $r++) {
-           |    $h = $h * 31 + $mins[$b * $rowsPerBand + $r];
-           |  }
-           |  $out[$b] = $h * 31 + $b;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.minhashBands($c, $asRef, $bsRef, $bands);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -145,47 +67,12 @@ object GraftExpressions {
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val cnt = new Array[Int](64)
-      var j = 0
-      while (j < arr.numElements()) {
-        val h = arr.getLong(j)
-        var b = 0
-        while (b < 64) {
-          cnt(b) += (((h >>> b) & 1L).toInt * 2) - 1
-          b += 1
-        }
-        j += 1
-      }
-      var out = 0L
-      var b = 0
-      while (b < 64) { if (cnt(b) > 0) out |= (1L << b); b += 1 }
-      out
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.simhash64(input.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val cnt = ctx.freshName("cnt")
-        val j = ctx.freshName("j")
-        val b = ctx.freshName("b")
-        val h = ctx.freshName("h")
-        val out = ctx.freshName("res")
-        s"""
-           |int[] $cnt = new int[64];
-           |for (int $j = 0; $j < $c.numElements(); $j++) {
-           |  long $h = $c.getLong($j);
-           |  for (int $b = 0; $b < 64; $b++) {
-           |    $cnt[$b] += ((int) (($h >>> $b) & 1L)) * 2 - 1;
-           |  }
-           |}
-           |long $out = 0L;
-           |for (int $b = 0; $b < 64; $b++) {
-           |  if ($cnt[$b] > 0) $out |= (1L << $b);
-           |}
-           |${ev.value} = $out;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, c =>
+        s"${ev.value} = graft.functions.VectorKernels.simhash64($c);")
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -331,63 +218,22 @@ object GraftExpressions {
       copy(child = newChild)
   }
 
-  /** All L random-hyperplane LSH bucket signatures in one generated loop
-    * nest: bucket t has bit b set iff dot(v, plane[t*bits+b]) >= 0 (the
-    * table index rides along as the posexplode position downstream).
-    * Replaces tables x bits interpreted `aggregate` folds per row. */
+  /** All L random-hyperplane LSH bucket signatures in one pass: bucket t
+    * has bit b set iff dot(v, plane[t*bits+b]) >= 0 (the table index
+    * rides along as the posexplode position downstream). Replaces
+    * tables x bits interpreted `aggregate` folds per row. */
   case class HyperplaneBuckets(child: Expression, planes: Array[Array[Double]],
       tables: Int, bits: Int) extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "hyperplane_buckets"
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val dim = v.numElements()
-      val out = new Array[Long](tables)
-      var t = 0
-      while (t < tables) {
-        var bucket = 0L
-        var b = 0
-        while (b < bits) {
-          val p = planes(t * bits + b)
-          var d = 0.0
-          var i = 0
-          while (i < dim && i < p.length) { d += v.getFloat(i).toDouble * p(i); i += 1 }
-          if (d >= 0) bucket |= (1L << b)
-          b += 1
-        }
-        out(t) = bucket
-        t += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.hyperplaneBuckets(input.asInstanceOf[ArrayData], planes, tables, bits)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c => {
         val pRef = ctx.addReferenceObj("hyperplanes", planes, "double[][]")
-        val out = ctx.freshName("out")
-        val t = ctx.freshName("t")
-        val b = ctx.freshName("b")
-        val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        val p = ctx.freshName("p")
-        val bucket = ctx.freshName("bucket")
-        s"""
-           |long[] $out = new long[$tables];
-           |for (int $t = 0; $t < $tables; $t++) {
-           |  long $bucket = 0L;
-           |  for (int $b = 0; $b < $bits; $b++) {
-           |    double[] $p = $pRef[$t * $bits + $b];
-           |    double $d = 0.0;
-           |    for (int $i = 0; $i < $c.numElements() && $i < $p.length; $i++) {
-           |      $d += (double) $c.getFloat($i) * $p[$i];
-           |    }
-           |    if ($d >= 0) $bucket |= (1L << $b);
-           |  }
-           |  $out[$t] = $bucket;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.hyperplaneBuckets($c, $pRef, $tables, $bits);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -401,61 +247,20 @@ object GraftExpressions {
     * stay O(1) in K where the literal form grew O(K·dim) — the blowup
     * the scale rig measured (9.5 s at 10× for a 1.3M-cosine job) once
     * the adaptive cell ladders let K grow past the 16-cell anchor.
-    * Arithmetic is bit-identical to [[CosineSimilarity]] against an
-    * array<float> centroid literal: same fold order, same float→double
-    * widening, same unguarded final division. */
+    * Each score is [[CosineSimilarity]]'s fold against an array<float>
+    * centroid literal. */
   case class CentroidScores(child: Expression, cents: Array[Array[Float]])
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def prettyName: String = "centroid_scores"
 
-    override def nullSafeEval(input: Any): Any = {
-      val x = input.asInstanceOf[ArrayData]
-      val out = new Array[Double](cents.length)
-      var c = 0
-      while (c < cents.length) {
-        val cv = cents(c)
-        val n = math.min(x.numElements(), cv.length)
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xi = x.getFloat(i).toDouble
-          val yi = cv(i).toDouble
-          d += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-        }
-        out(c) = d / (math.sqrt(na) * math.sqrt(nb))
-        c += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.centroidScores(input.asInstanceOf[ArrayData], cents)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a => {
         val ct = ctx.addReferenceObj("centroids", cents, "float[][]")
-        val out = ctx.freshName("out")
-        val c = ctx.freshName("c")
-        val cv = ctx.freshName("cv")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val d = ctx.freshName("d")
-        val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        val xi = ctx.freshName("xi")
-        val yi = ctx.freshName("yi")
-        s"""
-           |double[] $out = new double[${cents.length}];
-           |for (int $c = 0; $c < ${cents.length}; $c++) {
-           |  float[] $cv = $ct[$c];
-           |  int $n = Math.min($a.numElements(), $cv.length);
-           |  double $d = 0.0; double $na = 0.0; double $nb = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $xi = (double) $a.getFloat($i);
-           |    double $yi = (double) $cv[$i];
-           |    $d += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-           |  }
-           |  $out[$c] = $d / (Math.sqrt($na) * Math.sqrt($nb));
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.centroidScores($a, $ct);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -468,72 +273,21 @@ object GraftExpressions {
     * explodes N·K scored rows through a shuffle just to keep the top
     * one; with the adaptive cell ladders (dedup K ∝ N) that is N² rows
     * — the scale rig measured it. Ordering semantics are the window's
-    * exactly (score DESC with NaN greatest, ties to the lower cell):
-    * `Double.compare` treats NaN as greater than everything and the
-    * strict `> 0` keeps the earlier cell on ties — pinned against the
-    * window form in KernelSpec, zero-norm rows included. */
+    * exactly (score DESC with NaN greatest, ties to the lower cell) —
+    * pinned against the window form in KernelSpec, zero-norm rows
+    * included. */
   case class CellAssign(child: Expression, cents: Array[Array[Float]])
       extends UnaryExpression {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "cell_assign"
 
-    override def nullSafeEval(input: Any): Any = {
-      val x = input.asInstanceOf[ArrayData]
-      var best = 0
-      var bestScore = Double.NaN
-      var c = 0
-      while (c < cents.length) {
-        val cv = cents(c)
-        val n = math.min(x.numElements(), cv.length)
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xi = x.getFloat(i).toDouble
-          val yi = cv(i).toDouble
-          d += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-        }
-        val sc = d / (math.sqrt(na) * math.sqrt(nb))
-        if (c == 0 || java.lang.Double.compare(sc, bestScore) > 0) {
-          best = c; bestScore = sc
-        }
-        c += 1
-      }
-      best
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.cellAssign(input.asInstanceOf[ArrayData], cents)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a => {
         val ct = ctx.addReferenceObj("centroids", cents, "float[][]")
-        val best = ctx.freshName("best")
-        val bestScore = ctx.freshName("bestScore")
-        val c = ctx.freshName("c")
-        val cv = ctx.freshName("cv")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val d = ctx.freshName("d")
-        val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        val xi = ctx.freshName("xi")
-        val yi = ctx.freshName("yi")
-        val sc = ctx.freshName("sc")
-        s"""
-           |int $best = 0;
-           |double $bestScore = Double.NaN;
-           |for (int $c = 0; $c < ${cents.length}; $c++) {
-           |  float[] $cv = $ct[$c];
-           |  int $n = Math.min($a.numElements(), $cv.length);
-           |  double $d = 0.0; double $na = 0.0; double $nb = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $xi = (double) $a.getFloat($i);
-           |    double $yi = (double) $cv[$i];
-           |    $d += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-           |  }
-           |  double $sc = $d / (Math.sqrt($na) * Math.sqrt($nb));
-           |  if ($c == 0 || java.lang.Double.compare($sc, $bestScore) > 0) {
-           |    $best = $c; $bestScore = $sc;
-           |  }
-           |}
-           |${ev.value} = $best;
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.cellAssign($a, $ct);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -547,86 +301,27 @@ object GraftExpressions {
     * leaf id `bases(ccell) + argmax` — so per-row cost is O(K₂·dim)
     * regardless of the total leaf count K = K₁·K₂ (the flat kernel's
     * O(K·dim) is exactly what the dedup tier's K ∝ N law cannot afford).
-    * Score arithmetic, NaN order and tie-break are [[CellAssign]]'s
-    * verbatim; global ids are (coarse, sub)-ordered, so the within-group
-    * lowest-sub tie winner is also the lowest global leaf id — the SQL
-    * replay's ROW_NUMBER (cs DESC, leaf ASC) picks the identical row. */
+    * The argmax is [[CellAssign]]'s; global ids are (coarse, sub)-ordered,
+    * so the within-group lowest-sub tie winner is also the lowest global
+    * leaf id — the SQL replay's ROW_NUMBER (cs DESC, leaf ASC) picks the
+    * identical row. A coarse cell that receives an assignment had >=1
+    * corpus row at train time, hence >=1 trained leaf; an empty group
+    * throws rather than mislabel (r15 ADVICE #3). */
   case class GroupCellAssign(left: Expression, right: Expression,
       groups: Array[Array[Array[Float]]], bases: Array[Int])
       extends BinaryExpression {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "group_cell_assign"
 
-    override def nullSafeEval(input: Any, cellIn: Any): Any = {
-      val x = input.asInstanceOf[ArrayData]
-      val cents = groups(cellIn.asInstanceOf[Int])
-      // Structural invariant: a coarse cell that receives an assignment had
-      // >=1 corpus row at train time, hence >=1 trained leaf. An EMPTY group
-      // would otherwise return bases(ccell)+0 == the NEXT group's first
-      // global leaf id — a silent cross-group mislabel — so fail loudly
-      // here if a future refactor ever breaks the invariant (r15 ADVICE #3).
-      if (cents.isEmpty) throw new IllegalStateException(
-        s"group_cell_assign: empty leaf group for coarse cell $cellIn")
-      var best = 0
-      var bestScore = Double.NaN
-      var c = 0
-      while (c < cents.length) {
-        val cv = cents(c)
-        val n = math.min(x.numElements(), cv.length)
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xi = x.getFloat(i).toDouble
-          val yi = cv(i).toDouble
-          d += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-        }
-        val sc = d / (math.sqrt(na) * math.sqrt(nb))
-        if (c == 0 || java.lang.Double.compare(sc, bestScore) > 0) {
-          best = c; bestScore = sc
-        }
-        c += 1
-      }
-      bases(cellIn.asInstanceOf[Int]) + best
-    }
+    override def nullSafeEval(input: Any, cellIn: Any): Any =
+      VectorKernels.groupCellAssign(
+        input.asInstanceOf[ArrayData], cellIn.asInstanceOf[Int], groups, bases)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, cellV) => {
         val gr = ctx.addReferenceObj("leafGroups", groups, "float[][][]")
         val bs = ctx.addReferenceObj("leafBases", bases, "int[]")
-        val cents = ctx.freshName("cents")
-        val best = ctx.freshName("best")
-        val bestScore = ctx.freshName("bestScore")
-        val c = ctx.freshName("c")
-        val cv = ctx.freshName("cv")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val d = ctx.freshName("d")
-        val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        val xi = ctx.freshName("xi")
-        val yi = ctx.freshName("yi")
-        val sc = ctx.freshName("sc")
-        s"""
-           |float[][] $cents = $gr[$cellV];
-           |if ($cents.length == 0) throw new IllegalStateException(
-           |  "group_cell_assign: empty leaf group for coarse cell " + $cellV);
-           |int $best = 0;
-           |double $bestScore = Double.NaN;
-           |for (int $c = 0; $c < $cents.length; $c++) {
-           |  float[] $cv = $cents[$c];
-           |  int $n = Math.min($a.numElements(), $cv.length);
-           |  double $d = 0.0; double $na = 0.0; double $nb = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $xi = (double) $a.getFloat($i);
-           |    double $yi = (double) $cv[$i];
-           |    $d += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-           |  }
-           |  double $sc = $d / (Math.sqrt($na) * Math.sqrt($nb));
-           |  if ($c == 0 || java.lang.Double.compare($sc, $bestScore) > 0) {
-           |    $best = $c; $bestScore = $sc;
-           |  }
-           |}
-           |${ev.value} = $bs[$cellV] + $best;
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.groupCellAssign($a, $cellV, $gr, $bs);"
       })
 
     override protected def withNewChildrenInternal(
@@ -639,92 +334,22 @@ object GraftExpressions {
     * nearest (L2) codebook centroid — the array<int> of PQ codes that
     * compresses a d-dim float vector to m small ints. `codebooks` is the
     * flattened [m*ks][subDim] table (subspace-major). Ties break to the
-    * lowest centroid index; interpreted eval mirrors the generated loop
-    * exactly, so codes are engine-reproducible for a fixed codebook.
-    * This is the corpus-side hot path of [[graft.operators.Similarity]]'s
-    * ADC scan: one codegen'd pass over 100 TB of vectors, after which
-    * queries only touch the 16-byte codes. */
+    * lowest centroid index, so codes are engine-reproducible for a fixed
+    * codebook. This is the corpus-side hot path of
+    * [[graft.operators.Similarity]]'s ADC scan: one codegen'd pass over
+    * 100 TB of vectors, after which queries only touch the 16-byte codes. */
   case class PqEncode(child: Expression, codebooks: Array[Array[Double]],
       m: Int, ks: Int) extends UnaryExpression {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "pq_encode"
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val dim = v.numElements()
-      var nrm = 0.0
-      var i = 0
-      while (i < dim) { val x = v.getFloat(i).toDouble; nrm += x * x; i += 1 }
-      nrm = math.sqrt(nrm)
-      if (nrm == 0.0) nrm = 1.0
-      val subDim = if (m == 0) 0 else dim / m
-      val out = new Array[Int](m)
-      var s = 0
-      while (s < m) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var j = 0
-        while (j < ks) {
-          val cb = codebooks(s * ks + j)
-          var d = 0.0
-          var k = 0
-          while (k < subDim && k < cb.length) {
-            val diff = v.getFloat(s * subDim + k).toDouble / nrm - cb(k)
-            d += diff * diff
-            k += 1
-          }
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        out(s) = best
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.pqEncode(input.asInstanceOf[ArrayData], codebooks, m, ks)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c => {
         val cbRef = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][]")
-        val dim = ctx.freshName("dim")
-        val nrm = ctx.freshName("nrm")
-        val subDim = ctx.freshName("subDim")
-        val out = ctx.freshName("out")
-        val s = ctx.freshName("s")
-        val j = ctx.freshName("j")
-        val k = ctx.freshName("k")
-        val i = ctx.freshName("i")
-        val cb = ctx.freshName("cb")
-        val d = ctx.freshName("d")
-        val diff = ctx.freshName("diff")
-        val best = ctx.freshName("best")
-        val bestD = ctx.freshName("bestD")
-        s"""
-           |int $dim = $c.numElements();
-           |double $nrm = 0.0;
-           |for (int $i = 0; $i < $dim; $i++) {
-           |  double x = (double) $c.getFloat($i);
-           |  $nrm += x * x;
-           |}
-           |$nrm = Math.sqrt($nrm);
-           |if ($nrm == 0.0) $nrm = 1.0;
-           |int $subDim = $m == 0 ? 0 : $dim / $m;
-           |int[] $out = new int[$m];
-           |for (int $s = 0; $s < $m; $s++) {
-           |  int $best = 0;
-           |  double $bestD = Double.MAX_VALUE;
-           |  for (int $j = 0; $j < $ks; $j++) {
-           |    double[] $cb = $cbRef[$s * $ks + $j];
-           |    double $d = 0.0;
-           |    for (int $k = 0; $k < $subDim && $k < $cb.length; $k++) {
-           |      double $diff = (double) $c.getFloat($s * $subDim + $k) / $nrm - $cb[$k];
-           |      $d += $diff * $diff;
-           |    }
-           |    if ($d < $bestD) { $bestD = $d; $best = $j; }
-           |  }
-           |  $out[$s] = $best;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.pqEncode($c, $cbRef, $m, $ks);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -747,90 +372,16 @@ object GraftExpressions {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "pq_encode_residual"
 
-    override def nullSafeEval(input: Any, cellIn: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val cell = cellIn.asInstanceOf[Int]
-      val dim = v.numElements()
-      var nrm = 0.0
-      var i = 0
-      while (i < dim) { val x = v.getFloat(i).toDouble; nrm += x * x; i += 1 }
-      nrm = math.sqrt(nrm)
-      if (nrm == 0.0) nrm = 1.0
-      val cent = centroids(cell)
-      val subDim = if (m == 0) 0 else dim / m
-      val out = new Array[Int](m)
-      var s = 0
-      while (s < m) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var j = 0
-        while (j < ks) {
-          val cb = codebooks(s * ks + j)
-          var d = 0.0
-          var k = 0
-          while (k < subDim && k < cb.length) {
-            val p = s * subDim + k
-            val diff = v.getFloat(p).toDouble / nrm - cent(p) - cb(k)
-            d += diff * diff
-            k += 1
-          }
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        out(s) = best
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any, cellIn: Any): Any =
+      VectorKernels.pqEncodeResidual(input.asInstanceOf[ArrayData],
+        cellIn.asInstanceOf[Int], centroids, codebooks, m, ks)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (c, cellV) => {
         val cbRef = ctx.addReferenceObj("pqResCodebooks", codebooks, "double[][]")
         val ctRef = ctx.addReferenceObj("pqResCentroids", centroids, "double[][]")
-        val dim = ctx.freshName("dim")
-        val nrm = ctx.freshName("nrm")
-        val subDim = ctx.freshName("subDim")
-        val cent = ctx.freshName("cent")
-        val out = ctx.freshName("out")
-        val s = ctx.freshName("s")
-        val j = ctx.freshName("j")
-        val k = ctx.freshName("k")
-        val p = ctx.freshName("p")
-        val i = ctx.freshName("i")
-        val cb = ctx.freshName("cb")
-        val d = ctx.freshName("d")
-        val diff = ctx.freshName("diff")
-        val best = ctx.freshName("best")
-        val bestD = ctx.freshName("bestD")
-        s"""
-           |int $dim = $c.numElements();
-           |double $nrm = 0.0;
-           |for (int $i = 0; $i < $dim; $i++) {
-           |  double x = (double) $c.getFloat($i);
-           |  $nrm += x * x;
-           |}
-           |$nrm = Math.sqrt($nrm);
-           |if ($nrm == 0.0) $nrm = 1.0;
-           |double[] $cent = $ctRef[$cellV];
-           |int $subDim = $m == 0 ? 0 : $dim / $m;
-           |int[] $out = new int[$m];
-           |for (int $s = 0; $s < $m; $s++) {
-           |  int $best = 0;
-           |  double $bestD = Double.MAX_VALUE;
-           |  for (int $j = 0; $j < $ks; $j++) {
-           |    double[] $cb = $cbRef[$s * $ks + $j];
-           |    double $d = 0.0;
-           |    for (int $k = 0; $k < $subDim && $k < $cb.length; $k++) {
-           |      int $p = $s * $subDim + $k;
-           |      double $diff = (double) $c.getFloat($p) / $nrm - $cent[$p] - $cb[$k];
-           |      $d += $diff * $diff;
-           |    }
-           |    if ($d < $bestD) { $bestD = $d; $best = $j; }
-           |  }
-           |  $out[$s] = $best;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.pqEncodeResidual(" +
+          s"$c, $cellV, $ctRef, $cbRef, $m, $ks);"
       })
 
     override protected def withNewChildrenInternal(newLeft: Expression,
@@ -912,48 +463,14 @@ object GraftExpressions {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def prettyName: String = "pca_project"
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val dim = math.min(v.numElements(), mean.length)
-      val out = new Array[Double](basis.length)
-      var c = 0
-      while (c < basis.length) {
-        val b = basis(c)
-        var acc = 0.0
-        var i = 0
-        while (i < dim && i < b.length) {
-          acc += (v.getFloat(i).toDouble - mean(i)) * b(i)
-          i += 1
-        }
-        out(c) = acc
-        c += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.pcaProject(input.asInstanceOf[ArrayData], mean, basis)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, v => {
         val mRef = ctx.addReferenceObj("pcaMean", mean, "double[]")
         val bRef = ctx.addReferenceObj("pcaBasis", basis, "double[][]")
-        val out = ctx.freshName("out")
-        val c = ctx.freshName("c")
-        val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        val b = ctx.freshName("b")
-        val dim = ctx.freshName("dim")
-        s"""
-           |int $dim = Math.min($v.numElements(), $mRef.length);
-           |double[] $out = new double[$bRef.length];
-           |for (int $c = 0; $c < $bRef.length; $c++) {
-           |  double[] $b = $bRef[$c];
-           |  double $acc = 0.0;
-           |  for (int $i = 0; $i < $dim && $i < $b.length; $i++) {
-           |    $acc += ((double) $v.getFloat($i) - $mRef[$i]) * $b[$i];
-           |  }
-           |  $out[$c] = $acc;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.pcaProject($v, $mRef, $bRef);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -968,35 +485,13 @@ object GraftExpressions {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "centered_norm_sq"
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val dim = math.min(v.numElements(), mean.length)
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        val x = v.getFloat(i).toDouble - mean(i)
-        acc += x * x
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(input: Any): Any =
+      VectorKernels.centeredNormSq(input.asInstanceOf[ArrayData], mean)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, v => {
         val mRef = ctx.addReferenceObj("pcaMean", mean, "double[]")
-        val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        val x = ctx.freshName("x")
-        val dim = ctx.freshName("dim")
-        s"""
-           |int $dim = Math.min($v.numElements(), $mRef.length);
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $dim; $i++) {
-           |  double $x = (double) $v.getFloat($i) - $mRef[$i];
-           |  $acc += $x * $x;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
+        s"${ev.value} = graft.functions.VectorKernels.centeredNormSq($v, $mRef);"
       })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1014,8 +509,8 @@ object GraftExpressions {
     column(CenteredNormSq(expression(v), mean))
 
   def minhashBands(baseHashes: Column, as: Array[Long], bs: Array[Long],
-      prime: Long, bands: Int): Column =
-    column(MinhashBands(expression(baseHashes), as, bs, prime, bands))
+      bands: Int): Column =
+    column(MinhashBands(expression(baseHashes), as, bs, bands))
 
   def simhash64Fast(baseHashes: Column): Column =
     column(SimHash64(expression(baseHashes)))

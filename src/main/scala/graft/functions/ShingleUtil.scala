@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass tokenize+hash kernels shared by the interpreted `eval` and
-  * the generated code of [[GraftExpressions.TokenHashes64]] /
-  * [[GraftExpressions.ShingleHashes64]] (top-level object => static
+  * the generated code of the text expressions in [[GraftExpressions]]
+  * (`TokenHashes64` through `WordpieceCounts`; top-level object => static
   * forwarders, so generated Java calls `ShingleUtil.tokenHashes(...)`
-  * directly).
+  * directly). [[VectorKernels]] does the same for the vector kernels.
   *
   * Token hashing is bit-identical to Spark's `xxhash64(token)` (XXH64 over
   * the token's UTF-8 bytes, seed 42), and the splitter mirrors

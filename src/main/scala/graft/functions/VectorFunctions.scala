@@ -28,10 +28,6 @@ object VectorFunctions {
     * keep this grouping when precomputing norms, or bits drift. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine from a precomputed dot and norms (same grouping as above). */
-  def cosineFromParts(dotAb: Column, normA: Column, normB: Column): Column =
-    dotAb / (normA * normB)
-
   /** Sign-bit signature against a fixed set of hyperplanes (random-
     * hyperplane LSH): bit i set iff dot(v, plane_i) >= 0. */
   def hyperplaneSignature(v: Column, planes: Seq[Array[Double]]): Column =

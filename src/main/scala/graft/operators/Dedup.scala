@@ -390,18 +390,13 @@ object Dedup {
 
   val NumPerm = 128
   val Bands = 32
-  val RowsPerBand: Int = NumPerm / Bands
 
-  /** Mersenne prime 2^31-1 for Carter-Wegman universal hashing: products
-    * a*h stay under 2^62, so no Long-overflow, and the modulus keeps the
-    * family min-wise independent enough for LSH. */
-  val MinhashPrime = 2147483647L
-
-  /** Fixed-seed affine permutation constants in [1, p). The signature +
+  /** Fixed-seed affine permutation constants in [1, p), p =
+    * [[graft.functions.VectorKernels.MinhashPrime]]. The signature +
     * band reduction itself is the custom codegen'd Catalyst expression
     * GraftExpressions.MinhashBands — higher-order functions would evaluate
     * the 128-permutation inner loop interpretively per element. */
-  private val (permAs, permBs): (Array[Long], Array[Long]) = {
+  private[graft] val (permAs, permBs): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(42)
     def c() = (rnd.nextInt(Int.MaxValue - 1) + 1).toLong
     (Array.fill(NumPerm)(c()), Array.fill(NumPerm)(c()))
@@ -420,8 +415,7 @@ object Dedup {
   private[graft] def shingleSet(text: Column): Column =
     graft.functions.GraftExpressions.shingleHashes64(text, ShingleSize)
   private[graft] def bandBuckets(hv: Column): Column =
-    graft.functions.GraftExpressions.minhashBands(
-      hv, permAs, permBs, MinhashPrime, Bands)
+    graft.functions.GraftExpressions.minhashBands(hv, permAs, permBs, Bands)
   private[graft] def jaccardOf(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("long")
     inter.cast("double") / (size(a) + size(b) - inter)

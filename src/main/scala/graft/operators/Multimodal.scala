@@ -29,7 +29,6 @@ object Multimodal {
       mime: String, source: String)
 
   val kinds = Seq("image", "audio", "video")
-  val mimes = Map("image" -> "image/jpeg", "audio" -> "audio/wav", "video" -> "video/mp4")
 
   /** Synthesize the media table from documents: the text bytes stand in
     * for encoded media; kind/mime cycle deterministically. */

@@ -37,7 +37,7 @@ object Similarity {
 
   /** The codegen'd cosine kernel (GraftExpressions.CosineSimilarity):
     * same fold order and dot/(na*nb) grouping as VectorFunctions.cosine,
-    * but emitted as a tight Java loop — the N x |queries| and candidate
+    * but one static call per row — the N x |queries| and candidate
     * kernels below run inside whole-stage codegen instead of walking an
     * interpreted higher-order-function tree per element. */
   private[operators] def cos(a: Column, b: Column): Column =

@@ -41,12 +41,6 @@ object Expectations {
   def expectNotNull(column: String): Expectation =
     Expectation(s"$column not null", col(column).isNotNull)
 
-  def expectOneOf(column: String, values: Seq[String]): Expectation =
-    Expectation(s"$column in ${values.mkString("{", ",", "}")}", col(column).isin(values: _*))
-
-  def expectNonNegative(column: String): Expectation =
-    Expectation(s"$column >= 0", col(column).isNull || col(column) >= 0)
-
   /** Schema-level dtype assertion (the reference's is_float_dtype /
     * is_string_dtype, bpi_crawler.py:147-159) — free driver-side check. */
   def expectType(df: DataFrame, column: String, dt: DataType): Option[Violation] = {

@@ -35,14 +35,4 @@ object GraftColumnBridge {
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     })
-
-  /** Idempotently add a planner strategy to the session (the programmatic
-    * twin of SparkSessionExtensions.injectPlannerStrategy). */
-  def addStrategy(spark: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(strategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ strategy
-  }
 }

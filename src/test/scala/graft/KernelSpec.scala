@@ -273,6 +273,118 @@ class KernelSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  /** Rows read through an RDD scan: the optimizer folds a projection over
+    * local rows (`Seq.toDF`) into a LocalRelation with interpreted eval, so
+    * only a frame like this one runs a kernel's generated code. */
+  private def scanned[T <: Product : scala.reflect.ClassTag :
+      scala.reflect.runtime.universe.TypeTag](
+      rows: Seq[T], names: String*): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2)).toDF(names: _*)
+
+  private def literal(v: Any, t: org.apache.spark.sql.types.DataType) =
+    org.apache.spark.sql.catalyst.expressions.Literal.create(v, t)
+
+  private val hashRows: Seq[Seq[Long]] = {
+    val rnd = new scala.util.Random(29)
+    Seq.fill(40)(Seq.fill(rnd.nextInt(30) + 1)(rnd.nextLong())) ++
+      Seq(Seq.empty[Long], Seq.fill(5)(0L), Seq(Long.MinValue, -1L, Long.MaxValue))
+  }
+
+  test("MinhashBands equals the affine-permutation minima and band fold") {
+    import graft.operators.Dedup
+    import graft.functions.VectorKernels.MinhashPrime
+    def reference(hs: Seq[Long]): Seq[Long] = {
+      val mins = Dedup.permAs.indices.map { i =>
+        (Long.MaxValue +: hs.map(h => (Dedup.permAs(i) *
+          java.lang.Math.floorMod(h, MinhashPrime) + Dedup.permBs(i)) % MinhashPrime)).min
+      }
+      val r = mins.length / Dedup.Bands
+      (0 until Dedup.Bands).map(b =>
+        mins.slice(b * r, b * r + r).foldLeft(1125899906842597L)(_ * 31 + _) * 31 + b)
+    }
+    val df = scanned(hashRows.zipWithIndex.map { case (h, i) => (i, h) }, "id", "h")
+      .select(col("id"), Dedup.bandBuckets(col("h")).as("bands"))
+    val got = df.collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    hashRows.zipWithIndex.foreach { case (hs, i) =>
+      val want = reference(hs)
+      assert(got(i) == want, s"codegen, row $i")
+      val ev = GraftExpressions.MinhashBands(
+        literal(hs.toArray, org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType, containsNull = false)),
+        Dedup.permAs, Dedup.permBs, Dedup.Bands).eval(null)
+      assert(ev.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq == want, s"eval, row $i")
+    }
+    // the kernel projection runs inside whole-stage codegen
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    assert(flattenPlan(df.queryExecution.executedPlan).exists {
+      case w: WholeStageCodegenExec =>
+        w.child.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[GraftExpressions.MinhashBands])))
+      case _ => false
+    }, df.queryExecution.executedPlan.treeString)
+  }
+
+  test("SimHash64 equals the per-bit sign count") {
+    def reference(hs: Seq[Long]): Long = (0 until 64).foldLeft(0L) { (out, b) =>
+      val ones = hs.count(h => ((h >>> b) & 1L) == 1L)
+      if (ones > hs.size - ones) out | (1L << b) else out
+    }
+    val got = scanned(hashRows.zipWithIndex.map { case (h, i) => (i, h) }, "id", "h")
+      .select(col("id"), GraftExpressions.simhash64Fast(col("h")))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    hashRows.zipWithIndex.foreach { case (hs, i) =>
+      val want = reference(hs)
+      assert(got(i) == want, s"codegen, row $i")
+      val ev = GraftExpressions.SimHash64(literal(hs.toArray,
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType, containsNull = false))).eval(null)
+      assert(ev == want, s"eval, row $i")
+    }
+  }
+
+  test("PqEncodeResidual: codes match a Scala re-implementation") {
+    val rnd = new scala.util.Random(31)
+    val dim = 16
+    val (m, ks, k) = (4, 5, 3)
+    val subDim = dim / m
+    val cents = graft.operators.Similarity.l2NormalizedCentroids(
+      Seq.fill(k)(Array.fill(dim)(rnd.nextFloat() - 0.5f)))
+    val cbs = Array.fill(m * ks)(Array.fill(subDim)((rnd.nextDouble() - 0.5) / 4))
+    val vecs = (0 until 60).map(_ => Array.fill(dim)((rnd.nextFloat() - 0.5f) * 3f)) ++
+      Seq(Array.fill(dim)(0.0f), Array.empty[Float]) // zero-norm, empty
+    def reference(v: Array[Float], cell: Int): Seq[Int] = {
+      val x = v.map(_.toDouble)
+      val n0 = math.sqrt(x.map(a => a * a).sum)
+      val nrm = if (n0 == 0) 1.0 else n0
+      val sd = x.length / m
+      (0 until m).map { s =>
+        (0 until ks).minBy { j =>
+          (0 until sd).map { q =>
+            val p = s * sd + q
+            val d = x(p) / nrm - cents(cell)(p) - cbs(s * ks + j)(q); d * d
+          }.sum
+        }
+      }
+    }
+    val rows = vecs.zipWithIndex.map { case (v, i) => (i, v.toSeq, i % k) }
+    val got = scanned(rows, "id", "v", "cell")
+      .select(col("id"), GraftExpressions.pqEncodeResidual(
+        col("v").cast("array<float>"), col("cell"), cents, cbs, m, ks))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Int](1)).toMap
+    rows.foreach { case (i, v, cell) =>
+      val want = reference(v.toArray, cell)
+      assert(got(i) == want, s"codegen, row $i")
+      val ev = GraftExpressions.PqEncodeResidual(
+        literal(v.toArray, org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType, containsNull = false)),
+        literal(cell, org.apache.spark.sql.types.IntegerType),
+        cents, cbs, m, ks).eval(null)
+      assert(ev.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toIntArray().toSeq == want, s"eval, row $i")
+    }
+  }
+
   test("all custom expressions are callable from SQL text") {
     GraftExpressions.register(spark)
     Seq("a b c", "").toDF("t").createOrReplaceTempView("kernel_sql_v")

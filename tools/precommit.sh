@@ -30,6 +30,15 @@ if [[ -n "$confw" ]]; then
   echo "$confw" >&2
   exit 1
 fi
+# Each kernel's loop is one Scala function (VectorKernels, ShingleUtil)
+# that eval and the generated code both call; a `for (` in
+# GraftExpressions is a hand-written loop in generated Java.
+loops="$(grep -c 'for (' src/main/scala/graft/functions/GraftExpressions.scala || true)"
+if [[ "$loops" != "0" ]]; then
+  echo "hand-written generated-code loop in GraftExpressions.scala ($loops lines):" >&2
+  grep -n 'for (' src/main/scala/graft/functions/GraftExpressions.scala >&2
+  exit 1
+fi
 
 if [[ "${1:-}" == "--fast" ]]; then
   echo "== fast mode: compile green, skipping test/verify =="
